@@ -1,6 +1,7 @@
 package graft.mwas
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.functions.{col, count, count_if, lit}
 
 import graft.sources.CsvIo
 
@@ -57,9 +58,10 @@ object MwasCli {
     if (!flags.contains("--no-combined")) {
       Pipeline.writeCombined(out, s"$outDir/combined")
     }
-    val n = out.count()
-    val sig = out.filter(org.apache.spark.sql.functions.col("status")
-      .contains("significant")).count()
+    // both counts from one aggregate over the persisted result
+    val counts = out.agg(count(lit(1)),
+      count_if(col("status").contains("significant"))).head()
+    val (n, sig) = (counts.getLong(0), counts.getLong(1))
     out.unpersist(blocking = false) // all consumers (writes + counts) done
     println(s"[mwas] $n tests written to $outDir ($sig significant)")
     (n, sig)

@@ -1,6 +1,8 @@
 package graft.mwas
 
-import org.apache.spark.sql.DataFrame
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 
 import graft.functions.StatFunctions.{log2FoldChange, rpm}
@@ -11,9 +13,17 @@ import graft.stats.PermutationTest
   * public accessor access). */
 case class PermOut(stat: Double, p: Double, method: String)
 
-/** Readout dimensions derived purely from (catalog, sets) — see
-  * [[Pipeline.dims]]. */
-case class PipelineDims(bpUniverse: DataFrame, member: DataFrame)
+/** One (group × set) contrast of a bioproject, as [[Pipeline.contrastsUdf]]
+  * derives it (top-level for the same reason as [[PermOut]]). */
+case class Contrast(group: String, attributes: String, values: String,
+    members: Seq[String], include: Boolean, num_true: Long, num_false: Long,
+    mean_rpm_true: Double, mean_rpm_false: Double,
+    sd_rpm_true: Double, sd_rpm_false: Double, perm_capped: Boolean,
+    stored_vals: Array[Double], all_vals: Array[Double])
+
+/** Readout dimensions derived purely from (catalog, sets), both one row per
+  * bioproject — see [[Pipeline.dims]]. */
+case class PipelineDims(bpUniverse: DataFrame, bpSets: DataFrame)
 
 /** Pipeline configuration (reference globals, main/mwas_general.py:70-94). */
 case class MwasConfig(
@@ -26,11 +36,12 @@ case class MwasConfig(
     biosampleListCap: Int = 1000, // truncated listing :428-430
     permResamples: Int = 10000, // n_resamples :416
     permMaxPooled: Int = 20000, // guard: fall back to Welch beyond this
-    // hard cap on OBSERVED NONZERO values collected per (bioproject, group)
-    // for the permutation kernel; larger groups route to Welch (closed form,
-    // still exact) instead of buffering an unbounded vector — the analog of
-    // the reference skipping >50 MB projects (main/mwas_general.py:72),
-    // except nothing is dropped here. 100k doubles ≈ 800 KB per buffer.
+    // hard cap on OBSERVED NONZERO values per (bioproject, group) handed
+    // to the permutation kernel; larger groups route to Welch (closed form,
+    // still exact) instead of carrying an unbounded value array on every
+    // contrast row — the analog of the reference skipping >50 MB projects
+    // (main/mwas_general.py:72), except nothing is dropped here. 100k
+    // doubles ≈ 800 KB per array.
     permCollectCap: Int = 100000,
     // statistic-only mode for consumers that never read the permutation
     // p-value (the stats slice, the results summary): the permutation
@@ -41,13 +52,13 @@ case class MwasConfig(
     statClosedForm: Boolean = false,
     // opt-in delta-driven readout for incrementalTrigger: restrict the
     // per-trigger readout to CHANGED bioprojects and carry unchanged
-    // prior rows. Default OFF after measurement (r14): at every locally
-    // reachable scale the readout is plan-overhead-bound (~3 s fixed vs
-    // ~5% data term at 550k state rows — tools.DeltaReadoutProbe), so
-    // the delta arm's extra jobs cost more than the restriction saves
-    // (tools.StreamMwasAb arm C, 10-trigger bplocal: 59.7 vs 42.3 s).
-    // The positive regime is MEASURED, not argued (r15,
-    // DeltaReadoutProbe on the genrel 100× fixture, 5.5M state rows,
+    // prior rows. Default OFF after measurement (r14, on the join-based
+    // readout): at every locally reachable scale the readout was
+    // plan-overhead-bound (~3 s fixed vs ~5% data term at 550k state
+    // rows), so the delta arm's extra jobs cost more than the restriction
+    // saved (10-trigger bplocal: 59.7 vs 42.3 s; NOTES_r14).
+    // The positive regime was MEASURED, not argued (r15, on the genrel
+    // 100× fixture, 5.5M state rows,
     // 1-of-20 bioprojects changed): restricted readout 5.92 s vs full
     // 13.68 s — 2.3× in the delta arm's favor once the data term
     // dominates the fixed cost. Both sides of the crossover are now
@@ -62,17 +73,24 @@ case class MwasConfig(
   *
   * Scale design (SURVEY §7.4.4): the reference materializes a dense
   * biosample×group rpm matrix per bioproject (main/mwas_general.py:477).
-  * Here the zero-fill stays VIRTUAL — per (bioproject, group) we keep only
-  * observed rows plus group-level totals (sum, sum of squares); each side of
-  * a contrast gets its statistics algebraically:
+  * Here the readout keeps the reference's bioproject grain but the
+  * zero-fill stays VIRTUAL — a bioproject's observed (group, biosample)
+  * rows and its sets meet in ONE row, and each side of a contrast gets its
+  * statistics from its own observed members:
   *
   *     n_side     = |side| (from set cardinalities, not from rows)
   *     sum_side   = sum over observed members (implicit zeros add nothing)
   *     mean_side  = sum_side / n_side
   *     var_pop    = sumsq_side / n_side - mean_side²
   *
-  * so the contrast stage shuffles O(observed nonzeros + |sets|), never
-  * O(biosamples × groups × sets) — the rewrite that makes 100 TB feasible.
+  * so the readout shuffles O(observed rows + |sets|), never
+  * O(biosamples × groups × sets), and its memory bound is one
+  * bioproject's observed rows plus its sets per task. Bioprojects are
+  * independent, so that bound — not the input size — is what a task
+  * holds; a single bioproject too large for one task is the reference's
+  * own >50 MB skip case (main/mwas_general.py:72). The per-bioproject
+  * pass also keeps the plan small: its fixed per-job cost (planning,
+  * stages, generated code) is what dominates at interactive sizes.
   *
   * Faithful-mode quirk kept on purpose: the reference feeds POPULATION sd
   * (np.nanstd, ddof=0; main/mwas_general.py:384-385) into scipy's
@@ -139,44 +157,48 @@ object Pipeline {
   /** The readout's slowly-changing dimensions — pure functions of
     * (catalog, sets). An incremental consumer builds them ONCE per
     * stream (and persists them) instead of re-deriving the catalog
-    * collect_set and the membership explode every trigger. */
+    * collect_set and the per-bioproject set lists every trigger. */
   def dims(catalog: DataFrame, sets: DataFrame): PipelineDims =
     PipelineDims(
-      // biosample universe per bioproject (implicit zeros + listings)
+      // biosample universe per bioproject (implicit zeros + listings).
+      // Its size is taken at the consumer: a projection here would be a
+      // generated-code stage whose AQE creation order races the state
+      // aggregation's, and the stage ids that order hands out are part of
+      // the generated source, so a warm job would miss the codegen cache
       bpUniverse = catalog
         .groupBy(col("bio_project"))
-        .agg(sort_array(collect_set(col("bio_sample"))).as("all_biosamples"))
-        .withColumn("n_biosamples_cat", size(col("all_biosamples"))),
-      // join-ready stored-side membership
-      member = sets.select(col("bioproject").as("bio_project"),
-        col("set_id"), explode(col("members")).as("bio_sample")))
+        .agg(sort_array(collect_set(col("bio_sample"))).as("all_biosamples")),
+      // the bioproject's sets, one list per bioproject
+      bpSets = sets
+        .groupBy(col("bioproject").as("bio_project"))
+        .agg(collect_list(struct(col("attributes"), col("values"),
+          col("members"), col("n_stored").cast("long").as("n_stored"),
+          col("include"))).as("sets")))
 
-  /** One incremental trigger step — shared by the registry's
-    * `stream_mwas` and tools.StreamMwasAb so the measured arm IS the
-    * shipped arm. Merges the batch's biosample-grain delta into `state`,
-    * then produces the new full result.
+  /** One incremental trigger step of the registry's `stream_mwas`.
+    * Merges the batch's biosample-grain delta into `state`, then produces
+    * the new full result.
     *
     * The readout is full-recompute by default and DELTA-DRIVEN on
     * opt-in (`cfg.deltaReadout` + update locality: 2·|changed| <
     * |universe|): every readout key carries bio_project (bioprojects
     * are statistically independent by construction), so a bioproject
     * absent from this batch's delta cannot change a single output row —
-    * the contrast join + Welch readout then runs only over the changed
-    * bioprojects' restricted inputs, unioned with the unchanged
-    * bioprojects' prior rows. VERDICT r13 item 2 asked for this shape
-    * with a measured wall drop; the measurement came back NEGATIVE at
-    * every locally reachable scale and is recorded rather than forced:
-    * a single 550k-row-state readout is 2.96 s full vs 2.80 s
-    * restricted-to-2-of-20-bioprojects (tools.DeltaReadoutProbe) — the
-    * readout wall is ~95% plan/stage fixed cost at local SFs, so arm
-    * C's extra per-trigger jobs cost more than the restriction saves
-    * (tools.StreamMwasAb 10-trigger bplocal at 10×: C 59.7 s vs B
-    * 42.3 s). The flag is for the regime the asymptotics favor — state
-    * large enough that the readout's DATA term dominates its ~3 s fixed
-    * term, i.e. real-cluster minutes-long readouts, where per-trigger
-    * work drops to O(changed). Parity of the delta arm is measured, not
-    * assumed: row-identical, floats within 5.7e-12 of the full
-    * recompute (reassociation only — the profcompare standard).
+    * the readout then runs only over the changed bioprojects' restricted
+    * state and dims, unioned with the unchanged bioprojects' prior rows.
+    * VERDICT r13 item 2 asked for this shape with a measured wall drop;
+    * on the join-based readout the measurement came back NEGATIVE at
+    * every locally reachable scale (NOTES_r14): a single 550k-row-state
+    * readout was 2.96 s full vs 2.80 s restricted-to-2-of-20-bioprojects
+    * — ~95% plan/stage fixed cost at local SFs — and the delta arm's
+    * extra per-trigger jobs cost more than the restriction saved
+    * (10-trigger bplocal at 10×: 59.7 s vs 42.3 s). The flag is for the
+    * regime the asymptotics favor — state large enough that the
+    * readout's DATA term dominates its fixed term, where per-trigger
+    * work drops to O(changed) (NOTES_r15: 5.92 s vs 13.68 s at 5.5M
+    * state rows). Parity of the delta arm: row-identical, floats within
+    * 5.7e-12 of the full recompute (reassociation only — the profcompare
+    * standard).
     * Reference analogue: the block loop re-running every bioproject per
     * chunk (main/mwas_general.py:601-614).
     *
@@ -208,22 +230,14 @@ object Pipeline {
         val nChanged = changed.count()
         if (2 * nChanged < nUniverse) {
           // EVERY readout input is bio_project-keyed — restrict them
-          // all, not just the state: the stored-membership explode and
-          // the contrast join against `sets` are the readout's data
-          // terms, and a semi-join against the broadcast changed set is
-          // a map-side filter over the persisted dims (no shuffle)
-          val restricted = next.join(broadcast(changed),
-            Seq("bio_project"), "left_semi")
-          val rdims = PipelineDims(
-            bpUniverse = pdims.bpUniverse.join(broadcast(changed),
-              Seq("bio_project"), "left_semi"),
-            member = pdims.member.join(broadcast(changed),
-              Seq("bio_project"), "left_semi"))
-          val rsets = sets.join(broadcast(changed.select(
-            col("bio_project").as("bioproject"))),
-            Seq("bioproject"), "left_semi")
-          runFromBiosampleState(restricted, catalog, rsets, cfg,
-            Some(rdims))
+          // all, not just the state: a semi-join against the broadcast
+          // changed set is a map-side filter over the persisted dims (no
+          // shuffle)
+          def restrict(df: DataFrame) =
+            df.join(broadcast(changed), Seq("bio_project"), "left_semi")
+          runFromBiosampleState(restrict(next), catalog, sets, cfg,
+            Some(PipelineDims(restrict(pdims.bpUniverse),
+              restrict(pdims.bpSets))))
             .unionByName(prev.join(broadcast(changed.select(
               col("bio_project").as("bioproject"))),
               Seq("bioproject"), "left_anti"))
@@ -241,148 +255,35 @@ object Pipeline {
 
   /** Stages 2b–5: the readout from the mergeable biosample state down to
     * the reference's 18-column output relation. `precomputed` lets an
-    * incremental caller reuse persisted [[dims]] across triggers. */
+    * incremental caller reuse persisted [[dims]] across triggers (the
+    * `sets` argument is then unused). */
   def runFromBiosampleState(state: DataFrame, catalog: DataFrame,
       sets: DataFrame, cfg: MwasConfig = MwasConfig(),
       precomputed: Option[PipelineDims] = None): DataFrame = {
-    val PipelineDims(bpUniverse, member) =
+    val PipelineDims(bpUniverse, bpSets) =
       precomputed.getOrElse(dims(catalog, sets))
 
-    // ---- stage 2: per-biosample mean over replicate runs (A5 :505-518) ----
-    // NOT persisted: the four consumers below (group totals, permutation
-    // values, stored-side totals, stored-side values) all contain this
-    // aggregation's exchange with an identical canonical plan, so Spark's
-    // ReuseExchange writes the shuffle once and reads it four times —
-    // shuffle-file reuse costs no executor storage memory and cannot leak
-    // (a persist() here outlived the query: nothing in a lazy plan can
-    // know when the caller's action finishes, so it was never unpersisted).
-    // n_runs rides along: every bsRpm consumer then references BOTH of
-    // the state aggregate's accumulators (rpm needs sum AND count), so
-    // column pruning cannot specialize any consumer's copy of the
-    // subtree and ReuseExchange keeps exactly one materialized shuffle —
-    // a separately-aggregated provided-count pruned rpm_sum out of its
-    // branch and re-derived the catalog⋈input join (caught by
-    // PipelineSpec's planned-ONCE gate after the r13 state refactor).
-    val bsRpm = state.select(col("bio_project"), col("group"),
-      col("bio_sample"), (col("rpm_sum") / col("n_runs")).as("rpm"),
-      col("n_runs"))
-
-    // Totals ONLY — sums/counts are map-side combinable and bounded no
-    // matter how pathological one bioproject is; no collect_list here.
-    // group acceptance (A4 :485-491) at run grain folded into the SAME
-    // aggregation: Σ n_runs over the group's biosamples == the provided
-    // row count of the old run-grain aggregation, exactly (integer
-    // sums) — one aggregation and no join where there used to be both.
-    val groupStats = bsRpm
-      .groupBy(col("bio_project"), col("group"))
-      .agg(
-        sum(when(col("rpm") =!= 0, 1).otherwise(0)).as("nonzeros"),
-        sum(col("rpm")).as("sum_all"),
-        sum(col("rpm") * col("rpm")).as("sumsq_all"),
-        count(lit(1)).as("n_observed"),
-        sum(col("n_runs")).as("n_provided"))
-      .filter(col("n_provided") >= cfg.groupNonzerosThreshold)
-      .withColumn("perm_capped", col("nonzeros") > cfg.permCollectCap)
-
-    // Raw values are needed ONLY by the permutation kernel, only for groups
-    // under the cap, and only the NONZERO ones: the kernel pads each side
-    // with implicit zeros up to its true cardinality, so an observed zero is
-    // indistinguishable from padding — dropping observed zeros leaves the
-    // padded multisets identical. The collect_list buffer is therefore
-    // <= permCollectCap elements BY CONSTRUCTION (the semi join admits only
-    // groups whose nonzero count was counted above and passed the cap).
-    val needVals = !cfg.onlyTTest && !cfg.statClosedForm
-    // skip value collection for bioprojects whose pooled universe exceeds
-    // permMaxPooled: every contrast there satisfies num_true + num_false
-    // = n_biosamples_cat > permMaxPooled and routes to Welch, so the
-    // collect_list would be paid and never read (r9 review) — at scale
-    // the oversized bioprojects are exactly the expensive ones
-    val permKeys = groupStats
-      .filter(!col("perm_capped"))
-      .join(bpUniverse
-          .filter(col("n_biosamples_cat") <= cfg.permMaxPooled)
-          .select(col("bio_project")),
-        Seq("bio_project"), "left_semi")
-      .select(col("bio_project"), col("group"))
-    // ONE relation feeds both value collections (group-level all_vals and
-    // stored-side stored_vals): building it twice made the plan re-derive
-    // the semi join per consumer. Arrays are sorted HERE, once per group at
-    // aggregation time — collect_list order is partition-dependent, and the
-    // memo key below needs canonical order; sorting per contrast row would
-    // redo the O(n log n) work once per (group × set) instead of per group.
-    val permVals = bsRpm.filter(col("rpm") =!= 0)
-      .join(permKeys, Seq("bio_project", "group"), "left_semi")
-    val emptyVals = array().cast("array<double>")
-    val accepted =
-      if (!needVals) groupStats.withColumn("all_vals", emptyVals)
-      else groupStats
-        .join(permVals
-          .groupBy(col("bio_project"), col("group"))
-          .agg(sort_array(collect_list(col("rpm"))).as("all_vals")),
-          Seq("bio_project", "group"), "left_outer")
-        .withColumn("all_vals", coalesce(col("all_vals"), emptyVals))
-
-    // ---- stage 3: contrast statistics, zeros kept virtual ----------------
-    // observed rows joined to STORED-side membership only ([[dims]].member);
-    // the other side's stats fall out of the group totals by subtraction.
-    // stored-side TOTALS feed every route (Welch included) — no raw values
-    // here either; the values go through the same capped nonzero-only path
-    // as all_vals, so this buffer has the same <= permCollectCap bound.
-    val storedTotals = bsRpm
-      .join(member, Seq("bio_project", "bio_sample"))
-      .groupBy(col("bio_project"), col("group"), col("set_id"))
-      .agg(
-        sum(col("rpm")).as("sum_stored"),
-        sum(col("rpm") * col("rpm")).as("sumsq_stored"))
-    val storedStats =
-      if (!needVals)
-        storedTotals.withColumn("stored_vals", emptyVals)
-      else storedTotals
-        .join(permVals
-          .join(member, Seq("bio_project", "bio_sample"))
-          .groupBy(col("bio_project"), col("group"), col("set_id"))
-          .agg(sort_array(collect_list(col("rpm"))).as("stored_vals")),
-          Seq("bio_project", "group", "set_id"), "left_outer")
-
-    val contrasts = sets.select(
-        col("bioproject").as("bio_project"), col("set_id"),
-        col("attributes"), col("values"), col("members"),
-        col("n_stored"), col("include"))
-      .join(accepted, Seq("bio_project"))
+    // ---- stages 2b–3: bioproject-local contrast statistics ---------------
+    // Every readout key carries bio_project and bioprojects are
+    // statistically independent, so one row per bioproject — its observed
+    // state rows, its sets, its catalog universe — holds everything a
+    // contrast needs, and [[contrastsUdf]] derives all of its
+    // (group × set) contrasts in one pass (reference process_bioproject,
+    // main/mwas_general.py:344-679). MEMORY BOUND: one bioproject's
+    // observed (group, biosample) rows plus its sets sit in one task — the
+    // grain the reference holds as a dense matrix (:477), minus the
+    // implicit zeros, which stay virtual.
+    val obs = state
+      .select(col("bio_project"), struct(col("group"), col("bio_sample"),
+        (col("rpm_sum") / col("n_runs")).as("rpm"), col("n_runs")).as("o"))
+      .groupBy(col("bio_project"))
+      .agg(collect_list(col("o")).as("obs"))
+    val withStats = obs
+      .join(bpSets, Seq("bio_project"))
       .join(bpUniverse, Seq("bio_project"))
-      .join(storedStats, Seq("bio_project", "group", "set_id"), "left_outer")
-      .na.fill(Map("sum_stored" -> 0.0, "sumsq_stored" -> 0.0))
-      .withColumn("stored_vals",
-        coalesce(col("stored_vals"), array().cast("array<double>")))
-
-    // side assignment by polarity (reference :363-372): stored side is the
-    // true side iff include
-    val nTrue = when(col("include"), col("n_stored"))
-      .otherwise(col("n_biosamples_cat") - col("n_stored"))
-    val nFalse = col("n_biosamples_cat") - nTrue
-    val sumTrue = when(col("include"), col("sum_stored"))
-      .otherwise(col("sum_all") - col("sum_stored"))
-    val sumFalse = col("sum_all") - sumTrue
-    val sumsqTrue = when(col("include"), col("sumsq_stored"))
-      .otherwise(col("sumsq_all") - col("sumsq_stored"))
-    val sumsqFalse = col("sumsq_all") - sumsqTrue
-
-    val withStats = contrasts
-      .withColumn("num_true", nTrue.cast("long"))
-      .withColumn("num_false", nFalse.cast("long"))
-      // guards (:376) — with implicit zeros both sides are full-size
-      .filter(col("num_true") >= 2 && col("num_false") >= 2)
-      .withColumn("mean_rpm_true", sumTrue / col("num_true"))
-      .withColumn("mean_rpm_false", sumFalse / col("num_false"))
-      // population sd (np.nanstd ddof=0, :384-385), clamped for FP noise
-      .withColumn("sd_rpm_true",
-        sqrt(greatest(sumsqTrue / col("num_true") -
-          col("mean_rpm_true") * col("mean_rpm_true"), lit(0.0))))
-      .withColumn("sd_rpm_false",
-        sqrt(greatest(sumsqFalse / col("num_false") -
-          col("mean_rpm_false") * col("mean_rpm_false"), lit(0.0))))
-      // both-zero-means skip (:388)
-      .filter(!(col("mean_rpm_true") === 0 && col("mean_rpm_false") === 0))
+      .select(col("bio_project"), col("all_biosamples"),
+        inline(contrastsUdf(cfg)(col("obs"), col("sets"),
+          size(col("all_biosamples")))))
 
     // ---- stage 4: test routing (O14 :404-419) + significance (:424-434) --
     // Welch when a side is tiny (or forced), else the permutation test —
@@ -403,7 +304,7 @@ object Pipeline {
     val withTest =
       if (cfg.statClosedForm)
         // the permutation route's statistic is the mean difference — the
-        // algebraic group/stored totals already carry it; only the p-value
+        // side means already carry it; only the p-value
         // would need the resampling kernel, and this mode's consumers
         // never read it
         routed
@@ -419,8 +320,8 @@ object Pipeline {
         // the permutation p is a pure function of (stored multiset, group
         // multiset, polarity, side sizes) — hash of the sorted arrays is
         // the memo key. xxhash64 hashes ARRAY columns natively (recursive
-        // element hash, codegen'd); the arrays were already sorted at
-        // aggregation time, so this is a straight pass over the doubles —
+        // element hash, codegen'd); the arrays were already sorted by
+        // [[contrastsUdf]], so this is a straight pass over the doubles —
         // no JSON string ever built.
         val keyed = routed.withColumn("memo_key",
           when(col("is_t_test"), lit(null).cast("long")).otherwise(
@@ -527,6 +428,85 @@ object Pipeline {
   def writeCombined(output: DataFrame, dir: String): Unit =
     output.coalesce(1).write.mode("overwrite")
       .option("header", "true").csv(dir)
+
+  /** Every (group × set) contrast of one bioproject, from its observed
+    * state rows `obs` (group, bio_sample, rpm, n_runs), its `sets` and its
+    * catalog size `nCat`. Per group: acceptance on the provided run count
+    * (A4 :485-491) and the permutation value cap; per contrast: side sizes
+    * by polarity (:363-372), the size guard (:376), each side's sum and
+    * sum of squares over its own observed members — so an all-zero side's
+    * mean is exactly 0.0, as in the reference's dense `np.mean`
+    * (:384-385) — population sds, and the both-zero-means skip (:388).
+    *
+    * The permutation kernel's inputs are the sorted NONZERO rpms of the
+    * stored side and of the whole group ([[permPaddedUdf]] pads with
+    * implicit zeros, so observed zeros carry nothing). They are filled only
+    * where the kernel can run: values wanted at all, the group's nonzeros
+    * within `permCollectCap` and the pooled universe within
+    * `permMaxPooled`; elsewhere they stay empty and routing sends the
+    * contrast to Welch. Rows are sorted by biosample first, so sums do not
+    * depend on the order collect_list happened to gather them in. */
+  private[mwas] def contrastsUdf(cfg: MwasConfig) = {
+    val threshold = cfg.groupNonzerosThreshold
+    val cap = cfg.permCollectCap
+    val needVals = !cfg.onlyTTest && !cfg.statClosedForm
+    val maxPooled = cfg.permMaxPooled
+    udf((obs: Seq[Row], sets: Seq[Row], nCat: Int) => {
+      val bpVals = needVals && nCat <= maxPooled
+      val setRows = sets.map { r =>
+        val members = r.getSeq[String](2)
+        (r, members, new java.util.HashSet[String](members.asJava))
+      }
+      val out = scala.collection.mutable.ArrayBuffer.empty[Contrast]
+      obs.groupBy(_.getString(0)).foreach { case (group, rows) =>
+        val sorted = rows.sortBy(_.getString(1))
+        val bs = sorted.map(_.getString(1)).toArray
+        val rpm = sorted.map(_.getDouble(2)).toArray
+        val nonzeros = rpm.count(_ != 0)
+        val capped = nonzeros > cap
+        val vals = bpVals && !capped
+        if (sorted.map(_.getLong(3)).sum >= threshold) {
+          val allVals =
+            if (vals) rpm.filter(_ != 0).sorted else Array.empty[Double]
+          setRows.foreach { case (set, members, memberSet) =>
+            val include = set.getBoolean(4)
+            val nStored = set.getLong(3)
+            val numTrue = if (include) nStored else nCat - nStored
+            val numFalse = nCat - numTrue
+            if (numTrue >= 2 && numFalse >= 2) {
+              var (sumIn, sqIn, sumOut, sqOut) = (0.0, 0.0, 0.0, 0.0)
+              var i = 0
+              while (i < bs.length) {
+                val v = rpm(i)
+                if (memberSet.contains(bs(i))) { sumIn += v; sqIn += v * v }
+                else { sumOut += v; sqOut += v * v }
+                i += 1
+              }
+              val (sumT, sqT, sumF, sqF) =
+                if (include) (sumIn, sqIn, sumOut, sqOut)
+                else (sumOut, sqOut, sumIn, sqIn)
+              val meanT = sumT / numTrue
+              val meanF = sumF / numFalse
+              if (!(meanT == 0 && meanF == 0)) {
+                val storedVals =
+                  if (!vals) Array.empty[Double]
+                  else bs.indices.collect {
+                    case j if rpm(j) != 0 && memberSet.contains(bs(j)) =>
+                      rpm(j)
+                  }.toArray.sorted
+                out += Contrast(group, set.getString(0), set.getString(1),
+                  members, include, numTrue, numFalse, meanT, meanF,
+                  math.sqrt(math.max(sqT / numTrue - meanT * meanT, 0.0)),
+                  math.sqrt(math.max(sqF / numFalse - meanF * meanF, 0.0)),
+                  capped, storedVals, allVals)
+              }
+            }
+          }
+        }
+      }
+      out.toSeq
+    })
+  }
 
   /** Permutation test over virtually-zero-padded sides.
     *

@@ -90,8 +90,76 @@ class PipelineSpec extends AnyFunSuite {
       (-5.0 / math.sqrt(0.8))) < 1e-9)
   }
 
-  test("per-biosample aggregation subtree is planned ONCE: its exchange " +
-      "is reused, not re-derived, by every downstream consumer") {
+  test("an all-zero true side has mean exactly 0.0 and fold change " +
+      "-Infinity") {
+    import spark.implicits._
+    val catalog = (1 to 23)
+      .map(i => (s"R$i", s"BS$i", "bp1", 1000000.0))
+      .toDF("run", "bio_sample", "bio_project", "spots")
+    // BS1..BS3 provided as explicit zeros; BS4..BS23 carry values of
+    // mixed magnitude, whose float sum depends on association order
+    val values = (4 to 23).map(i => math.pow(10, i % 7 - 3) / i)
+    val input = ((1 to 3).map(i => (s"R$i", "g1", 0.0)) ++
+        (4 to 23).map(i => (s"R$i", "g1", values(i - 4))))
+      .toDF("run", "group", "quantifier")
+    // include=false: the stored set is the FALSE side, so the true side
+    // {BS1,BS2,BS3} is the complement and must be summed on its own
+    val sets = Seq(("bp1", "tissue", "liver", (4 to 23).map(i => s"BS$i"),
+        20, false, 23, 42L))
+      .toDF("bioproject", "attributes", "values", "members", "n_stored",
+        "include", "n_biosamples", "set_id")
+    val r = Pipeline.run(input, catalog, sets, MwasConfig()).collect()
+    assert(r.length === 1)
+    assert(r.head.getAs[Long]("num_true") === 3L)
+    assert(r.head.getAs[Double]("mean_rpm_true") === 0.0)
+    assert(r.head.getAs[Double]("sd_rpm_true") === 0.0)
+    assert(math.abs(r.head.getAs[Double]("mean_rpm_false") /
+      (values.sum / 20) - 1) < 1e-12)
+    assert(r.head.getAs[Double]("fold_change") === Double.NegativeInfinity)
+  }
+
+  test("the delta-driven readout equals the full recompute") {
+    import spark.implicits._
+    // three bioprojects of 8 biosamples; the second batch touches bp1
+    // only, so 2·|changed| < |universe| and the delta arm runs
+    val bps = Seq("bp1", "bp2", "bp3")
+    val catalog = for (bp <- bps; i <- 1 to 8)
+      yield (s"$bp-R$i", s"$bp-BS$i", bp, 1000000.0)
+    val catalogDf = catalog.toDF("run", "bio_sample", "bio_project", "spots")
+    val sets = bps.zipWithIndex.map { case (bp, k) =>
+      (bp, "tissue", "liver", (1 to 4).map(i => s"$bp-BS$i"), 4, true, 8,
+        k.toLong)
+    }.toDF("bioproject", "attributes", "values", "members", "n_stored",
+      "include", "n_biosamples", "set_id")
+    val first = catalog.map { case (run, _, bp, _) =>
+      (run, "g1", (run.hashCode & 0xff).toDouble) }
+    val second = catalog.filter(_._3 == "bp1").map { case (run, _, _, _) =>
+      (run, "g2", (run.hashCode & 0x7f).toDouble + 1) }
+    val batches = Seq(first, second)
+      .map(_.toDF("run", "group", "quantifier"))
+
+    def stream(cfg: MwasConfig): Set[String] = {
+      val pdims = Pipeline.dims(catalogDf, sets)
+      val nUniverse = pdims.bpUniverse.count()
+      val (_, out) = batches.foldLeft(
+          (Option.empty[org.apache.spark.sql.DataFrame],
+            Option.empty[org.apache.spark.sql.DataFrame])) {
+        case ((state, results), batch) =>
+          val (next, full) = Pipeline.incrementalTrigger(batch, catalogDf,
+            sets, cfg, pdims, nUniverse, state, results)
+          (Some(next), Some(full))
+      }
+      out.get.drop("runtime_seconds", "memory_usage_bytes").collect()
+        .map(_.toSeq.mkString("|")).toSet
+    }
+
+    val full = stream(MwasConfig(onlyTTest = true))
+    assert(full.size === 4) // (g1 × 3 bioprojects) + (g2 × bp1)
+    assert(stream(MwasConfig(onlyTTest = true, deltaReadout = true)) === full)
+  }
+
+  test("catalog-input join and state-aggregation exchange are each " +
+      "planned ONCE") {
     import spark.implicits._
     val catalog = (1 to 8)
       .map(i => (s"R$i", s"BS$i", "bp1", 1000000.0))
@@ -108,20 +176,23 @@ class PipelineSpec extends AnyFunSuite {
     try {
       val plan = Pipeline.run(input, catalog, sets, MwasConfig())
         .queryExecution.executedPlan.toString
-      // the bsRpm aggregate partitions on exactly these three keys; its
-      // consumers (group totals, all_vals, stored totals, stored_vals)
-      // must READ the one materialized shuffle, not repeat the
-      // catalog⋈input join — so exactly one plan line carries a fresh
-      // exchange on the keys (ReusedExchange lines quote the target
-      // exchange's description, hence the line-wise filter)
-      val lines = plan.linesIterator
-        .filter(_.contains("Exchange hashpartitioning(bio_project#")).toSeq
-      val fresh = lines.filter(l => l.contains("bio_sample#") &&
-        !l.contains("ReusedExchange"))
-      val reused = lines.filter(l => l.contains("bio_sample#") &&
-        l.contains("ReusedExchange"))
-      assert(fresh.size === 1, s"bsRpm exchange planned ${fresh.size} times:\n$plan")
-      assert(reused.nonEmpty, s"no ReusedExchange of bsRpm in plan:\n$plan")
+      // the memo dedup reads the readout twice (distinct tuples, join
+      // back); both reads must share one state aggregation and one
+      // catalog⋈input join instead of re-deriving them per consumer
+      // (ReusedExchange lines quote the target exchange's description,
+      // hence the line-wise filter)
+      val lines = plan.linesIterator.filterNot(_.contains("ReusedExchange"))
+        .toSeq
+      val stateExchange = lines.filter(l =>
+        l.contains("Exchange hashpartitioning(bio_project#") &&
+          l.contains("group#") && l.contains("bio_sample#"))
+      val runJoin = lines.filter(l =>
+        l.contains("Join") && "\\[run#\\d+\\], \\[run#\\d+\\]".r
+          .findFirstIn(l).isDefined)
+      assert(stateExchange.size === 1,
+        s"state exchange planned ${stateExchange.size} times:\n$plan")
+      assert(runJoin.size === 1,
+        s"catalog⋈input join planned ${runJoin.size} times:\n$plan")
     } finally spark.conf.set("spark.sql.adaptive.enabled", "true")
   }
 }
