@@ -1,18 +1,23 @@
 package graft.etl
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.api.java.UDF1
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 
-/** The reference's "set maker" (main/metadata_set_maker.py:13-110) as a
-  * relational pipeline — SURVEY.md §2.8.
+/** The reference's "set maker" (main/metadata_set_maker.py:13-110) over
+  * every bioproject at once — SURVEY.md §2.8.
   *
   * The reference iterates per-column/per-factor over a wide pandas frame and
   * hand-builds membership bit-vectors keyed by arbitrary-precision ints.
   * Here the wide frame is melted to a fixed-schema long relation
-  * `(bioproject, biosample_id, attribute, value)` once, and every rule is a
-  * groupBy/window over it — so one Spark job condenses ALL bioprojects,
-  * partitioned by the `bioproject` grouping key (the reference needed GNU
-  * parallel + a resume file, main/converter.sh:74).
+  * `(bioproject, biosample_id, attribute, value)` once; one shuffle brings
+  * each bioproject's cells together and one pass per bioproject applies the
+  * rules — so one Spark job condenses ALL bioprojects, partitioned by the
+  * `bioproject` grouping key (the reference needed GNU parallel + a resume
+  * file, main/converter.sh:74). The per-bioproject pass keeps the plan
+  * small: at interactive sizes its fixed cost (stages, generated code), not
+  * the data, is what a job pays.
   *
   * Rules reproduced (cites into main/metadata_set_maker.py):
   *   r1 biosample filter (`startswith('SAM')`, :35) — caller-supplied prefix;
@@ -38,10 +43,10 @@ object MetadataCondenser {
     "N/A", "n/a", "NA", "<NA>", "#NA", "NULL", "null", "NaN", "-NaN",
     "nan", "-nan", "None", "")
 
-  /** True when the cell is readable: not NULL and not a pandas NA
-    * literal. */
-  def isPresent(c: Column): Column =
-    c.isNotNull && !c.isin(PandasNaValues: _*)
+  private val naSet = PandasNaValues.toSet
+
+  /** Readable: not NULL and not a pandas NA literal. */
+  private def isPresent(v: String): Boolean = v != null && !naSet(v)
 
   /** [[PandasNaValues]] as a SQL IN-list (no member contains a quote). */
   val sqlNaList: String = PandasNaValues.map("'" + _ + "'").mkString(", ")
@@ -63,99 +68,99 @@ object MetadataCondenser {
     *
     * Output: (bioproject, attributes, values, members ARRAY<STRING> — the
     * STORED (minority) side, sorted —, n_stored, include, n_biosamples,
-    * set_id). Join-ready via [[membership]].
+    * set_id).
+    *
+    * One shuffle: every bioproject's (biosample_id, attribute, value) cells
+    * meet in one row, and [[bioprojectSets]] applies rules r2–r6 to them.
+    * MEMORY BOUND: one bioproject's metadata cells per task — the grain the
+    * reference condenses at (one metadata file per bioproject,
+    * main/converter.sh:74). The test corpus's largest bioproject
+    * (large_but_empty--PRJNA893630, 1.96 M cells) collects to 157 MB, 7 %
+    * of Spark's ~2 GB array limit; the full corpus's largest is unverified.
+    * Rows with a null bioproject are dropped.
     */
-  def condense(long: DataFrame, idPrefix: Option[String] = None): DataFrame = {
-    val filtered = idPrefix match {
-      case Some(p) => long.filter(col("biosample_id").startsWith(p))
-      case None => long
-    }
-
-    // n_biosamples per bioproject (reference: len(biosamples_ref), :109)
-    // and distinct-value counts per attribute — as aggregate+join, NOT
-    // `collect_set(...).over(window)`: a windowed collect_set materializes
-    // the whole distinct set PER ROW (O(rows × set size) memory), which is
-    // unusable at scale; these joins shuffle only (key, count) pairs, and
-    // the per-bioproject side broadcasts.
-    val nBs = filtered.groupBy(col("bioproject"))
-      .agg(countDistinct(col("biosample_id")).cast("int").as("n_biosamples"))
-    // nd treats every pandas NA literal ('nan', 'NA', 'None', …) as
-    // MISSING, exactly like the reference: pandas converts those cells to
-    // NaN at read time (default na_values) and nunique() excludes NaN —
-    // so a column that is constant-except-NA has nunique 1 and is dropped
-    // whole. The cross-engine golden oracle (TEST_LARGE fixture: status =
-    // 'live' ×295 + 'nan' ×3) caught the over-counting variant emitting
-    // sets the reference never produces.
-    val nd = filtered.groupBy(col("bioproject"), col("attribute"))
-      .agg(countDistinct(when(isPresent(col("value")), col("value")))
-        .cast("int").as("nd"))
-
-    val withStats = filtered
-      .join(broadcast(nBs), Seq("bioproject"))
-      .join(nd, Seq("bioproject", "attribute"))
-      // r2: constant or all-unique attributes carry no contrast
-      .filter(col("nd") > 1 && col("nd") < col("n_biosamples"))
-      // r3: the reference skips real NaN, i.e. every cell pandas read as
-      // missing — including string round-trip artifacts like 'nan'
-      // (tests :117-124)
-      .filter(isPresent(col("value")))
-
-    // per-bioproject biosample universe (the sorted ref list, :25,109);
-    // broadcastable — one row per bioproject
-    val universe = filtered
+  def condense(long: DataFrame, idPrefix: Option[String] = None): DataFrame =
+    long
+      .filter(col("bioproject").isNotNull &&
+        idPrefix.fold(lit(true))(col("biosample_id").startsWith(_)))
       .groupBy(col("bioproject"))
-      .agg(sort_array(collect_set(col("biosample_id"))).as("all_members"))
-
-    val perFactor = withStats
-      .groupBy(col("bioproject"), col("attribute"), col("value"),
-        col("n_biosamples"))
-      .agg(sort_array(collect_set(col("biosample_id"))).as("members_raw"))
-      .withColumn("cnt", size(col("members_raw")))
-      // r4: singleton factors
-      .filter(col("cnt") > 1)
-      // r5: store the minority side; include == the stored side IS the
-      // true side of the contrast
-      .withColumn("include", col("cnt") < col("n_biosamples") / 2.0)
-      .join(universe, Seq("bioproject"))
-
-    // materialize the stored side (minority) — complement via array_except
-    // stays per-bioproject-sized, never cross-bioproject
-    val stored = perFactor.withColumn("members",
-        when(col("include"), col("members_raw"))
-          .otherwise(array_except(col("all_members"), col("members_raw"))))
-      .withColumn("n_stored", size(col("members")))
-
-    // r6: identical membership vectors merge their labels ('; '-joined,
-    // sorted (attribute, value) for determinism; reference keeps encounter
-    // order, which pandas does not guarantee across versions)
-    stored
-      .groupBy(col("bioproject"), col("include"), col("members"),
-        col("n_stored"), col("n_biosamples"))
-      // ';'→':' in LABELS ONLY (the reference's delimiter guard,
-      // metadata_set_maker.py:68-71) — every GROUPING above ran on the
-      // ORIGINAL values, so two factors that differ only by ;/: keep
-      // their distinct membership vectors and merely collide in label,
-      // exactly like the reference. Replaced BEFORE the sort so the
-      // canonical pair order is over the labels actually emitted.
-      .agg(sort_array(collect_list(struct(
-        translate(col("attribute"), ";", ":").as("attribute"),
-        translate(col("value"), ";", ":").as("value"))))
-        .as("pairs"))
+      .agg(collect_list(struct(col("biosample_id"), col("attribute"),
+        col("value"))).as("cells"))
+      .select(col("bioproject"), inline(setsUdf(col("cells"))))
+      // canonical order in Spark's own (UTF-8 byte) order: members sorted,
+      // label pairs sorted by (attribute, value) — the reference keeps
+      // encounter order, which pandas does not guarantee across versions
+      .withColumn("pairs", sort_array(col("pairs")))
+      .withColumn("members", sort_array(col("members")))
       .select(
         col("bioproject"),
         array_join(transform(col("pairs"), p => p("attribute")), "; ")
           .as("attributes"),
         array_join(transform(col("pairs"), p => p("value")), "; ")
           .as("values"),
-        col("members"), col("n_stored"), col("include"), col("n_biosamples"),
-        xxhash64(col("bioproject"), to_json(col("members")), col("include"))
-          .as("set_id"))
+        col("members"), size(col("members")).as("n_stored"),
+        col("include"), col("n_biosamples"), setId.as("set_id"))
+
+  /** A set's id: a hash of its bioproject, stored side and polarity. The
+    * one definition, shared by every producer of condensed sets. */
+  def setId: Column =
+    xxhash64(col("bioproject"), to_json(col("members")), col("include"))
+
+  /** [[bioprojectSets]]' row type. Its nullability keeps the sets schema
+    * callers have always seen: every field non-null except `include`,
+    * which the relational rules derived from a division. */
+  private val setsType = {
+    def field(name: String, t: DataType, nullable: Boolean = false) =
+      StructField(name, t, nullable)
+    ArrayType(StructType(Seq(
+      field("pairs", ArrayType(StructType(Seq(
+        field("attribute", StringType), field("value", StringType))),
+        containsNull = false)),
+      field("members", ArrayType(StringType, containsNull = false)),
+      field("include", BooleanType, nullable = true),
+      field("n_biosamples", IntegerType))), containsNull = false)
   }
 
-  /** Explode sets to the join-ready (bioproject, set_id, biosample_id)
-    * relation — the idiomatic replacement for the reference's per-row
-    * bit-vector scans (SURVEY §1.1). */
-  def membership(sets: DataFrame): DataFrame =
-    sets.select(col("bioproject"), col("set_id"),
-      explode(col("members")).as("biosample_id"))
+  private val setsUdf = udf(
+    (cells => bioprojectSets(cells)): UDF1[Seq[Row], Seq[Row]], setsType)
+    .asNonNullable()
+
+  /** Rules r2–r6 over one bioproject's (biosample_id, attribute, value)
+    * cells, emitting (pairs, members, include, n_biosamples) per set.
+    * The universe is every non-null biosample id, null-attribute cells
+    * included (they join no factor); null ids count towards an attribute's
+    * distinct values but are never members. ';' becomes ':' in the emitted
+    * labels only (the reference's delimiter guard, :68-71): grouping runs
+    * on the original values, so two factors that differ only by ;/: keep
+    * their own membership vectors and merely collide in label, as in the
+    * reference. */
+  private def bioprojectSets(cells: Seq[Row]): Seq[Row] = {
+    val universe = cells.iterator.map(_.getString(0)).filter(_ != null).toSet
+    val n = universe.size
+    val factors = for {
+      (attribute, rows) <- cells.filter(_.getString(1) != null)
+        .groupBy(_.getString(1)).toSeq
+      // r3: every cell pandas reads as missing is skipped, and nunique()
+      // does not count it. The cross-engine golden oracle (TEST_LARGE
+      // fixture: status = 'live' ×295 + 'nan' ×3) caught the variant that
+      // counted 'nan' and emitted sets the reference never produces.
+      byValue = rows.filter(r => isPresent(r.getString(2)))
+        .groupBy(_.getString(2))
+      // r2: constant or all-unique attributes carry no contrast
+      if byValue.size > 1 && byValue.size < n
+      (value, vRows) <- byValue
+      members = vRows.iterator.map(_.getString(0)).filter(_ != null).toSet
+      if members.size > 1 // r4: singleton factors
+    } yield {
+      // r5: store the minority side; include == the stored side IS the
+      // true side of the contrast
+      val include = members.size < n / 2.0
+      ((include, if (include) members else universe -- members),
+        Row(attribute.replace(';', ':'), value.replace(';', ':')))
+    }
+    // r6: identical membership vectors merge their labels
+    factors.groupBy(_._1).map { case ((include, stored), pairs) =>
+      Row(pairs.map(_._2), stored.toSeq, include, n)
+    }.toSeq
+  }
 }

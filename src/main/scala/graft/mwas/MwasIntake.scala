@@ -1,14 +1,12 @@
 package graft.mwas
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions.{col, to_json, xxhash64}
 
 import graft.etl.MetadataCondenser
 
 /** Shared intake for the two entry points (CLI and HTTP server): flag →
-  * config mapping and metadata → condensed-sets detection. One copy so
-  * the set_id formula and the flag surface cannot drift between them
-  * (r9 review — both were previously duplicated verbatim). */
+  * config mapping and metadata → condensed-sets detection, in one copy so
+  * the flag surface cannot drift between them. */
 object MwasIntake {
 
   /** Reference flag surface (main/mwas_general.py:713-741) to
@@ -26,13 +24,11 @@ object MwasIntake {
   }
 
   /** Metadata intake: pre-condensed sets pass through (older exports
-    * lacking the set_id get it re-derived with the condenser's own
-    * formula); long-form metadata is condensed on the fly. */
+    * lacking the set_id get it from [[MetadataCondenser.setId]]);
+    * long-form metadata is condensed on the fly. */
   def toSets(metadata: DataFrame): DataFrame =
     if (metadata.columns.contains("members")) {
       if (metadata.columns.contains("set_id")) metadata
-      else metadata.withColumn("set_id",
-        xxhash64(col("bioproject"), to_json(col("members")),
-          col("include")))
+      else metadata.withColumn("set_id", MetadataCondenser.setId)
     } else MetadataCondenser.condense(metadata)
 }

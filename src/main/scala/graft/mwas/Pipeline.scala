@@ -466,8 +466,10 @@ object Pipeline {
         val capped = nonzeros > cap
         val vals = bpVals && !capped
         if (sorted.map(_.getLong(3)).sum >= threshold) {
-          val allVals =
-            if (vals) rpm.filter(_ != 0).sorted else Array.empty[Double]
+          // primitive sort, same Double.compare order: `sorted` boxes through
+          // Sorting.stableSort, the largest JIT compile of a warm job
+          val allVals = if (vals) rpm.filter(_ != 0) else Array.empty[Double]
+          java.util.Arrays.sort(allVals)
           setRows.foreach { case (set, members, memberSet) =>
             val include = set.getBoolean(4)
             val nStored = set.getLong(3)
@@ -493,7 +495,8 @@ object Pipeline {
                   else bs.indices.collect {
                     case j if rpm(j) != 0 && memberSet.contains(bs(j)) =>
                       rpm(j)
-                  }.toArray.sorted
+                  }.toArray
+                java.util.Arrays.sort(storedVals)
                 out += Contrast(group, set.getString(0), set.getString(1),
                   members, include, numTrue, numFalse, meanT, meanF,
                   math.sqrt(math.max(sqT / numTrue - meanT * meanT, 0.0)),

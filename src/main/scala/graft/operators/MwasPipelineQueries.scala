@@ -332,12 +332,10 @@ object MwasPipelineQueries {
     * resampling kernel, so this is pure relational algebra end to end —
     * the statistic on the permutation route is the algebraic mean
     * difference, identical to what the kernel reports. */
-  // NOT checkpointing `sets` here (r17 A/B at the 10× fixture, VERDICT
-  // r16 item 5): the condenser checkpoint bought only ~0.5 s at 10×
-  // for stats/analyze while costing ~the same at sf0.1 per query (the
-  // materialization barrier vs overlapping re-scans — the r10/r16
-  // containment lesson again). pipelineTQuery's A/B went decisively
-  // the other way (13.5 → 7.2 s at 10×) and keeps its checkpoint.
+  // NOT checkpointing `sets` here or in pipelineTQuery: the condenser is
+  // one scan of the long relation, and a checkpoint of its output measured
+  // flat on a 4-core host (pipelineTQuery, median 2.52 vs 2.53 s at sf0.1
+  // and 7.52 vs 7.42 s at 10×, with/without).
   private def statBase(s: SparkSession, dir: String): DataFrame = {
     val sets = MetadataCondenser.condense(metadataLong(s, dir))
     Pipeline.run(input(s, dir), catalog(s, dir), sets,
@@ -564,14 +562,7 @@ object MwasPipelineQueries {
     * default config can't exercise at sf0.01 (where every side is large
     * enough to route to permutation). */
   def pipelineTQuery(s: SparkSession, dir: String): DataFrame = {
-    // condenser computed ONCE (r17 A/B at the 10× fixture: 13.5 → 7.2 s
-    // with the checkpoint, controls flat): the only-t-test config makes
-    // every contrast Welch-route, so the plan fans the sets relation
-    // out wider than the default pipeline and the 7 overlapping
-    // condenser re-derivations dominate past ~10×; the checkpointed
-    // relation is the small condensed output, not a base table
     val sets = MetadataCondenser.condense(metadataLong(s, dir))
-      .localCheckpoint(true)
     Pipeline.run(input(s, dir), catalog(s, dir), sets,
         MwasConfig(onlyTTest = true))
       .select(col("bioproject"), col("group"), col("metadata_field"),

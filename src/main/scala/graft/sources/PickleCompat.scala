@@ -8,6 +8,8 @@ import scala.collection.mutable
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.etl.MetadataCondenser
+
 /** S4 — one-time migration reader for the reference's on-disk corpus of
   * condensed-metadata pickles (~196k `<bioproject>.mwaspkl` files, written
   * by main/converter_.py:52-58 and read back at main/mwas_general.py:132-148).
@@ -465,7 +467,6 @@ object PickleCompat {
         size(col("members")).as("n_stored"),
         col("include"),
         col("n_biosamples"),
-        xxhash64(col("bioproject"), to_json(col("members")), col("include"))
-          .as("set_id"))
+        MetadataCondenser.setId.as("set_id"))
   }
 }

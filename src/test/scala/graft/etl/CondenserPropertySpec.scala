@@ -26,15 +26,17 @@ class CondenserPropertySpec extends Properties("MetadataCondenser") {
     rows.groupBy(_._1).flatMap { case (bp, bpRows) =>
       val universe = bpRows.map(_._2).distinct.sorted
       val n = universe.size
-      val byAttr = bpRows.groupBy(_._3)
+      // a null-attribute cell counts its biosample into the universe only
+      val byAttr = bpRows.filter(_._3 != null).groupBy(_._3)
+      // an empty cell (null) and the pandas NA literals ('nan', 'NA',
+      // 'None', …) are read-time missing values: excluded from nd (pandas
+      // nunique semantics), exactly as in the condenser's r2
       val na = MetadataCondenser.PandasNaValues.toSet
+      def missing(v: String) = v == null || na(v)
       val sets = byAttr.toSeq.flatMap { case (attr, aRows) =>
-        // pandas NA literals ('nan', 'NA', 'None', …) are read-time
-        // missing values: excluded from nd (pandas nunique semantics),
-        // exactly as in the condenser's r2
-        val nd = aRows.map(_._4).filterNot(na).distinct.size
+        val nd = aRows.map(_._4).filterNot(missing).distinct.size
         if (nd <= 1 || nd >= n) Nil // r2
-        else aRows.filterNot(r => na(r._4)) // r3
+        else aRows.filterNot(r => missing(r._4)) // r3
           .groupBy(_._4).toSeq.flatMap { case (value, vRows) =>
             val members = vRows.map(_._2).distinct.sorted
             if (members.size <= 1) Nil // r4
@@ -68,18 +70,31 @@ class CondenserPropertySpec extends Properties("MetadataCondenser") {
         nAttr <- Gen.choose(1, 3)
         vals <- Gen.sequence[Seq[Seq[String]], Seq[String]](
           (1 to nAttr).map { _ =>
-            Gen.listOfN(nBs,
-              Gen.oneOf("a", "b", "c", "nan", "None", "NA", "x;y", "x:y"))
+            // null: what an empty CSV cell melts to
+            Gen.listOfN(nBs, Gen.oneOf("a", "b", "c", "nan", "None", "NA",
+              "x;y", "x:y", null))
           })
-      } yield for {
+        // biosamples seen only on a null-attribute row
+        nNullAttr <- Gen.choose(0, 3)
+      } yield (for {
         (attrVals, ai) <- vals.zipWithIndex
         (v, bi) <- attrVals.zipWithIndex
-      } yield (s"bp$bp", s"bs$bi", s"attr$ai", v)
+      } yield (s"bp$bp", s"bs$bi", s"attr$ai", v)) ++
+        (nBs until nBs + nNullAttr).map(bi =>
+          (s"bp$bp", s"bs$bi", null: String, "q"))
     })
-  } yield rows.flatten
+    // a bioproject whose attributes r2 prunes whole: constant except
+    // missing cells, and all-unique
+    nPruned <- Gen.choose(2, 6)
+    pruned <- Gen.listOfN(nPruned, Gen.oneOf("k", "nan", null))
+  } yield rows.flatten ++ pruned.zipWithIndex.flatMap { case (v, bi) =>
+    Seq(("bpPruned", s"bs$bi", "const", v),
+      ("bpPruned", s"bs$bi", "uniq", s"u$bi"))
+  }
 
   property("matches the independent plain-Scala set-maker") =
-    Prop.forAll(genRows) { rows =>
+    // no shrinking: Shrink[String] cannot shrink the null cells
+    Prop.forAllNoShrink(genRows) { rows =>
       import spark.implicits._
       val long = rows.toDF("bioproject", "biosample_id", "attribute",
         "value")

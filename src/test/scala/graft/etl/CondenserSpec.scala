@@ -2,6 +2,7 @@ package graft.etl
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** §5.1 round-trip property (the reference's strongest oracle,
@@ -112,5 +113,39 @@ class CondenserSpec extends AnyFunSuite {
     assert(reconstructed.exceptAll(recoverable).isEmpty &&
       recoverable.exceptAll(reconstructed).isEmpty,
       "reconstructed cells must equal the recoverable original cells")
+  }
+
+  test("output schema, nullability included, is the sets schema " +
+      "callers rely on") {
+    import spark.implicits._
+    val long = Seq(("bp1", "s1", "a", "x"), ("bp1", "s2", "a", "x"),
+        ("bp1", "s3", "a", "y"), ("bp1", "s4", "a", "y"),
+        ("bp1", "s5", "a", "z"))
+      .toDF("bioproject", "biosample_id", "attribute", "value")
+    val sets = MetadataCondenser.condense(long)
+    def f(name: String, t: DataType, nullable: Boolean = false) =
+      StructField(name, t, nullable)
+    assert(sets.schema === StructType(Seq(
+      f("bioproject", StringType, nullable = true),
+      f("attributes", StringType), f("values", StringType),
+      f("members", ArrayType(StringType, containsNull = false)),
+      f("n_stored", IntegerType), f("include", BooleanType, nullable = true),
+      f("n_biosamples", IntegerType), f("set_id", LongType))))
+    assert(sets.count() === 2)
+  }
+
+  test("a biosample seen only on a null-attribute row is in the universe") {
+    import spark.implicits._
+    // s5's only cell has a null attribute: it belongs to no factor, but it
+    // counts into n_biosamples and lands on the complement side of 'x'
+    val long = Seq(("bp1", "s1", "a", "x"), ("bp1", "s2", "a", "x"),
+        ("bp1", "s3", "a", "x"), ("bp1", "s4", "a", "y"),
+        ("bp1", "s5", null, "z"))
+      .toDF("bioproject", "biosample_id", "attribute", "value")
+    val sets = MetadataCondenser.condense(long)
+      .select("attributes", "values", "members", "n_stored", "include",
+        "n_biosamples")
+      .as[(String, String, Seq[String], Int, Boolean, Int)].collect()
+    assert(sets.toSeq === Seq(("a", "x", Seq("s4", "s5"), 2, false, 5)))
   }
 }
