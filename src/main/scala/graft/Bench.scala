@@ -108,8 +108,8 @@ object Bench {
     // window inflates the control exactly as it inflates real queries,
     // so the control's median vs its own history band is a direct,
     // in-run measurement of "host weather" — the judge previously had to
-    // reconstruct this from BENCH_HISTORY by hand. q6_outer_join per the
-    // tools.Probe convention: untouched since round 1, sub-second, plan
+    // reconstruct this from BENCH_HISTORY by hand. q6_outer_join is the
+    // standing control query: untouched since round 1, sub-second, plan
     // long since frozen. Skipped for filtered local runs.
     val controlName = "q6_outer_join"
     val controlEvery = 20
@@ -133,10 +133,6 @@ object Bench {
         }
         name -> timeQuery(name, fn)
       }
-
-    // lower median: with 3 samples the middle one; robust to one stall
-    def median(ts: Vector[Double]): Double =
-      ts.sorted.apply((ts.length - 1) / 2)
 
     // Second-chance pass. The median absorbs a one-off stall, but a
     // SUSTAINED host-contention window (minutes long — observed on this
@@ -286,23 +282,23 @@ object Bench {
         "emb_pca_power,mwas_pipeline_full,dedup_components," +
           "triangle_count,ann_lsh_bucket,dedup_simhash").split(",").toSeq
         .filter(SparkEntry.queries.contains)
-      val rows = names.map { name =>
-        val ts = (1 to reps).map { _ =>
+      slopeFragment(sd, names.map { name =>
+        name -> (1 to reps).map { _ =>
           spark.catalog.clearCache()
           graft.operators.MwasPipelineQueries.evict()
           val t0 = System.nanoTime()
           // a slope failure is visible on stderr but must not disturb
           // the main surface's errors/exit contract
-          try SparkEntry.queries(name)(spark, sd)
-            .write.format("noop").mode("overwrite").save()
-          catch { case e: Throwable =>
+          try {
+            SparkEntry.queries(name)(spark, sd)
+              .write.format("noop").mode("overwrite").save()
+            Some((System.nanoTime() - t0) / 1e9)
+          } catch { case e: Throwable =>
             System.err.println(s"BENCH SLOPE FAIL $name: ${e.getMessage}")
+            None
           }
-          (System.nanoTime() - t0) / 1e9
-        }.toVector
-        "\"" + name + f"""\":${median(ts)}%.3f"""
-      }
-      s""","slope":{"dir":"$sd","queries":${rows.mkString("{", ",", "}")}}"""
+        }
+      })
     }.getOrElse("")
 
     // Full per-query detail (name-sorted, 3 decimals) goes to a file: the
@@ -367,5 +363,23 @@ object Bench {
     println(sb.toString)
     spark.stop()
     if (errors.nonEmpty) sys.exit(1)
+  }
+
+  // lower median: with 3 samples the middle one; robust to one stall
+  private def median(ts: Seq[Double]): Double =
+    ts.sorted.apply((ts.length - 1) / 2)
+
+  /** The slope leg's JSON fragment from each query's per-rep wall times
+    * (None: that rep failed). A failed rep's time-to-failure is not a
+    * run of the query, so a query with any failed rep gets no median: it
+    * leaves `queries` and is named in `errors` instead. */
+  private[graft] def slopeFragment(dir: String,
+      runs: Seq[(String, Seq[Option[Double]])]): String = {
+    val (failed, ok) = runs.partition(_._2.contains(None))
+    val rows = ok.map { case (name, ts) =>
+      "\"" + name + f"""\":${median(ts.flatten)}%.3f"""
+    }
+    val errs = failed.map("\"" + _._1 + "\"")
+    s""","slope":{"dir":"$dir","queries":${rows.mkString("{", ",", "}")},"errors":${errs.mkString("[", ",", "]")}}"""
   }
 }

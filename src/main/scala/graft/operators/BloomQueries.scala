@@ -27,7 +27,7 @@ import graft.core.Tables
   * bloom indexes, broadcast-bloom row filtering in Spark's own runtime
   * filtering) stated as an operator.
   *
-  * Measured ([[graft.operators.tools.BloomAb]], 10× fixture, broadcast
+  * Measured (NOTES_r11, bloom prefilter A/B, 10× fixture, broadcast
   * disabled on both arms to force the big-benchmark join strategy): the
   * sieve cuts semi-join shuffle volume 48% at the fixture's mere 9:1
   * probe:bench gram ratio — the reduction is proportional to that
@@ -94,14 +94,10 @@ object BloomQueries {
     bos.toByteArray
   }
 
-  /** Shared builder: the decontamination relation with the bloom
-    * prefilter and the broadcast hint independently switchable — the
-    * registry query is (bloom, hint) = (true, true); `tools.BloomAb`
-    * measures the (exact vs bloom) pair with the hint OFF, which is the
-    * beyond-broadcast regime where the bloom is the difference between
-    * shuffling every corpus gram and shuffling only the survivors. */
-  private[graft] def decontaminate(s: SparkSession, dir: String,
-      useBloom: Boolean, hintBroadcast: Boolean = true): DataFrame = {
+  /** The decontamination relation: bloom prefilter, then an exact semi
+    * join against the broadcast benchmark grams (the measured trade is
+    * in the object doc above). */
+  def bloomDecontaminate(s: SparkSession, dir: String): DataFrame = {
     val d = Tables(s, dir, "documents")
     val bench = benchGrams(d)
     val probe = probeGrams(d)
@@ -109,12 +105,9 @@ object BloomQueries {
     val totals = probe.groupBy(col("doc_id")).agg(count(lit(1)).as("n_grams"))
     // the bloom rejects ~99% of clean grams BEFORE the join; the exact
     // semi join then removes the false positives, so n_hit is exact
-    val sieved =
-      if (!useBloom) probe
-      else probe.filter(
-        mightContain(sketchBytes(bench, capacityBound(d)), col("gh")))
-    val benchSide = if (hintBroadcast) broadcast(bench) else bench
-    val hits = sieved.join(benchSide, Seq("gh"), "left_semi")
+    val sieved = probe.filter(
+      mightContain(sketchBytes(bench, capacityBound(d)), col("gh")))
+    val hits = sieved.join(broadcast(bench), Seq("gh"), "left_semi")
       .groupBy(col("doc_id")).agg(count(lit(1)).as("n_hit"))
     totals.join(hits, Seq("doc_id"), "left_outer")
       .na.fill(Map("n_hit" -> 0L))
@@ -124,9 +117,6 @@ object BloomQueries {
       .withColumn("contaminated", col("overlap") >= 0.2)
       .orderBy(col("doc_id"))
   }
-
-  def bloomDecontaminate(s: SparkSession, dir: String): DataFrame =
-    decontaminate(s, dir, useBloom = true)
 
   /** Streaming (ingest-time) decontamination — the shape a production
     * crawl actually runs: the benchmark suite is SLOWLY-CHANGING (its

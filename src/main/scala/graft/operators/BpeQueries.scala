@@ -53,10 +53,9 @@ object BpeQueries {
     * O(rounds²) lineage recomputes, harmless at rounds=3 but the known
     * killer at real merge counts; the connected-components precedent).
     * The checkpointed relation is vocab-sized, so the materialization
-    * cost per round is negligible. `checkpointEachRound=false` exists
-    * only for the measurement arm (tools.BpeRoundsAb). */
-  private[operators] def train(s: SparkSession, dir: String,
-      nRounds: Int = rounds, checkpointEachRound: Boolean = true)
+    * cost per round is negligible; the per-round checkpoint A/B is
+    * recorded in NOTES_r12. */
+  private[operators] def train(s: SparkSession, dir: String)
       : (DataFrame, Seq[(Int, String, String, String, Long)]) = {
     var state = Tables(s, dir, "documents")
       .select(explode(split(col("text"), " ")).as("word"))
@@ -65,9 +64,9 @@ object BpeQueries {
       .withColumn("str", concat_ws("",
         expr("transform(sequence(1, length(word)), " +
           "i -> concat('<', substr(word, i, 1), '>'))")))
-    if (checkpointEachRound) state = state.localCheckpoint(true)
+      .localCheckpoint(true)
     val merges = Seq.newBuilder[(Int, String, String, String, Long)]
-    for (r <- 1 to nRounds) {
+    for (r <- 1 to rounds) {
       val syms = state
         .withColumn("syms",
           split(expr("substr(str, 2, length(str) - 2)"), "><"))
@@ -89,7 +88,7 @@ object BpeQueries {
         regexp_replace(col("str"),
           java.util.regex.Pattern.quote(s"<$l><$rr>"),
           java.util.regex.Matcher.quoteReplacement(s"<$l$rr>")))
-      if (checkpointEachRound) state = state.localCheckpoint(true)
+        .localCheckpoint(true)
     }
     (state, merges.result())
   }

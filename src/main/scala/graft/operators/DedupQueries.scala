@@ -107,7 +107,7 @@ object DedupQueries {
    * word-relation plan from the last value-bearing consumer; the exact
    * inclusion–exclusion arm ([[jaccardPairs]]) stays as the oracle
    * formulation, the property-spec brute force's subject, and the
-   * batch-bounded engine of jaccardPairsTo / jaccardPairsStore.
+   * batch-bounded engine of jaccardPairsTo.
    * Band-miss waiver recorded at the registration. */
   def dedupJaccardPairs(s: SparkSession, dir: String): DataFrame =
     bandedWordPairsJ(docs(s, dir)
@@ -304,8 +304,13 @@ object DedupQueries {
     * a corpus where ≥ a quarter of the docs collapse pays the
     * contraction. The routing is PHYSICAL ONLY — both arms compute the
     * identical pair relation (spec-pinned on a dup-heavy corpus), so no
-    * oracle surface changes; the estimator's ±2% HLL error can only
-    * move the cutover point, never a result. */
+    * oracle surface changes; the estimator's HLL error
+    * (`approx_count_distinct` at its default rsd of 0.05) can only move
+    * the cutover point, never a result. */
+  /* The gate's price: one extra job per call, a narrow HLL aggregate
+   * over `whs` that also recomputes `d` and the per-doc word hashing
+   * when the caller has not materialized `d`. Both arms pay it; its
+   * cost is unmeasured. */
   private[operators] val contractionDupMassGate = 0.25
 
   private[operators] def bandedWordPairsJ(d: DataFrame): DataFrame = {
@@ -403,22 +408,6 @@ object DedupQueries {
       .select(col("x.doc_id").as("u"), col("y.doc_id").as("v"))
       .distinct()
   }
-
-  /** Store-probe variant: exact J ≥ 0.7 pairs between the docs of
-    * `probeWords` (a (source, doc_id, word) relation whose docs must
-    * already be IN `store` — the caller has it in hand, so re-deriving
-    * it by semi-joining the store would pay a full store scan per
-    * trigger for nothing) and ANY doc in the accumulated store,
-    * normalized unordered. Threshold and length prefilter single-sourced
-    * through [[jaccardJoin]], so the relation is exactly the subset of
-    * the batch pair relation touching the probe docs — which is what
-    * makes the streaming CC twin's per-trigger edge discovery EXACT. */
-  private[operators] def jaccardPairsStore(store: DataFrame,
-      probeWords: DataFrame): DataFrame =
-    jaccardJoin(store, probeWords, _ =!= _)
-      .select(least(col("doc_l"), col("doc_r")).as("u"),
-        greatest(col("doc_l"), col("doc_r")).as("v"))
-      .distinct()
 
   val dedupJaccardPairsSql: String =
     """WITH w AS (SELECT doc_id, source,
@@ -1229,7 +1218,7 @@ object DedupQueries {
     // buffer silently demoted the whole aggregate (count included) to
     // SortAggregate over the candidate fan-out (r15 audit). The merged
     // agg still combines map-side before its one shuffle (the r9
-    // row_number-window replacement, tools.LshProfile).
+    // row_number-window replacement, NOTES_r9).
     val top = cand.groupBy(col("vec_id"))
       .agg(count(lit(1)).as("n_candidates"),
         graft.functions.ArgMax.arg_max_tiebreak(col("cos"), col("nn_id"))
@@ -1382,17 +1371,16 @@ object DedupQueries {
     * absent — callers left-join and coalesce). Shared by the text and
     * embedding clustering operators; the pair SOURCE is the pluggable
     * part, the contraction is identical. */
-  /* `roundsPerCheck` batches star-round composites between convergence
-   * checks. SHIPPED DEFAULT IS 1: `tools.ComponentsAb` measured
-   * check-every-2 SLOWER at sf0.1 (6.72 vs 5.48 s median-of-5, flat
-   * control) — the fixpoint is reached in few composites here, and the
-   * unavoidable wasted composite past it (two shuffled aggregations +
+  /* One star-round composite per convergence check. Checking every 2
+   * composites measured SLOWER at sf0.1 (6.72 vs 5.48 s median-of-5,
+   * flat control; NOTES_r10): the fixpoint is reached in few composites
+   * here, and the wasted composite past it (two shuffled aggregations +
    * joins over the full edge set) costs more than the halved
-   * checkpoint+signature barriers save. The lever would flip on graphs
+   * checkpoint+signature barriers save. The trade would flip on graphs
    * deep enough that barrier overhead dominates (many rounds, small
-   * per-round delta); it stays parameterized for that case. */
-  private[operators] def connectedComponents(edges0: DataFrame,
-      roundsPerCheck: Int = 1): DataFrame = {
+   * per-round delta). */
+  private[operators] def connectedComponents(edges0: DataFrame)
+      : DataFrame = {
     // large-star: every neighbor v > u re-points to m = min(Γ(u) ∪ {u})
     def largeStar(e: DataFrame): DataFrame = {
       val sym = e.union(e.select(col("v").as("u"), col("u").as("v")))
@@ -1426,9 +1414,7 @@ object DedupQueries {
     var converged = false
     var rounds = 0
     while (!converged && rounds < 20) { // log2(n) bound; 20 ≫ any real depth
-      val composed = (1 to roundsPerCheck)
-        .foldLeft(edges)((e, _) => smallStar(largeStar(e)))
-      val next = composed.localCheckpoint(true)
+      val next = smallStar(largeStar(edges)).localCheckpoint(true)
       val sig = signature(next)
       converged = sig == prevSig
       prevSig = sig
@@ -1745,7 +1731,7 @@ object DedupQueries {
     * single-pass. The groupBy-argmax + join-back alternative duplicates
     * that whole subtree under both join branches (Catalyst does not
     * reuse common subplans — its formatted plan showed the corpus read
-    * and scored twice); `tools.CanonicalAb` measured the window form
+    * and scored twice); the r10 A/B (NOTES_r10) measured the window form
     * 11% faster at sf0.1 and 15% at the 10× stress fixture with
     * result-set equality gated, and the gap grows with corpus size
     * since the duplicated work IS the corpus pass. (Not the r9 ANN

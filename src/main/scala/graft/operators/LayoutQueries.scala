@@ -60,9 +60,9 @@ object LayoutQueries {
   /** Append bucketization + Morton-code columns (`bx`, `by`, `z`) to a
     * relation carrying long `pk`/`sk` columns: one scalar-aggregate
     * bounds prologue broadcast into the scan, then pure map-side integer
-    * arithmetic. Shared by the oracled stats query and the write-path
-    * pruning A/B ([[graft.operators.tools.LayoutAb]]). */
-  private[graft] def withZ(li: DataFrame): DataFrame = {
+    * arithmetic. The scan pruning a z-ordered write buys is measured in
+    * NOTES_r11. */
+  private def withZ(li: DataFrame): DataFrame = {
     // `div` (integral division) — `/` on longs is double division in
     // both engines and floor()ing it can mis-bucket when the quotient
     // rounds up across an integer boundary

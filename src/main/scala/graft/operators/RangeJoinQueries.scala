@@ -28,7 +28,7 @@ import graft.core.Events
   * their levers: bin width trades replication against candidate
   * density (set it near the median interval span); a hot bin (flash
   * crowd) is a skewed equi-join key, and the lever hierarchy was
-  * MEASURED, not assumed (tools.RangeSkewAb: 1M events with HALF inside
+  * MEASURED, not assumed (NOTES_r12 skew lab: 1M events with HALF inside
   * one hour, broadcast disabled to force the shuffle-join regime):
   * explicit 16-way salting (points keep one salt, intervals replicate)
   * runs the hot-key join in 13.2 s stable, while AQE's skew-join split
@@ -36,13 +36,13 @@ import graft.core.Events
   * than skew-split-off (77 s median). When one KEY carries half of both
   * sides, partition-splitting is not enough; salt first, keep AQE for
   * the partition-level imbalance it is built for. Throughput measured
-  * (tools.RangeJoinAb, local[32], order-balanced
+  * (NOTES_r12 range-join A/B, local[32], order-balanced
   * medians, full-output noop consumption): sf0.1 events (100k) naive
   * 16.91 s / binned 2.37 s = 7.1×; 10× (1M events, 950k intervals)
   * naive 526 s first rep → DNF at the 300 s cap / binned 4.75 s
   * (>110×); 30× (3M events) binned 7.18 s, naive skipped (unrunnable,
   * ~9× its 10× cost); 100× (10M events) binned 69.2 s. The decade table
-  * is attributed, not guessed (tools.SumCheck): TRUE qualifying pairs
+  * is attributed, not guessed (NOTES_r12): TRUE qualifying pairs
   * are 3.17M → 28.3M → 331M across 10×/30×/100× — the genev direction
   * grows users, so instantaneous concurrency (and with it the answer's
   * own size) grows ~quadratically — and binned wall tracks that

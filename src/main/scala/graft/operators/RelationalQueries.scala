@@ -70,7 +70,7 @@ object RelationalQueries {
     * summation-order-independent on both engines, and identical to the
     * r8 DECIMAL sum it replaces (same mathematical value, same final
     * double; the r9 A/B measured the decimal agg at 2.0× the long one,
-    * tools/DecimalAb — decimal leaves the codegen long fast path).
+    * NOTES_r9 — decimal leaves the codegen long fast path).
     * The naive DOUBLE sum is neither: it drifted ~3e-7 between Spark's
     * partial aggs and DuckDB at sf0.01 — harmless until it straddles a
     * compare grid (bucketed_join hit that at sf0.1). Per-group overflow

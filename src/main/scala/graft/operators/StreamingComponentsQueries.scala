@@ -141,7 +141,7 @@ object StreamingComponentsQueries {
     * mapping is scanned, never shuffled or broadcast, for the rewrite;
     * every broadcast is ∝ batch. (Callers hand in a MATERIALIZED
     * newPairs — streamComponents writes/reads the per-trigger pair
-    * relation, StreamCcProbe localCheckpoints it — because it is
+    * relation, streamPhashDedup localCheckpoints it — because it is
     * referenced three times here and would otherwise recompute the
     * probe join per reference.) */
   private[operators] def advanceMapping(prev: DataFrame,
@@ -165,14 +165,6 @@ object StreamingComponentsQueries {
       .distinct()
     DedupQueries.connectedComponents(prev.unionByName(bridges))
   }
-
-  /** Probe-tool aliases ([[graft.operators.tools.StreamCcProbe]]). */
-  private[operators] def signatureRowsForProbe(batch: DataFrame): DataFrame =
-    signatureRows(batch)
-  private[operators] def probePairsForProbe(store: DataFrame,
-      bsig: DataFrame): DataFrame = probePairs(store, bsig)
-  private[operators] def advanceMappingForProbe(prev: DataFrame,
-      newPairs: DataFrame): DataFrame = advanceMapping(prev, newPairs)
 
   def streamComponents(s: SparkSession, dir: String): DataFrame = {
     val d = DedupQueries.docs(s, dir)

@@ -133,7 +133,7 @@ object StreamingPhashQueries {
         // recomputable from the idempotent store; re-contracting with
         // the same pairs is the identity, so replay is safe)
         mapping = Some(StreamingComponentsQueries
-          .advanceMappingForProbe(prev, newPairs))
+          .advanceMapping(prev, newPairs))
       }
       ()
     }.trigger(Trigger.AvailableNow()).start()

@@ -107,6 +107,42 @@ object StressFixture {
     println(s"[stress] wrote $nd docs, $nv vectors to $outDir")
   }
 
+  /** Key shift strides: 10⁷ for order and doc ids, 10⁶ for customer and
+    * part keys, 10⁵ for supplier keys. */
+  private val strides = Map(
+    "doc_id" -> 10000000L, "o_orderkey" -> 10000000L,
+    "l_orderkey" -> 10000000L, "c_custkey" -> 1000000L,
+    "o_custkey" -> 1000000L, "p_partkey" -> 1000000L,
+    "l_partkey" -> 1000000L, "s_suppkey" -> 100000L,
+    "l_suppkey" -> 100000L)
+
+  /** `mult` copies of `base`'s `table`, written to `outDir`: copy i moves
+    * each `shifted` key column up by i × its stride. The copies are
+    * key-disjoint only while every shifted column's base keys lie in
+    * [0, stride), so that is required before anything is written. */
+  private[tools] def replicate(spark: SparkSession, base: String,
+      outDir: String, table: String, mult: Int, shifted: String*): Unit = {
+    val src = spark.read.parquet(s"$base/$table.parquet")
+    val bounds = src.select(shifted.flatMap(c =>
+      Seq(min(col(c)), max(col(c))).map(_.cast("long"))): _*).head()
+    shifted.zipWithIndex.foreach { case (c, i) =>
+      if (!bounds.isNullAt(2 * i)) {
+        val (lo, hi) = (bounds.getLong(2 * i), bounds.getLong(2 * i + 1))
+        require(lo >= 0 && hi < strides(c),
+          s"$table.$c spans [$lo, $hi], outside [0, ${strides(c)}): " +
+            "its shifted copies would collide")
+      }
+    }
+    (0 until mult).map { i =>
+      src.select(src.columns.map { c =>
+        if (shifted.contains(c)) (col(c) + lit(i * strides(c))).as(c)
+        else col(c)
+      }: _*)
+    }.reduce(_ union _)
+      .write.mode(SaveMode.Overwrite).parquet(s"$outDir/$table.parquet")
+    println(s"[stress] wrote ${mult}x $table to $outDir")
+  }
+
   /** `gendup <outDir> [mult]`: the DUPLICATE-HEAVY corpus class (VERDICT
     * r16 item 3's fixture): sf0.1's documents replicated mult× with a
     * doc_id shift and UNCHANGED text, so every doc sits in an
@@ -116,11 +152,7 @@ object StressFixture {
     * Embeddings ride along 1× so the registry loads. */
   private def genDup(spark: SparkSession, outDir: String, mult: Int): Unit = {
     val base = "/root/testdata/sf0.1"
-    val src = spark.read.parquet(s"$base/documents.parquet")
-    (0 until mult).map { i =>
-      src.withColumn("doc_id", col("doc_id") + lit(i * 10000000L))
-    }.reduce(_ union _)
-      .write.mode(SaveMode.Overwrite).parquet(s"$outDir/documents.parquet")
+    replicate(spark, base, outDir, "documents", mult, "doc_id")
     spark.read.parquet(s"$base/embeddings.parquet")
       .write.mode(SaveMode.Overwrite).parquet(s"$outDir/embeddings.parquet")
     val n = spark.read.parquet(s"$outDir/documents.parquet").count()
@@ -137,23 +169,11 @@ object StressFixture {
     * scale direction the staging trade depends on. */
   private def genRel(spark: SparkSession, outDir: String, mult: Int): Unit = {
     val base = "/root/testdata/sf0.1"
-    def replicate(table: String, shifts: Map[String, Long]): Unit = {
-      val src = spark.read.parquet(s"$base/$table.parquet")
-      val copies = (0 until mult).map { i =>
-        src.select(src.columns.map { c =>
-          shifts.get(c) match {
-            case Some(off) => (col(c) + lit(i * off)).as(c)
-            case None      => col(c)
-          }
-        }: _*)
-      }.reduce(_ union _)
-      copies.write.mode(SaveMode.Overwrite).parquet(s"$outDir/$table.parquet")
-      println(s"[stress] wrote ${mult}x $table to $outDir")
-    }
-    replicate("orders",
-      Map("o_orderkey" -> 10000000L, "o_custkey" -> 1000000L))
-    replicate("lineitem", Map("l_orderkey" -> 10000000L))
-    replicate("customer", Map("c_custkey" -> 1000000L))
+    def rep(table: String, shifted: String*): Unit =
+      replicate(spark, base, outDir, table, mult, shifted: _*)
+    rep("orders", "o_orderkey", "o_custkey")
+    rep("lineitem", "l_orderkey")
+    rep("customer", "c_custkey")
   }
 
   /** `genall <outDir> [mult] [vocabMult]`: the COMPLETE mult× fixture
@@ -174,31 +194,18 @@ object StressFixture {
   private def genAll(spark: SparkSession, outDir: String, mult: Int,
       vocabMult: Int): Unit = {
     val base = "/root/testdata/sf0.1"
-    def replicate(table: String, shifts: Map[String, Long]): Unit = {
-      val src = spark.read.parquet(s"$base/$table.parquet")
-      val copies = (0 until mult).map { i =>
-        src.select(src.columns.map { c =>
-          shifts.get(c) match {
-            case Some(off) => (col(c) + lit(i * off)).as(c)
-            case None      => col(c)
-          }
-        }: _*)
-      }.reduce(_ union _)
-      copies.write.mode(SaveMode.Overwrite).parquet(s"$outDir/$table.parquet")
-      println(s"[stress] wrote ${mult}x $table to $outDir")
-    }
+    def rep(table: String, shifted: String*): Unit =
+      replicate(spark, base, outDir, table, mult, shifted: _*)
     Seq("region", "nation").foreach { t =>
       spark.read.parquet(s"$base/$t.parquet")
         .write.mode(SaveMode.Overwrite).parquet(s"$outDir/$t.parquet")
       println(s"[stress] copied 1x $t to $outDir (fixed dim)")
     }
-    replicate("customer", Map("c_custkey" -> 1000000L))
-    replicate("supplier", Map("s_suppkey" -> 100000L))
-    replicate("part", Map("p_partkey" -> 1000000L))
-    replicate("orders",
-      Map("o_orderkey" -> 10000000L, "o_custkey" -> 1000000L))
-    replicate("lineitem", Map("l_orderkey" -> 10000000L,
-      "l_partkey" -> 1000000L, "l_suppkey" -> 100000L))
+    rep("customer", "c_custkey")
+    rep("supplier", "s_suppkey")
+    rep("part", "p_partkey")
+    rep("orders", "o_orderkey", "o_custkey")
+    rep("lineitem", "l_orderkey", "l_partkey", "l_suppkey")
     genEvents(spark, outDir, mult)
     gen(spark, outDir, mult, vocabMult)
   }

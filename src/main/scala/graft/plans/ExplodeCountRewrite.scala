@@ -23,7 +23,7 @@ import org.apache.spark.sql.types.{ArrayType, LongType}
   * number as ONE per-row header read: the rewrite turns |elements| rows
   * of aggregate input into |rows|, with the same exchange (the grouping
   * keys are untouched). Measured 1.75× on a 4k-element-array fixture
-  * (tools.ExplodeCountAb, order-balanced). COMPUTED arrays
+  * (NOTES_r12, order-balanced A/B). COMPUTED arrays
   * (`explode(split(text))`) are deliberately out of scope — see the
   * matcher's scope note.
   *
@@ -117,8 +117,8 @@ object ExplodeCountRewrite extends Rule[LogicalPlan] {
       * rewrite re-evaluates the computation in a branch the local match
       * cannot see past: standalone word counts won ~1.2×, but the
       * engine's real gram-counting pipelines (dedup_jaccard_pairs,
-      * dedup_containment, bloom_decontaminate — tools.ExplodeRuleAb,
-      * order-balanced) paid +5–8% because the same text feeds sibling
+      * dedup_containment, bloom_decontaminate — NOTES_r12,
+      * order-balanced A/B) paid +5–8% because the same text feeds sibling
       * branches. Computed arrays are therefore left to the explode
       * plan the author wrote. */
     def unapply(g: Generate): Option[(Expression, LogicalPlan)] = g match {
@@ -152,9 +152,9 @@ object ExplodeCountRewrite extends Rule[LogicalPlan] {
     }
   }
 
-  /** Session kill-switch (the standard rule hygiene — also what lets
-    * tools.ExplodeRuleAb measure the rule against the SAME session with
-    * every other extension installed). */
+  /** Session kill-switch (the standard rule hygiene — it lets the rule
+    * be measured against the SAME session with every other extension
+    * installed, as the NOTES_r12 A/B did). */
   val EnabledKey = "spark.graft.explodeCountRewrite.enabled"
 
   override def apply(plan: LogicalPlan): LogicalPlan =

@@ -16,7 +16,7 @@ import org.apache.spark.sql.graft.bridge
   * account of what Spark 4 already does: the stock
   * `row_number() OVER (PARTITION BY g ORDER BY o) <= k` spelling gets
   * Spark's own WindowGroupLimit rewrite, which also bounds the
-  * exchange (measured in `tools.TopKAb`: byte-identical shuffle record
+  * exchange (measured in the NOTES_r12 A/B: byte-identical shuffle record
   * counts for both arms). What the stock path still pays is TWO full
   * per-partition sorts — WindowGroupLimitExec sorts its input below
   * AND above the exchange, O(n log n) each — where [[TopKExec]] keeps

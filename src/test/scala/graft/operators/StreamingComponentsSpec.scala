@@ -28,8 +28,8 @@ class StreamingComponentsSpec extends AnyFunSuite {
     import org.apache.spark.sql.functions._
     val docs = DedupQueries.docs(spark, dir)
       .select(col("doc_id"), col("source"), col("text"))
-    val sig1 = StreamingComponentsQueries.signatureRowsForProbe(docs)
-    val sig2 = StreamingComponentsQueries.signatureRowsForProbe(docs)
+    val sig1 = StreamingComponentsQueries.signatureRows(docs)
+    val sig2 = StreamingComponentsQueries.signatureRows(docs)
     // determinism: same input → bit-identical band arrays (replay safety)
     assert(sig1.select(col("doc_id"), col("bands"))
       .except(sig2.select(col("doc_id"), col("bands"))).isEmpty)
@@ -46,7 +46,7 @@ class StreamingComponentsSpec extends AnyFunSuite {
     // land exactly on the batch pair relation, unordered — banding plus
     // exact verify is a refinement proof at this fixture
     val streamed = StreamingComponentsQueries
-      .probePairsForProbe(sig1, sig1)
+      .probePairs(sig1, sig1)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     val batchPairs = DedupQueries.dedupJaccardPairs(spark, dir)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
