@@ -325,15 +325,9 @@ object Bench {
     val fw = new java.io.PrintWriter("BENCH_FULL.json", "UTF-8")
     try fw.println(fullLine) finally fw.close()
     // append-only per-run history: spikes become machine-detectable by
-    // comparing a query's new median against its own past lines (the
-    // driver's BENCH_r{N}.json keeps only each round's truncated tail).
-    // An all-errored run has nothing to compare against later — and its
-    // empty queries map would trip BenchDiff's malformed-line guard on
-    // every future run — so it is NOT appended (the failure is still
-    // fully visible via BENCH_FULL.json, stderr, and exit 1)
-    // a PROFILED run (different partitioning) must not enter the history
-    // its own comparability note says is pinned to the hand-set width
-    if (measured.nonEmpty && sys.env.get("SPARK_GRAFT_PROFILE").isEmpty) {
+    // comparing a query's new median against its own past lines (a
+    // round's BENCH_r{N}.json keeps only its truncated tail)
+    if (appendsHistory(measured.nonEmpty, sys.env)) {
       val hw = new java.io.FileWriter("BENCH_HISTORY.jsonl", true)
       try hw.write(fullLine + "\n") finally hw.close()
     }
@@ -364,6 +358,21 @@ object Bench {
     spark.stop()
     if (errors.nonEmpty) sys.exit(1)
   }
+
+  /** Whether a run's full line enters BENCH_HISTORY.jsonl. Not when
+    *   - every query errored: nothing to compare against later, and the
+    *     empty queries map would trip BenchDiff's malformed-line guard
+    *     on every future run (the failure is still fully visible via
+    *     BENCH_FULL.json, stderr, and exit 1);
+    *   - the run is PROFILED (`SPARK_GRAFT_PROFILE`): a different
+    *     partitioning than the hand-set width the history is pinned to;
+    *   - the run is FILTERED (`SPARK_GRAFT_BENCH_ONLY`): a partial line
+    *     that the best-history-median rerun and BenchDiff would read as
+    *     a whole-surface run. */
+  private[graft] def appendsHistory(anyMeasured: Boolean,
+      env: Map[String, String]): Boolean =
+    anyMeasured && !env.contains("SPARK_GRAFT_PROFILE") &&
+      !env.contains("SPARK_GRAFT_BENCH_ONLY")
 
   // lower median: with 3 samples the middle one; robust to one stall
   private def median(ts: Seq[Double]): Double =

@@ -28,15 +28,7 @@ import graft.sources.CsvIo
   */
 object MwasCli {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER",
-        s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")}]"))
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .appName("mwas")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = MwasIntake.session("mwas")
     try run(spark, args) finally spark.stop()
   }
 

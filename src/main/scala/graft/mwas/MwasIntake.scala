@@ -1,6 +1,6 @@
 package graft.mwas
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 import graft.etl.MetadataCondenser
 
@@ -8,6 +8,21 @@ import graft.etl.MetadataCondenser
   * config mapping and metadata → condensed-sets detection, in one copy so
   * the flag surface cannot drift between them. */
 object MwasIntake {
+
+  /** The entry points' session: `SPARK_MASTER` (default
+    * `local[SPARK_GRAFT_CPUS]`, 4 cores when unset), shuffle width
+    * `SPARK_GRAFT_CPUS`, UTC session time zone, WARN logging. */
+  def session(appName: String): SparkSession = {
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val spark = SparkSession.builder()
+      .master(sys.env.getOrElse("SPARK_MASTER", s"local[$cpus]"))
+      .config("spark.sql.shuffle.partitions", cpus)
+      .config("spark.sql.session.timeZone", "UTC")
+      .appName(appName)
+      .getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    spark
+  }
 
   /** Reference flag surface (main/mwas_general.py:713-741) to
     * [[MwasConfig]]. Entry-point-local flags (e.g. --no-combined) are

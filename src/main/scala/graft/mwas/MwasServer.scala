@@ -95,13 +95,7 @@ object MwasServer {
     require(args.length >= 2,
       "usage: MwasServer <catalog.parquet> <metadata> [port]")
     val port = if (args.length > 2) args(2).toInt else 8080
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER",
-        s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")}]"))
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
-      .appName("mwas-server")
-      .getOrCreate()
+    val spark = MwasIntake.session("mwas-server")
     val catalog = spark.read.parquet(args(0))
     val sets = MwasIntake.toSets(spark.read.parquet(args(1)))
     val server = start(spark, catalog, sets, port)

@@ -31,7 +31,6 @@ case class MwasConfig(
     pValueThreshold: Double = 0.005, // P_VALUE_THRESHOLD :85
     onlyTTest: Boolean = false, // ONLY_T_TEST :86
     alreadyNormalized: Boolean = false, // ALREADY_NORMALIZED :84
-    implicitZeros: Boolean = true, // IMPLICIT_ZEROS :81
     permutationSideCutoff: Int = 4, // min-side size routing :407
     biosampleListCap: Int = 1000, // truncated listing :428-430
     permResamples: Int = 10000, // n_resamples :416
@@ -49,23 +48,7 @@ case class MwasConfig(
     // p-value needs resampling — so value collection and the kernel are
     // skipped wholesale and the plan stays pure relational algebra.
     // p_value is null (and status says so) on permutation-routed rows.
-    statClosedForm: Boolean = false,
-    // opt-in delta-driven readout for incrementalTrigger: restrict the
-    // per-trigger readout to CHANGED bioprojects and carry unchanged
-    // prior rows. Default OFF after measurement (r14, on the join-based
-    // readout): at every locally reachable scale the readout was
-    // plan-overhead-bound (~3 s fixed vs ~5% data term at 550k state
-    // rows), so the delta arm's extra jobs cost more than the restriction
-    // saved (10-trigger bplocal: 59.7 vs 42.3 s; NOTES_r14).
-    // The positive regime was MEASURED, not argued (r15, on the genrel
-    // 100× fixture, 5.5M state rows,
-    // 1-of-20 bioprojects changed): restricted readout 5.92 s vs full
-    // 13.68 s — 2.3× in the delta arm's favor once the data term
-    // dominates the fixed cost. Both sides of the crossover are now
-    // measurement (NOTES_r15). Parity is measured, not assumed:
-    // row-identical, floats within 5.7e-12 (reassociation only — the
-    // profcompare standard).
-    deltaReadout: Boolean = false)
+    statClosedForm: Boolean = false)
 
 /** The MWAS query engine: the reference's run_on_file + process_bioproject +
   * process_group call tree (main/mwas_general.py:344-679) collapsed into ONE
@@ -177,80 +160,26 @@ object Pipeline {
 
   /** One incremental trigger step of the registry's `stream_mwas`.
     * Merges the batch's biosample-grain delta into `state`, then produces
-    * the new full result.
-    *
-    * The readout is full-recompute by default and DELTA-DRIVEN on
-    * opt-in (`cfg.deltaReadout` + update locality: 2·|changed| <
-    * |universe|): every readout key carries bio_project (bioprojects
-    * are statistically independent by construction), so a bioproject
-    * absent from this batch's delta cannot change a single output row —
-    * the readout then runs only over the changed bioprojects' restricted
-    * state and dims, unioned with the unchanged bioprojects' prior rows.
-    * VERDICT r13 item 2 asked for this shape with a measured wall drop;
-    * on the join-based readout the measurement came back NEGATIVE at
-    * every locally reachable scale (NOTES_r14): a single 550k-row-state
-    * readout was 2.96 s full vs 2.80 s restricted-to-2-of-20-bioprojects
-    * — ~95% plan/stage fixed cost at local SFs — and the delta arm's
-    * extra per-trigger jobs cost more than the restriction saved
-    * (10-trigger bplocal at 10×: 59.7 s vs 42.3 s). The flag is for the
-    * regime the asymptotics favor — state large enough that the
-    * readout's DATA term dominates its fixed term, where per-trigger
-    * work drops to O(changed) (NOTES_r15: 5.92 s vs 13.68 s at 5.5M
-    * state rows). Parity of the delta arm: row-identical, floats within
-    * 5.7e-12 of the full recompute (reassociation only — the profcompare
-    * standard).
+    * the new full result: the readout recomputes over the merged state
+    * every trigger. (A delta-driven readout, restricted to the changed
+    * bioprojects, was measured on the join-based readout and retired
+    * unused: NOTES_r14, NOTES_r15.)
     * Reference analogue: the block loop re-running every bioproject per
     * chunk (main/mwas_general.py:601-614).
     *
-    * Both returned frames are eager localCheckpoints: state and results
-    * are long-lived across triggers, so the lineage must be cut (the
-    * BPE/PCA per-round precedent) and the carried rows must not be
-    * re-derived from a parquet dir that the next trigger overwrites.
+    * The returned state is an eager localCheckpoint: it is long-lived
+    * across triggers, so the lineage must be cut (the BPE/PCA per-round
+    * precedent) and the carried rows must not be re-derived from a
+    * parquet dir that the next trigger overwrites.
     *
-    * @param nUniverse  |catalog bioproject universe| — computed once per
-    *                   stream (a count on [[dims]].bpUniverse)
     * @return (new state, new full results) */
   def incrementalTrigger(batch: DataFrame, catalog: DataFrame,
       sets: DataFrame, cfg: MwasConfig, pdims: PipelineDims,
-      nUniverse: Long, state: Option[DataFrame],
-      results: Option[DataFrame]): (DataFrame, DataFrame) = {
+      state: Option[DataFrame]): (DataFrame, DataFrame) = {
     val delta = biosampleState(batch, catalog, cfg)
-    val merged = state match {
-      case None => delta
-      case Some(prev) => mergeBiosampleState(prev, delta)
-    }
-    val next = merged.localCheckpoint()
-    val full = results match {
-      case Some(prev) if cfg.deltaReadout =>
-        // changed set — bioproject grain, bounded by the universe size,
-        // already reduced by the delta aggregation: tiny. Checkpointed
-        // so the routing count and the joins share one computation.
-        val changed = delta.select(col("bio_project")).distinct()
-          .localCheckpoint()
-        val nChanged = changed.count()
-        if (2 * nChanged < nUniverse) {
-          // EVERY readout input is bio_project-keyed — restrict them
-          // all, not just the state: a semi-join against the broadcast
-          // changed set is a map-side filter over the persisted dims (no
-          // shuffle)
-          def restrict(df: DataFrame) =
-            df.join(broadcast(changed), Seq("bio_project"), "left_semi")
-          runFromBiosampleState(restrict(next), catalog, sets, cfg,
-            Some(PipelineDims(restrict(pdims.bpUniverse),
-              restrict(pdims.bpSets))))
-            .unionByName(prev.join(broadcast(changed.select(
-              col("bio_project").as("bioproject"))),
-              Seq("bioproject"), "left_anti"))
-        } else runFromBiosampleState(next, catalog, sets, cfg, Some(pdims))
-      case _ =>
-        runFromBiosampleState(next, catalog, sets, cfg, Some(pdims))
-    }
-    // the results checkpoint exists ONLY for the delta carry (the next
-    // trigger's anti-join must not re-derive rows from a parquet dir the
-    // write below overwrites); in full-recompute mode nothing ever reads
-    // the carried frame, and the extra materialization cost a measured
-    // ~1 s/trigger (BENCH stream_mwas 11.1 → 14.2 s before this guard)
-    (next, if (cfg.deltaReadout) full.localCheckpoint() else full)
+    val next = state.fold(delta)(mergeBiosampleState(_, delta))
+      .localCheckpoint()
+    (next, runFromBiosampleState(next, catalog, sets, cfg, Some(pdims)))
   }
 
   /** Stages 2b–5: the readout from the mergeable biosample state down to

@@ -137,17 +137,12 @@ object BloomQueries {
     * parquet so the per-batch verify join re-reads a pruned scan
     * instead of re-deriving the explode+distinct. */
   def streamDecontaminate(s: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.streaming.Trigger
+    import graft.streaming.StreamingQueries.{pathTag, runBatches,
+      scratchDir, stageThirds}
     val d = Tables(s, dir, "documents")
     val bench = benchGrams(d)
 
-    val base = new java.io.File(
-      System.getProperty("java.io.tmpdir"),
-      "graft_stream_decon_" + graft.streaming.StreamingQueries.pathTag(dir) +
-        "_" + ProcessHandle.current().pid())
-    org.apache.commons.io.FileUtils.deleteQuietly(base)
-    base.mkdirs()
-    graft.core.TempDirs.cleanOnExit(base.toPath)
+    val base = scratchDir("graft_stream_decon", dir)
     val benchDir = s"$base/bench"
     val outDir = s"$base/result"
 
@@ -160,20 +155,10 @@ object BloomQueries {
 
     val probeDocs = d.filter(col("doc_id") % 10 =!= 0)
       .select(col("doc_id"), col("text"))
-    val (idMin, idMax) = graft.streaming.StreamingQueries.idRange(probeDocs, "doc_id")
-      .getOrElse(throw new IllegalArgumentException(
-        "empty input relation: nothing to stream"))
-    val b1 = idMin + (idMax - idMin) / 3
-    val b2 = idMin + 2 * (idMax - idMin) / 3
-    val staging = graft.streaming.StreamingQueries.stageBatches(
-      "graft_stream_decon_stage_" + graft.streaming.StreamingQueries.pathTag(dir),
-      Seq(probeDocs.filter(col("doc_id") <= b1),
-        probeDocs.filter(col("doc_id") > b1 && col("doc_id") <= b2),
-        probeDocs.filter(col("doc_id") > b2)))
+    val staging = stageThirds(
+      "graft_stream_decon_stage_" + pathTag(dir), probeDocs, "doc_id")
 
-    val src = s.readStream.schema(probeDocs.schema)
-      .option("maxFilesPerTrigger", "1").parquet(staging.toString)
-    val q = src.writeStream.foreachBatch { (batch: DataFrame, _: Long) =>
+    runBatches(s, probeDocs.schema, staging) { batch =>
       val ss = batch.sparkSession
       val grams = batch
         .select(col("doc_id"), explode(grams5(col("text"))).as("gh"))
@@ -189,9 +174,7 @@ object BloomQueries {
             .as("overlap"))
         .withColumn("contaminated", col("overlap") >= 0.2)
         .write.mode("append").parquet(outDir)
-      ()
-    }.trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
+    }
     s.read.parquet(outDir).orderBy(col("doc_id"))
   }
 

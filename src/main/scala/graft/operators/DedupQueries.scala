@@ -1418,6 +1418,9 @@ object DedupQueries {
       val sig = signature(next)
       converged = sig == prevSig
       prevSig = sig
+      // next is materialized, so the superseded round's blocks can go:
+      // the block manager holds one round, not all of them
+      graft.streaming.StreamingQueries.releaseCheckpoint(edges)
       edges = next
       rounds += 1
     }

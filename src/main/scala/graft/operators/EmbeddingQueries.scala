@@ -546,6 +546,9 @@ object EmbeddingQueries {
     * after the last batch the state equals the batch query's
     * neighborhoods by the merge identity above. */
   def streamBitextMine(s: SparkSession, dir: String): DataFrame = {
+    import graft.streaming.StreamingQueries.{CarriedState, pathTag,
+      releaseCheckpoint, runBatches, scratchDir, stageThirds,
+      withShufflePartitions}
     val k = 4
     val v = vecs(s, dir).withColumn("nrm",
       sqrt(graft.functions.VectorOps.dot_product(col("v"), col("v"))))
@@ -561,36 +564,17 @@ object EmbeddingQueries {
     val b = v.filter(col("label") >= 5)
       .select(col("vec_id").as("tgt_id"), col("v").as("vb"),
         col("nrm").as("nb"))
-    val (idMin, idMax) = graft.streaming.StreamingQueries.idRange(b, "tgt_id")
-      .getOrElse(throw new IllegalArgumentException(
-        "empty input relation: nothing to stream"))
-    val s1 = idMin + (idMax - idMin) / 3
-    val s2 = idMin + 2 * (idMax - idMin) / 3
-    val staging = graft.streaming.StreamingQueries.stageBatches(
-      "graft_stream_bitext_stage_" + graft.streaming.StreamingQueries.pathTag(dir),
-      Seq(b.filter(col("tgt_id") <= s1),
-        b.filter(col("tgt_id") > s1 && col("tgt_id") <= s2),
-        b.filter(col("tgt_id") > s2)))
+    val staging = stageThirds(
+      "graft_stream_bitext_stage_" + pathTag(dir), b, "tgt_id")
 
-    val base = new java.io.File(
-      System.getProperty("java.io.tmpdir"),
-      "graft_stream_bitext_" + graft.streaming.StreamingQueries.pathTag(dir) +
-        "_" + ProcessHandle.current().pid())
-    org.apache.commons.io.FileUtils.deleteQuietly(base)
-    base.mkdirs()
-    graft.core.TempDirs.cleanOnExit(base.toPath)
+    val base = scratchDir("graft_stream_bitext", dir)
     val bwdDir = s"$base/bwd"
     val resultDir = s"$base/result"
-    var fwdState: Option[DataFrame] = None
+    val fwdState = new CarriedState
 
-    val src = s.readStream.schema(
-        b.schema).option("maxFilesPerTrigger", "1")
-      .parquet(staging.toString)
-    val q = src.writeStream.foreachBatch { (batch: DataFrame, _: Long) =>
+    runBatches(s, b.schema, staging) { batch =>
       val ss = batch.sparkSession
-      val prevParts = ss.conf.get("spark.sql.shuffle.partitions")
-      ss.conf.set("spark.sql.shuffle.partitions", "8")
-      try {
+      withShufflePartitions(ss, Some("8")) {
         val pairs = a.crossJoin(broadcast(batch))
           .withColumn("cosr",
             round(graft.functions.VectorOps.dot_product(col("va"),
@@ -608,15 +592,12 @@ object EmbeddingQueries {
           .agg(sum(col("cosr")).as("sum_b"), count(lit(1)).as("n_b"))
           .write.mode("append").parquet(bwdDir)
         // forward heap remnant: top-k of (remnant ∪ batch)
-        val unioned = fwdState match {
-          case None => pairs
-          case Some(prev) => prev.select(col("src_id"), col("tgt_id"),
-            col("cosr")).unionByName(pairs)
-        }
+        val unioned = fwdState.current.fold(pairs)(_.select(col("src_id"),
+          col("tgt_id"), col("cosr")).unionByName(pairs))
         val topk = graft.plans.TopK.perGroup(unioned, Seq(col("src_id")),
             Seq(col("cosr").desc, col("tgt_id").asc), k)
           .localCheckpoint()
-        fwdState = Some(topk)
+        fwdState.advance(topk)
         // margin readout over the two dimension-sized relations
         val fwdAgg = topk.groupBy(col("src_id"))
           .agg(sum(col("cosr")).as("sum_f"), count(lit(1)).as("n_f"))
@@ -625,9 +606,12 @@ object EmbeddingQueries {
             .select(col("src_id"), col("tgt_id"), col("cosr")),
           fwdAgg, ss.read.parquet(bwdDir))
           .write.mode("overwrite").parquet(resultDir)
-      } finally ss.conf.set("spark.sql.shuffle.partitions", prevParts)
-    }.trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
-    q.awaitTermination()
+        releaseCheckpoint(pairs)
+      }
+    }
+    // the readout is the result parquet: no checkpoint outlives the stream
+    fwdState.release()
+    releaseCheckpoint(a)
 
     s.read.parquet(resultDir)
       .select(col("src_id"), col("tgt_id"), col("cosine"), col("margin"),

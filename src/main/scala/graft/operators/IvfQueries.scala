@@ -405,12 +405,8 @@ object IvfQueries {
     * deployment points it at the table format of record and re-encodes
     * only new partitions. */
   def annIndexSearch(s: SparkSession, dir: String): DataFrame = {
-    val base = new java.io.File(
-      System.getProperty("java.io.tmpdir"),
-      "graft_pq_index_" + graft.streaming.StreamingQueries.pathTag(dir) +
-        "_" + ProcessHandle.current().pid())
-    org.apache.commons.io.FileUtils.deleteQuietly(base)
-    graft.core.TempDirs.cleanOnExit(base.toPath)
+    val base = graft.streaming.StreamingQueries.scratchDir(
+      "graft_pq_index", dir)
     val codesDir = s"$base/codes"
     pqCodes(s, dir).write.mode("overwrite").parquet(codesDir)
     pqSearch(s, dir, s.read.parquet(codesDir))

@@ -772,17 +772,11 @@ object MwasPipelineQueries {
     * closed-form plan, and in production by partition pruning on the
     * bioprojects a batch touches. */
   def streamMwasQuery(s: SparkSession, dir: String): DataFrame = {
+    import graft.streaming.StreamingQueries.{CarriedState, runBatches,
+      scratchDir, withShufflePartitions}
     // (no events read here — the former defensive nanosAsLong conf set was
     // removed with the schema-adaptive Events codec, r10)
-    // pid-scoped like StreamingQueries.stageBatches: a fixed name would
-    // let a concurrently-exiting peer JVM delete this dir mid-stream
-    val base = new java.io.File(
-      System.getProperty("java.io.tmpdir"),
-      "graft_stream_mwas_" + graft.streaming.StreamingQueries.pathTag(dir) +
-        "_" + ProcessHandle.current().pid())
-    org.apache.commons.io.FileUtils.deleteQuietly(base)
-    base.mkdirs()
-    graft.core.TempDirs.cleanOnExit(base.toPath)
+    val base = scratchDir("graft_stream_mwas", dir)
     val resultDir = s"$base/result"
 
     // stage the user input into 3 deterministic batches by run hash —
@@ -824,38 +818,22 @@ object MwasPipelineQueries {
     // eager localCheckpoints (block-manager resident, no FS round trip;
     // the lineage cut also keeps the merge plan flat across triggers —
     // the BPE/PCA per-round precedent).
-    // catalog-universe size for the adaptive readout's routing guard —
-    // one tiny count, once per stream
-    val nUniverse = pdims.bpUniverse.count()
-    val src = s.readStream.schema(in.schema)
-      .option("maxFilesPerTrigger", "1").parquet(staging.toString)
-    var state: Option[DataFrame] = None
-    var results: Option[DataFrame] = None
-    val q = src.writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        // batch functions run sequentially on the driver: scoping the
-        // shuffle width to the per-increment data size is safe and cuts
-        // 3 readouts' worth of near-empty shuffle tasks
-        val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-        s.conf.set("spark.sql.shuffle.partitions", "8")
-        try {
-          // merge + readout via the shared trigger step
-          // ([[Pipeline.incrementalTrigger]]). deltaReadout stays at its
-          // measured default (off — see the step's scaladoc for the
-          // negative result and crossover attribution, VERDICT r13 item
-          // 2); parity gated by the unchanged batch oracle
-          // (pipelineTSql)
-          val (next, full) = Pipeline.incrementalTrigger(batch, cat,
-            sets, MwasConfig(onlyTTest = true), pdims, nUniverse,
-            state, results)
-          state = Some(next)
-          results = Some(full)
-          full.write.mode("overwrite").parquet(resultDir)
-        } finally s.conf.set("spark.sql.shuffle.partitions", prevParts)
+    val state = new CarriedState
+    try runBatches(s, in.schema, staging) { batch =>
+      // batch functions run sequentially on the driver: scoping the
+      // shuffle width to the per-increment data size is safe and cuts
+      // 3 readouts' worth of near-empty shuffle tasks
+      withShufflePartitions(s, Some("8")) {
+        // merge + readout via the shared trigger step
+        // ([[Pipeline.incrementalTrigger]]); parity gated by the
+        // unchanged batch oracle (pipelineTSql)
+        val (next, full) = Pipeline.incrementalTrigger(batch, cat,
+          sets, MwasConfig(onlyTTest = true), pdims, state.current)
+        state.advance(next)
+        full.write.mode("overwrite").parquet(resultDir)
       }
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
-    try q.awaitTermination()
-    finally {
+    } finally {
+      state.release()
       pdims.bpSets.unpersist(blocking = false)
       pdims.bpUniverse.unpersist(blocking = false)
       sets.unpersist(blocking = false)

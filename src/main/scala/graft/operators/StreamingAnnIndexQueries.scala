@@ -42,10 +42,10 @@ object StreamingAnnIndexQueries {
         graft.streaming.StreamingQueries.pathTag(dir),
       d, "vec_id")
 
-    val base = graft.streaming.StreamingQueries.stateBase(
+    val base = graft.streaming.StreamingQueries.scratchDir(
       "graft_stream_pqidx", dir)
     val cbDir = s"$base/codebook"
-    val codesDir = s"$base/codes"
+    val codes = graft.streaming.StreamingQueries.BatchStore(s"$base/codes")
 
     graft.streaming.StreamingQueries.runBatchesWithId(s, d.schema,
         staging) { (batch, bid) =>
@@ -58,14 +58,12 @@ object StreamingAnnIndexQueries {
       if (!cb.isEmpty) cb.write.mode("overwrite").parquet(cbDir)
       // encode ONLY the arriving vectors against the frozen codebook —
       // pqEncode broadcasts the 128-row cw side into a map-side argmin
-      IvfQueries.pqEncode(sub, ss.read.parquet(cbDir))
-        .write.mode("overwrite").parquet(s"$codesDir/b$bid")
+      codes.write(IvfQueries.pqEncode(sub, ss.read.parquet(cbDir)), bid)
     }
 
     // search strictly from the accumulated index — the same ADC tail
     // (and so the same oracle) as ann_pq_adc / ann_index_search
-    IvfQueries.pqSearch(s, dir,
-      s.read.option("recursiveFileLookup", "true").parquet(codesDir))
+    IvfQueries.pqSearch(s, dir, codes.readAll(s))
   }
 
   // No waiver: per-vector encoding under the frozen codebook makes the

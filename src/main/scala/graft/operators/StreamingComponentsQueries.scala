@@ -2,7 +2,6 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 
 /** Incremental connected components — near-dup clustering maintained as
   * documents arrive, the missing INCREMENTAL form of the
@@ -64,13 +63,11 @@ import org.apache.spark.sql.streaming.Trigger
   * self-mapped), so the stream hash-oracles against the literally-same
   * SQL as `dedup_components`.
   *
-  * Determinism: staged single-file batches, `maxFilesPerTrigger=1`,
-  * `Trigger.AvailableNow`; batchId-keyed store subdirs written with
-  * overwrite (replay-idempotent — a re-executed micro-batch lands on
-  * its own path instead of double-appending). The mapping is DERIVED
-  * state carried in memory across triggers (r17): recomputable from the
-  * idempotent store, and re-contracting with the same pairs is the
-  * identity, so replay needs nothing durable. */
+  * Determinism: the house replay harness ([[graft.streaming.StreamingQueries]]
+  * — staged single-file batches, `Trigger.AvailableNow`, batchId-keyed
+  * store subdirs). The mapping is derived state carried in memory across
+  * triggers (r17); its durability contract is
+  * [[graft.streaming.StreamingQueries.CarriedState]]'s. */
 object StreamingComponentsQueries {
 
   /** (doc_id, source, wh, nw, bands): the per-doc signature-store row —
@@ -166,28 +163,40 @@ object StreamingComponentsQueries {
     DedupQueries.connectedComponents(prev.unionByName(bridges))
   }
 
+  /** One trigger's step of a stream's carried component mapping:
+    * advance it by the trigger's verified pairs `newPairs` (an eager
+    * checkpoint). A trigger that found no pairs leaves it as is:
+    * contracting the converged mapping with an empty bridge set returns
+    * it unchanged, so skipping the star rounds (each two eager actions
+    * over the ∝-history mapping) is exact, and a replayed empty trigger
+    * leaves the mapping where it was. The guard scans the checkpointed
+    * batch-sized pairs, not the probe. The first trigger always advances,
+    * from an empty mapping. The advanced mapping is checkpoint-backed
+    * already (the star rounds end in one), so it is carried in memory
+    * rather than written and read back per trigger (r17); see
+    * [[graft.streaming.StreamingQueries.CarriedState]] for why nothing
+    * durable is needed. */
+  private[operators] def advanceCarried(
+      mapping: graft.streaming.StreamingQueries.CarriedState,
+      newPairs: DataFrame): Unit =
+    if (!newPairs.isEmpty || mapping.current.isEmpty)
+      mapping.advance(advanceMapping(
+        mapping.current.getOrElse(graft.streaming.StreamingQueries
+          .emptyFrame(newPairs.sparkSession, "u LONG, v LONG")),
+        newPairs))
+
   def streamComponents(s: SparkSession, dir: String): DataFrame = {
+    import graft.streaming.StreamingQueries.{BatchStore, CarriedState,
+      pathTag, releaseCheckpoint, runBatchesWithId, scratchDir, stageThirds}
     val d = DedupQueries.docs(s, dir)
       .select(col("doc_id"), col("source"), col("text"))
-    val (idMin, idMax) = graft.streaming.StreamingQueries.idRange(d, "doc_id")
-      .getOrElse(throw new IllegalArgumentException(
-        "empty input relation: nothing to stream"))
-    val b1 = idMin + (idMax - idMin) / 3
-    val b2 = idMin + 2 * (idMax - idMin) / 3
-    val staging = graft.streaming.StreamingQueries.stageBatches(
-      "graft_stream_cc_stage_" + graft.streaming.StreamingQueries.pathTag(dir),
-      Seq(d.filter(col("doc_id") <= b1),
-        d.filter(col("doc_id") > b1 && col("doc_id") <= b2),
-        d.filter(col("doc_id") > b2)))
+    val staging = stageThirds(
+      "graft_stream_cc_stage_" + pathTag(dir), d, "doc_id")
 
-    val base = graft.streaming.StreamingQueries.stateBase(
-      "graft_stream_cc", dir)
-    val sigDir = s"$base/sig"
-    @volatile var mapping: Option[DataFrame] = None
+    val sigStore = BatchStore(s"${scratchDir("graft_stream_cc", dir)}/sig")
+    val mapping = new CarriedState
 
-    val src = s.readStream.schema(d.schema)
-      .option("maxFilesPerTrigger", "1").parquet(staging.toString)
-    val q = src.writeStream.foreachBatch { (batch0: DataFrame, bid: Long) =>
+    runBatchesWithId(s, d.schema, staging) { (batch0, bid) =>
       val ss = batch0.sparkSession
       // WIDTH PIN (the stream_phash_dedup / jaccardJoin precedent):
       // the staged batch is one file and signatureRows is a NARROW map,
@@ -205,18 +214,11 @@ object StreamingComponentsQueries {
       // trigger) is gone. The durable store write itself stays,
       // batchId-keyed overwrite as before (replay-idempotent).
       val bsig = signatureRows(batch).localCheckpoint(true)
-      bsig.write.mode("overwrite").parquet(s"$sigDir/b$bid")
+      sigStore.write(bsig, bid)
       // store = the PRIOR subdirs from disk + this batch in memory
       // (append-first semantics unchanged: within-batch pairs discover
-      // in the same trigger; a replayed trigger excludes its own prior
-      // write exactly as the curation stream's subdir exclusion does)
-      val prevDirs = Option(new java.io.File(sigDir).listFiles())
-        .map(_.filter(f => f.isDirectory && f.getName != s"b$bid")
-          .map(_.getPath).toSeq)
-        .getOrElse(Seq.empty)
-      val store =
-        if (prevDirs.isEmpty) bsig
-        else ss.read.parquet(prevDirs: _*).unionByName(bsig)
+      // in the same trigger)
+      val store = sigStore.prior(ss, bid).fold(bsig)(_.unionByName(bsig))
       // probe: batch bands (word sets riding in the broadcast, ∝ batch)
       // against the store scan exploded map-side; prefilter + exact
       // verify INSIDE the map stage, so only verified edges shuffle.
@@ -231,35 +233,12 @@ object StreamingComponentsQueries {
       // idempotent store, so nothing durable is needed), and the
       // in-memory cut measured ~0.3 s/trigger cheaper than write+read
       val newPairs = probePairs(store, bsig).localCheckpoint(true)
-      // zero-discovery short-circuit (the stream_phash_dedup pattern):
-      // contracting the already-converged mapping with an empty bridge
-      // set returns it unchanged — skip the star rounds entirely.
-      // Exact and replay-safe; the guard count scans the checkpointed
-      // batch-sized pair relation, not the probe.
-      if (!newPairs.isEmpty || mapping.isEmpty) {
-        val prev = mapping.getOrElse(ss.createDataFrame(
-          ss.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-          org.apache.spark.sql.types.StructType.fromDDL("u LONG, v LONG")))
-        // the advanced mapping is already localCheckpoint-backed (the
-        // star rounds end in one) — carry IT across triggers instead of
-        // a parquet write + read-back per trigger (r17, VERDICT r16
-        // item 4). The mapping is derived state, not a store: a
-        // replayed trigger recomputes it from the idempotent signature
-        // store, and re-contracting an already-advanced mapping with
-        // the same pairs is the identity (bridges collapse to
-        // self-loops), so nothing durable is needed.
-        mapping = Some(advanceMapping(prev, newPairs))
-      }
-      ()
-    }.trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
+      advanceCarried(mapping, newPairs)
+      Seq(bsig, newPairs).foreach(releaseCheckpoint)
+    }
 
-    // the batch query's tail over the final mapping — same SQL oracle.
-    // (Re-based onto the OUTER session: the mapping DataFrame was built
-    // on the micro-batch session clone; its checkpointed rows carry
-    // over via the shared SparkContext.)
-    val m = mapping.get
-    val comp = s.createDataFrame(m.rdd, m.schema)
+    // the batch query's tail over the final mapping — same SQL oracle
+    val comp = mapping.on(s)
       .select(col("u").as("doc_id"), col("v").as("component"))
     d.select(col("doc_id"))
       .join(comp, Seq("doc_id"), "left_outer")

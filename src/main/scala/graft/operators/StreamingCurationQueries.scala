@@ -2,7 +2,6 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 
 /** Incremental fused curation — the flagship end-to-end pipeline
   * ([[DedupQueries.corpusPipelineE2e]]: quality floor → exact dedup →
@@ -45,28 +44,19 @@ import org.apache.spark.sql.streaming.Trigger
 object StreamingCurationQueries {
 
   def streamCorpusPipeline(s: SparkSession, dir: String): DataFrame = {
+    import graft.streaming.StreamingQueries.{BatchStore, CarriedState,
+      pathTag, releaseCheckpoint, runBatchesWithId, scratchDir, stageThirds}
     val d = DedupQueries.docs(s, dir)
       .select(col("doc_id"), col("source"), col("text"))
-    val (idMin, idMax) = graft.streaming.StreamingQueries.idRange(d, "doc_id")
-      .getOrElse(throw new IllegalArgumentException(
-        "empty input relation: nothing to stream"))
-    val b1 = idMin + (idMax - idMin) / 3
-    val b2 = idMin + 2 * (idMax - idMin) / 3
-    val staging = graft.streaming.StreamingQueries.stageBatches(
-      "graft_stream_cur_stage_" + graft.streaming.StreamingQueries.pathTag(dir),
-      Seq(d.filter(col("doc_id") <= b1),
-        d.filter(col("doc_id") > b1 && col("doc_id") <= b2),
-        d.filter(col("doc_id") > b2)))
+    val staging = stageThirds(
+      "graft_stream_cur_stage_" + pathTag(dir), d, "doc_id")
 
-    val base = graft.streaming.StreamingQueries.stateBase(
-      "graft_stream_cur", dir)
-    val survDir = s"$base/surv"
-    val sigDir = s"$base/sig"
-    @volatile var mapping: Option[DataFrame] = None
+    val base = scratchDir("graft_stream_cur", dir)
+    val survStore = BatchStore(s"$base/surv")
+    val sigStore = BatchStore(s"$base/sig")
+    val mapping = new CarriedState
 
-    val src = s.readStream.schema(d.schema)
-      .option("maxFilesPerTrigger", "1").parquet(staging.toString)
-    val q = src.writeStream.foreachBatch { (batch0: DataFrame, bid: Long) =>
+    runBatchesWithId(s, d.schema, staging) { (batch0, bid) =>
       val ss = batch0.sparkSession
       // WIDTH PIN (the stream_components / stream_phash_dedup
       // precedent): the staged batch is one file, and the survivor
@@ -99,18 +89,11 @@ object StreamingCurationQueries {
       // lookup's store scan selects it alone — parquet column pruning
       // keeps the probe IO at the old dedicated-file width while one
       // whole write pass per trigger disappears.
-      val prevSurvDirs = Option(new java.io.File(survDir).listFiles())
-        .map(_.filter(f => f.isDirectory && f.getName != s"b$bid")
-          .map(_.getPath).toSeq)
-        .getOrElse(Seq.empty)
-      val sb0 =
-        if (prevSurvDirs.isEmpty) keep
-        else {
-          val store = ss.read.parquet(prevSurvDirs: _*).select(col("h"))
-          val matched = store
-            .join(broadcast(keep.select(col("h")).distinct()), Seq("h"))
-          keep.join(broadcast(matched), Seq("h"), "left_anti")
-        }
+      val sb0 = survStore.prior(ss, bid).fold(keep) { prior =>
+        val matched = prior.select(col("h"))
+          .join(broadcast(keep.select(col("h")).distinct()), Seq("h"))
+        keep.join(broadcast(matched), Seq("h"), "left_anti")
+      }
       // materialize the batch survivors once (∝ batch, consumed by the
       // hash/survivor/signature writes below). RE-pin the width first:
       // AQE byte-coalesces the quality join's post-shuffle partitions
@@ -120,9 +103,8 @@ object StreamingCurationQueries {
       // shuffle is ∝ batch (StreamWidthPinSpec gates the store layout)
       val sb = sb0.repartition(ss.sparkContext.defaultParallelism)
         .localCheckpoint(true)
-      sb.select(col("doc_id"), col("source"), col("text"),
-          col("quality"), col("h"))
-        .write.mode("overwrite").parquet(s"$survDir/b$bid")
+      survStore.write(sb.select(col("doc_id"), col("source"), col("text"),
+          col("quality"), col("h")), bid)
       // stage 3: banded CC over survivors — the StreamingComponents
       // machinery verbatim (append-first so within-batch pairs discover
       // in the same trigger)
@@ -135,41 +117,20 @@ object StreamingCurationQueries {
       val bsig = StreamingComponentsQueries.signatureRows(
           sb.select(col("doc_id"), col("source"), col("text")))
         .localCheckpoint(true)
-      bsig.write.mode("overwrite").parquet(s"$sigDir/b$bid")
-      val prevSigDirs = Option(new java.io.File(sigDir).listFiles())
-        .map(_.filter(f => f.isDirectory && f.getName != s"b$bid")
-          .map(_.getPath).toSeq)
-        .getOrElse(Seq.empty)
-      val store =
-        if (prevSigDirs.isEmpty) bsig
-        else ss.read.parquet(prevSigDirs: _*).unionByName(bsig)
+      sigStore.write(bsig, bid)
+      val store = sigStore.prior(ss, bid).fold(bsig)(_.unionByName(bsig))
       val newPairs = StreamingComponentsQueries.probePairs(store, bsig)
         .localCheckpoint(true)
-      // zero-discovery short-circuit (the stream_phash_dedup pattern):
-      // an empty bridge set leaves the converged mapping unchanged —
-      // skip the star rounds. Exact and replay-safe.
-      if (!newPairs.isEmpty || mapping.isEmpty) {
-        val prev = mapping.getOrElse(ss.createDataFrame(
-          ss.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-          org.apache.spark.sql.types.StructType.fromDDL("u LONG, v LONG")))
-        // carry the checkpoint-backed advanced mapping across triggers
-        // instead of a parquet write + read-back (r17 — derived state,
-        // recomputable from the idempotent stores; re-contracting with
-        // the same pairs is the identity, so replay is safe)
-        mapping = Some(StreamingComponentsQueries
-          .advanceMapping(prev, newPairs))
-      }
-      ()
-    }.trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
+      StreamingComponentsQueries.advanceCarried(mapping, newPairs)
+      Seq(sb, bsig, newPairs).foreach(releaseCheckpoint)
+    }
 
     // stage 4: the batch pipeline's readout over the accumulated state
     // (h is store plumbing, not part of the compared relation — project
     // it away before the shared tail)
-    val surv = s.read.option("recursiveFileLookup", "true").parquet(survDir)
+    val surv = survStore.readAll(s)
       .select(col("doc_id"), col("source"), col("text"), col("quality"))
-    val m = mapping.get
-    val comp = s.createDataFrame(m.rdd, m.schema)
+    val comp = mapping.on(s)
       .select(col("u").as("doc_id"), col("v").as("component"))
     val s3 = surv.join(comp, Seq("doc_id"), "left_outer")
       .withColumn("component", coalesce(col("component"), col("doc_id")))

@@ -2,7 +2,6 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 
 /** Incremental (streaming-ingest) near-dup detection — the
   * accumulate-and-probe pattern every production crawl pipeline runs:
@@ -37,36 +36,19 @@ import org.apache.spark.sql.streaming.Trigger
 object StreamingDedupQueries {
 
   def streamMinhashDedup(s: SparkSession, dir: String): DataFrame = {
+    import graft.streaming.StreamingQueries.{pathTag, releaseCheckpoint,
+      runBatches, scratchDir, stageThirds}
     val d = DedupQueries.docs(s, dir).select(col("doc_id"), col("text"))
-    // deterministic 3-way id-range split from one min/max aggregate (two
-    // scalars to the driver; same shape as the append-window staging)
-    val (idMin, idMax) = graft.streaming.StreamingQueries.idRange(d, "doc_id")
-      .getOrElse(throw new IllegalArgumentException(
-        "empty input relation: nothing to stream"))
-    val b1 = idMin + (idMax - idMin) / 3
-    val b2 = idMin + 2 * (idMax - idMin) / 3
-    val staging = graft.streaming.StreamingQueries.stageBatches(
-      "graft_stream_mhdedup_stage_" + graft.streaming.StreamingQueries.pathTag(dir),
-      Seq(d.filter(col("doc_id") <= b1),
-        d.filter(col("doc_id") > b1 && col("doc_id") <= b2),
-        d.filter(col("doc_id") > b2)))
+    val staging = stageThirds(
+      "graft_stream_mhdedup_stage_" + pathTag(dir), d, "doc_id")
 
-    // pid-scoped accumulator stores (bands / shingles / per-doc verdicts),
-    // same crash-debris trade as the other streaming harnesses
-    val base = new java.io.File(
-      System.getProperty("java.io.tmpdir"),
-      "graft_stream_mhdedup_" + graft.streaming.StreamingQueries.pathTag(dir) +
-        "_" + ProcessHandle.current().pid())
-    org.apache.commons.io.FileUtils.deleteQuietly(base)
-    base.mkdirs()
-    graft.core.TempDirs.cleanOnExit(base.toPath)
+    // accumulator stores (bands / shingles / per-doc verdicts)
+    val base = scratchDir("graft_stream_mhdedup", dir)
     val bandsDir = s"$base/bands"
     val shDir = s"$base/shingles"
     val outDir = s"$base/result"
 
-    val src = s.readStream.schema(d.schema)
-      .option("maxFilesPerTrigger", "1").parquet(staging.toString)
-    val q = src.writeStream.foreachBatch { (batch: DataFrame, _: Long) =>
+    runBatches(s, d.schema, staging) { batch =>
       val ss = batch.sparkSession
       // signature the NEW docs only, once; flatten lineage so the two
       // consumers below (store append + probe) don't recompute the aggs
@@ -100,9 +82,8 @@ object StreamingDedupQueries {
           col("doc_id") === col("doc_b"), "left_outer")
         .select(col("doc_id"), col("dup_of"))
         .write.mode("append").parquet(outDir)
-      ()
-    }.trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
+      Seq(sb, bb).foreach(releaseCheckpoint)
+    }
     s.read.parquet(outDir)
       .select(col("doc_id"), col("dup_of"),
         col("dup_of").isNotNull.as("is_dup"))

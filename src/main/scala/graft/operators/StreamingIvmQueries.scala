@@ -2,7 +2,6 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 
 import graft.core.Tables
 
@@ -77,22 +76,21 @@ object StreamingIvmQueries {
   }
 
   def streamIvmAgg(s: SparkSession, dir: String): DataFrame = {
+    import graft.streaming.StreamingQueries.{BatchStore, runBatchesWithId,
+      scratchDir}
     val batches = cdcBatches(s, dir)
     val staging = graft.streaming.StreamingQueries.stageBatches(
       "graft_stream_ivm_stage_" + graft.streaming.StreamingQueries.pathTag(dir),
       batches)
 
-    val base = graft.streaming.StreamingQueries.stateBase(
-      "graft_stream_ivm", dir)
-    val deltaDir = s"$base/deltas"
+    val deltas =
+      BatchStore(s"${scratchDir("graft_stream_ivm", dir)}/deltas")
 
-    val src = s.readStream.schema(batches.head.schema)
-      .option("maxFilesPerTrigger", "1").parquet(staging.toString)
-    val q = src.writeStream.foreachBatch { (batch: DataFrame, bid: Long) =>
+    runBatchesWithId(s, batches.head.schema, staging) { (batch, bid) =>
       // each record folds to ±contributions: after-image adds (I, U),
       // before-image retracts (U, D); the null side of I/D carries dn=0
       // and a null group, dropped before the partial aggregate
-      batch.select(explode(array(
+      deltas.write(batch.select(explode(array(
           struct(col("a_priority").as("priority"),
             when(col("op") =!= "D", lit(1L)).otherwise(lit(0L)).as("dn"),
             when(col("op") =!= "D", col("a_cents")).otherwise(lit(0L))
@@ -104,24 +102,17 @@ object StreamingIvmQueries {
         .select(col("c.*"))
         .filter(col("priority").isNotNull)
         .groupBy(col("priority"))
-        .agg(sum(col("dn")).as("dn"), sum(col("dcents")).as("dcents"))
-        // batchId-keyed path + overwrite (not a blind append): if the
-        // engine ever re-executes a micro-batch after a transient task
-        // failure, the replay lands on the same path and the deltas
-        // stay exactly-once — partials are NOT ratio-invariant, a
+        .agg(sum(col("dn")).as("dn"), sum(col("dcents")).as("dcents")),
+        // batchId-keyed (not a blind append): if the engine ever
+        // re-executes a micro-batch after a transient task failure, the
+        // deltas stay exactly-once — partials are NOT ratio-invariant, a
         // double-append would silently double-count
-        .write.mode("overwrite").parquet(s"$deltaDir/b$bid")
-      ()
-    }.trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
+        bid)
+    }
 
     // merge = integer sum; groups retracted to zero rows disappear,
     // exactly as they are absent from the final snapshot's aggregate
-    // recursiveFileLookup (not a /b* glob): reads every batch's partials
-    // under the keyed subdirs, and the existing parent dir keeps the
-    // FileStreamSink.hasMetadata probe from logging a spurious
-    // FileNotFoundException trace
-    s.read.option("recursiveFileLookup", "true").parquet(deltaDir)
+    deltas.readAll(s)
       .groupBy(col("priority"))
       .agg(sum(col("dn")).as("n_orders"), sum(col("dcents")).as("cents"))
       .filter(col("n_orders") > 0)

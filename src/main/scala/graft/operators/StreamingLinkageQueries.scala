@@ -2,7 +2,6 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 
 /** Incremental entity resolution — [[LinkageQueries.entityResolve]]
   * maintained as records arrive, composing the contracted-mapping CC
@@ -41,33 +40,28 @@ import org.apache.spark.sql.streaming.Trigger
 object StreamingLinkageQueries {
 
   def streamEntityResolve(s: SparkSession, dir: String): DataFrame = {
+    import graft.streaming.StreamingQueries.{emptyFrame, pathTag,
+      releaseCheckpoint, runBatchesWithId, scratchDir, stageBatches}
     val dirty = LinkageQueries.dirtyRel(s, dir).localCheckpoint()
     // hash stripes: arrival order decorrelated from key order, so rep
     // demotions (the repair path) actually occur
-    val staging = graft.streaming.StreamingQueries.stageBatches(
-      "graft_stream_er_stage_" + graft.streaming.StreamingQueries.pathTag(dir),
+    val staging = stageBatches("graft_stream_er_stage_" + pathTag(dir),
       (0 until 3).map(i => dirty.filter(
         pmod(graft.functions.PortableHash.raw(col("p_partkey")), lit(3))
           === i)))
 
-    val base = graft.streaming.StreamingQueries.stateBase(
-      "graft_stream_er", dir)
+    val base = scratchDir("graft_stream_er", dir)
     @volatile var stringsPath: Option[String] = None
     @volatile var mappingPath: Option[String] = None
 
-    val src = s.readStream.schema(dirty.schema)
-      .option("maxFilesPerTrigger", "1").parquet(staging.toString)
-    val q = src.writeStream.foreachBatch { (batch: DataFrame, bid: Long) =>
+    runBatchesWithId(s, dirty.schema, staging) { (batch, bid) =>
       val ss = batch.sparkSession
       val b = batch.localCheckpoint(true)
       val bs = b.groupBy(col("blk"), col("dirty_name"))
         .agg(min(col("p_partkey")).as("rep"))
       val prev = stringsPath match {
         case Some(p) => ss.read.parquet(p)
-        case None => ss.createDataFrame(
-          ss.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-          org.apache.spark.sql.types.StructType.fromDDL(
-            "blk STRING, dirty_name STRING, rep LONG"))
+        case None => emptyFrame(ss, "blk STRING, dirty_name STRING, rep LONG")
       }
       val merged = prev.unionByName(bs)
         .groupBy(col("blk"), col("dirty_name"))
@@ -96,9 +90,7 @@ object StreamingLinkageQueries {
         .distinct()
       val prevMapping = mappingPath match {
         case Some(p) => ss.read.parquet(p)
-        case None => ss.createDataFrame(
-          ss.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-          org.apache.spark.sql.types.StructType.fromDDL("u LONG, v LONG"))
+        case None => emptyFrame(ss, "u LONG, v LONG")
       }
       val next = DedupQueries.connectedComponents(prevMapping
         .unionByName(repairEdges).unionByName(starEdges)
@@ -109,9 +101,8 @@ object StreamingLinkageQueries {
       val nextMapping = s"$base/mapping_g$bid"
       next.write.mode("overwrite").parquet(nextMapping)
       mappingPath = Some(nextMapping)
-      ()
-    }.trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
+      Seq(b, merged, next).foreach(releaseCheckpoint)
+    }
 
     // the batch arm's readout tail over the final mapping
     val comp = s.read.parquet(mappingPath.get)

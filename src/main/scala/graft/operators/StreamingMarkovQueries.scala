@@ -36,7 +36,8 @@ import graft.core.Events
 object StreamingMarkovQueries {
 
   def streamMarkov(s: SparkSession, dir: String): DataFrame = {
-    import graft.streaming.StreamingQueries.{runBatches, scratchDir, stageThirds}
+    import graft.streaming.StreamingQueries.{releaseCheckpoint, runBatches,
+      scratchDir, stageThirds}
     val ev = Events(s, dir)
       .select(col("event_id"), col("ts"), col("user_id"),
         col("event_type"))
@@ -89,6 +90,7 @@ object StreamingMarkovQueries {
         .select(col("user_id"), col("ts"), col("event_id"),
           col("event_type"))
         .write.mode("append").parquet(lastDir)
+      releaseCheckpoint(b)
     }
 
     val wcur = Window.partitionBy(col("cur"))

@@ -2,7 +2,6 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 
 /** Incremental PCA — the deterministic power-iteration fit
   * ([[EmbeddingQueries.embPcaPower]]) maintained over an arriving
@@ -42,27 +41,18 @@ import org.apache.spark.sql.streaming.Trigger
 object StreamingPcaQueries {
 
   def streamPcaPower(s: SparkSession, dir: String): DataFrame = {
+    import graft.streaming.StreamingQueries.{BatchStore, pathTag,
+      releaseCheckpoint, runBatchesWithId, scratchDir, stageThirds}
     val d = graft.core.Tables(s, dir, "embeddings")
       .select(col("vec_id"), col("embedding"))
-    val (idMin, idMax) = graft.streaming.StreamingQueries.idRange(d, "vec_id")
-      .getOrElse(throw new IllegalArgumentException(
-        "empty input relation: nothing to stream"))
-    val b1 = idMin + (idMax - idMin) / 3
-    val b2 = idMin + 2 * (idMax - idMin) / 3
-    val staging = graft.streaming.StreamingQueries.stageBatches(
-      "graft_stream_pca_stage_" + graft.streaming.StreamingQueries.pathTag(dir),
-      Seq(d.filter(col("vec_id") <= b1),
-        d.filter(col("vec_id") > b1 && col("vec_id") <= b2),
-        d.filter(col("vec_id") > b2)))
+    val staging = stageThirds(
+      "graft_stream_pca_stage_" + pathTag(dir), d, "vec_id")
 
-    val base = graft.streaming.StreamingQueries.stateBase(
-      "graft_stream_pca", dir)
-    val momentsDir = s"$base/moments"
-    val sumsDir = s"$base/sums"
+    val base = scratchDir("graft_stream_pca", dir)
+    val momentStore = BatchStore(s"$base/moments")
+    val sumStore = BatchStore(s"$base/sums")
 
-    val src = s.readStream.schema(d.schema)
-      .option("maxFilesPerTrigger", "1").parquet(staging.toString)
-    val q = src.writeStream.foreachBatch { (batch: DataFrame, bid: Long) =>
+    runBatchesWithId(s, d.schema, staging) { (batch, bid) =>
       // one quantize pass per batch feeds both partials (each vector
       // lives wholly in its batch, so the moment self-join is batch-local).
       // EXPLICIT-width repartition on the join key before the checkpoint:
@@ -77,29 +67,24 @@ object StreamingPcaQueries {
           col("embedding").cast("array<double>").as("v")))
         .repartition(s.sparkContext.defaultParallelism, col("vec_id"))
         .localCheckpoint(true)
-      bq.alias("a").join(bq.alias("b"), col("a.vec_id") === col("b.vec_id"))
+      // batchId-keyed stores: sums of integers are not replay-invariant
+      momentStore.write(bq.alias("a")
+        .join(bq.alias("b"), col("a.vec_id") === col("b.vec_id"))
         .groupBy(col("a.j").as("j"), col("b.j").as("k"))
         // cast BEFORE the multiply — vq·vq fits int64 but the SUM does
         // not at scale (the batch fit's own ANSI-caught lesson)
-        .agg(sum(col("a.vq").cast("decimal(38,0)") * col("b.vq")).as("m"))
-        // batchId-keyed overwrite: a replayed micro-batch lands on its
-        // own path instead of double-appending moment partials (sums of
-        // integers are not replay-invariant)
-        .write.mode("overwrite").parquet(s"$momentsDir/b$bid")
-      bq.groupBy(col("j"))
-        .agg(sum(col("vq")).as("sj"), count(lit(1)).as("nb"))
-        .write.mode("overwrite").parquet(s"$sumsDir/b$bid")
-      ()
-    }.trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
+        .agg(sum(col("a.vq").cast("decimal(38,0)") * col("b.vq")).as("m")),
+        bid)
+      sumStore.write(bq.groupBy(col("j"))
+        .agg(sum(col("vq")).as("sj"), count(lit(1)).as("nb")), bid)
+      releaseCheckpoint(bq)
+    }
 
     // merge = integer sum over both stores, then the covariance identity
     // and the SAME iterate/loadings code path as the batch fit
-    // recursiveFileLookup (not a /b* glob): see StreamingIvmQueries —
-    // same read discipline over the batchId-keyed partial dirs
-    val m = s.read.option("recursiveFileLookup", "true").parquet(momentsDir)
+    val m = momentStore.readAll(s)
       .groupBy(col("j"), col("k")).agg(sum(col("m")).as("m"))
-    val sums = s.read.option("recursiveFileLookup", "true").parquet(sumsDir)
+    val sums = sumStore.readAll(s)
       .groupBy(col("j")).agg(sum(col("sj")).as("sj"), sum(col("nb")).as("nb"))
       .localCheckpoint(true) // scalar n + two broadcast sides below
     val n = sums.filter(col("j") === 0).head().getAs[Long]("nb")

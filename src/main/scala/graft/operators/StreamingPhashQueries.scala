@@ -2,7 +2,6 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 
 /** Incremental Hamming-space image dedup — the continuously-running form
   * of [[MultimodalQueries.dedupImagePhash]] (48-bit perceptual-hash
@@ -40,39 +39,35 @@ import org.apache.spark.sql.streaming.Trigger
   * discoveries, the case a from-scratch recompute pays the full corpus
   * for and this operator pays one batch probe for.
   *
-  * Determinism: staged single-file batches, `maxFilesPerTrigger=1`,
-  * `Trigger.AvailableNow`; batchId-keyed store subdirs written with
-  * overwrite (replay-idempotent); the mapping is derived state carried
-  * in memory across triggers (r17 — recomputable from the idempotent
-  * store). Reference analogue: the curation jobs the engine extends
+  * Determinism: the house replay harness (staged single-file batches,
+  * `Trigger.AvailableNow`, batchId-keyed store subdirs); the mapping is
+  * derived state carried in memory across triggers (r17), under
+  * [[graft.streaming.StreamingQueries.CarriedState]]'s durability
+  * contract. Reference analogue: the curation jobs the engine extends
   * beyond `old/mwas_rfam.py`'s batch-only posture. */
 object StreamingPhashQueries {
 
   def streamPhashDedup(s: SparkSession, dir: String): DataFrame = {
+    import graft.streaming.StreamingQueries.{BatchStore, CarriedState,
+      idRange, pathTag, releaseCheckpoint, runBatchesWithId, scratchDir,
+      stageBatches}
     val d = MultimodalQueries.phashCorpusDocs(s, dir)
     // split the ORIGINALS by id-range halves; the re-encode arm
     // (doc_id ≥ 1,000,000 by construction) arrives as the third batch
     val base = d.filter(col("doc_id") < 1000000L)
-    val (idMin, idMax) = graft.streaming.StreamingQueries
-      .idRange(base, "doc_id")
+    val (idMin, idMax) = idRange(base, "doc_id")
       .getOrElse(throw new IllegalArgumentException(
         "empty input relation: nothing to stream"))
     val b1 = idMin + (idMax - idMin) / 2
-    val staging = graft.streaming.StreamingQueries.stageBatches(
-      "graft_stream_ph_stage_" +
-        graft.streaming.StreamingQueries.pathTag(dir),
+    val staging = stageBatches("graft_stream_ph_stage_" + pathTag(dir),
       Seq(base.filter(col("doc_id") <= b1),
         base.filter(col("doc_id") > b1),
         d.filter(col("doc_id") >= 1000000L)))
 
-    val stateBase = graft.streaming.StreamingQueries.stateBase(
-      "graft_stream_ph", dir)
-    val sigDir = s"$stateBase/sig"
-    @volatile var mapping: Option[DataFrame] = None
+    val sigStore = BatchStore(s"${scratchDir("graft_stream_ph", dir)}/sig")
+    val mapping = new CarriedState
 
-    val src = s.readStream.schema(d.schema)
-      .option("maxFilesPerTrigger", "1").parquet(staging.toString)
-    val q = src.writeStream.foreachBatch { (batch0: DataFrame, bid: Long) =>
+    runBatchesWithId(s, d.schema, staging) { (batch0, bid) =>
       val ss = batch0.sparkSession
       // WIDTH PIN (the jaccardJoin/mwas-memo precedent): the staged
       // batch is one small file, and everything downstream of it is
@@ -94,14 +89,8 @@ object StreamingPhashQueries {
       // unchanged: store = prior subdirs from disk + this batch in
       // memory, so within-batch pairs discover in the same trigger.
       val bsig = MultimodalQueries.phashOf(batch).localCheckpoint(true)
-      bsig.write.mode("overwrite").parquet(s"$sigDir/b$bid")
-      val prevDirs = Option(new java.io.File(sigDir).listFiles())
-        .map(_.filter(f => f.isDirectory && f.getName != s"b$bid")
-          .map(_.getPath).toSeq)
-        .getOrElse(Seq.empty)
-      val store =
-        if (prevDirs.isEmpty) bsig
-        else ss.read.parquet(prevDirs: _*).unionByName(bsig)
+      sigStore.write(bsig, bid)
+      val store = sigStore.prior(ss, bid).fold(bsig)(_.unionByName(bsig))
       // probe: store scan exploded to block buckets map-side vs the
       // batch's BROADCAST block relation (4 rows/doc, phash riding);
       // exact hamming verify inside the map stage, only verified edges
@@ -117,36 +106,17 @@ object StreamingPhashQueries {
           greatest(col("doc_a"), col("doc_b")).as("v"))
         .distinct()
         .localCheckpoint(true)
-      // zero-discovery short-circuit: the previous mapping is already
-      // converged, and contracting it with an EMPTY bridge set returns
-      // it unchanged — skip the whole star-rounds pass (each round is
-      // two eager actions over the ∝-history mapping). Exact, and
-      // replay-safe: a replayed empty trigger leaves the mapping where
-      // it was. (newPairs is localCheckpointed, so the guard count is
-      // a cheap in-memory scan, not a probe recompute.)
-      if (!newPairs.isEmpty || mapping.isEmpty) {
-        val prev = mapping.getOrElse(ss.createDataFrame(
-          ss.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-          org.apache.spark.sql.types.StructType.fromDDL("u LONG, v LONG")))
-        // carry the checkpoint-backed advanced mapping across triggers
-        // instead of a parquet write + read-back (r17 — derived state,
-        // recomputable from the idempotent store; re-contracting with
-        // the same pairs is the identity, so replay is safe)
-        mapping = Some(StreamingComponentsQueries
-          .advanceMapping(prev, newPairs))
-      }
-      ()
-    }.trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
+      StreamingComponentsQueries.advanceCarried(mapping, newPairs)
+      Seq(bsig, newPairs).foreach(releaseCheckpoint)
+    }
 
     // readout = the batch query's tail over the ACCUMULATED fingerprint
     // store + final mapping (the corpus is never re-hashed) — same SQL
     // oracle as dedup_image_phash; the mapping re-bases onto the outer
     // session via its checkpointed rows
-    val m = mapping.get
-    val comp = s.createDataFrame(m.rdd, m.schema)
+    val comp = mapping.on(s)
       .select(col("u").as("doc_id"), col("v").as("component"))
-    s.read.option("recursiveFileLookup", "true").parquet(sigDir)
+    sigStore.readAll(s)
       .join(comp, Seq("doc_id"), "left_outer")
       .withColumn("component", coalesce(col("component"), col("doc_id")))
       .withColumn("keep", col("doc_id") === col("component"))

@@ -2,7 +2,6 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 
 import graft.core.Events
 
@@ -29,13 +28,9 @@ object StreamingRangeJoinQueries {
   private val BinUs = 3600L * 1000000L
 
   def streamRangeJoin(s: SparkSession, dir: String): DataFrame = {
-    val base = new java.io.File(
-      System.getProperty("java.io.tmpdir"),
-      "graft_stream_rangejoin_" + graft.streaming.StreamingQueries.pathTag(dir) +
-        "_" + ProcessHandle.current().pid())
-    org.apache.commons.io.FileUtils.deleteQuietly(base)
-    base.mkdirs()
-    graft.core.TempDirs.cleanOnExit(base.toPath)
+    import graft.streaming.StreamingQueries.{pathTag, runBatches,
+      scratchDir, stageThirds}
+    val base = scratchDir("graft_stream_rangejoin", dir)
     val spansDir = s"$base/spans"
     val outDir = s"$base/result"
 
@@ -52,20 +47,10 @@ object StreamingRangeJoinQueries {
     val pts = Events(s, dir)
       .filter(col("event_type") === "error")
       .select(col("event_id"), col("ts"))
-    val (idMin, idMax) = graft.streaming.StreamingQueries.idRange(pts, "event_id")
-      .getOrElse(throw new IllegalArgumentException(
-        "empty input relation: nothing to stream"))
-    val b1 = idMin + (idMax - idMin) / 3
-    val b2 = idMin + 2 * (idMax - idMin) / 3
-    val staging = graft.streaming.StreamingQueries.stageBatches(
-      "graft_stream_rangejoin_stage_" + graft.streaming.StreamingQueries.pathTag(dir),
-      Seq(pts.filter(col("event_id") <= b1),
-        pts.filter(col("event_id") > b1 && col("event_id") <= b2),
-        pts.filter(col("event_id") > b2)))
+    val staging = stageThirds(
+      "graft_stream_rangejoin_stage_" + pathTag(dir), pts, "event_id")
 
-    val src = s.readStream.schema(pts.schema)
-      .option("maxFilesPerTrigger", "1").parquet(staging.toString)
-    val q = src.writeStream.foreachBatch { (batch: DataFrame, _: Long) =>
+    runBatches(s, pts.schema, staging) { batch =>
       val ss = batch.sparkSession
       val binnedPts = batch
         .withColumn("t", unix_micros(col("ts")))
@@ -81,9 +66,7 @@ object StreamingRangeJoinQueries {
         .select(col("event_id"), col("ts"), col("n_active"),
           col("n_active_heavy"))
         .write.mode("append").parquet(outDir)
-      ()
-    }.trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
+    }
     s.read.parquet(outDir).orderBy(col("event_id"))
   }
 

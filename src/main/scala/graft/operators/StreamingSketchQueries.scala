@@ -2,7 +2,6 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 
 /** Incremental heavy hitters — the count–min sketch run the way it is
   * actually deployed: per arriving batch, compute that batch's token
@@ -32,39 +31,24 @@ import org.apache.spark.sql.streaming.Trigger
 object StreamingSketchQueries {
 
   def streamHeavyHitters(s: SparkSession, dir: String): DataFrame = {
+    import graft.streaming.StreamingQueries.{pathTag, releaseCheckpoint,
+      runBatches, scratchDir, stageThirds}
     val d = DedupQueries.docs(s, dir).select(col("doc_id"), col("text"))
-    val (idMin, idMax) = graft.streaming.StreamingQueries.idRange(d, "doc_id")
-      .getOrElse(throw new IllegalArgumentException(
-        "empty input relation: nothing to stream"))
-    val b1 = idMin + (idMax - idMin) / 3
-    val b2 = idMin + 2 * (idMax - idMin) / 3
-    val staging = graft.streaming.StreamingQueries.stageBatches(
-      "graft_stream_cms_stage_" + graft.streaming.StreamingQueries.pathTag(dir),
-      Seq(d.filter(col("doc_id") <= b1),
-        d.filter(col("doc_id") > b1 && col("doc_id") <= b2),
-        d.filter(col("doc_id") > b2)))
+    val staging = stageThirds(
+      "graft_stream_cms_stage_" + pathTag(dir), d, "doc_id")
 
-    val base = new java.io.File(
-      System.getProperty("java.io.tmpdir"),
-      "graft_stream_cms_" + graft.streaming.StreamingQueries.pathTag(dir) +
-        "_" + ProcessHandle.current().pid())
-    org.apache.commons.io.FileUtils.deleteQuietly(base)
-    base.mkdirs()
-    graft.core.TempDirs.cleanOnExit(base.toPath)
+    val base = scratchDir("graft_stream_cms", dir)
     val countsDir = s"$base/counts"
     val gridDir = s"$base/grid"
 
-    val src = s.readStream.schema(d.schema)
-      .option("maxFilesPerTrigger", "1").parquet(staging.toString)
-    val q = src.writeStream.foreachBatch { (batch: DataFrame, _: Long) =>
+    runBatches(s, d.schema, staging) { batch =>
       // one pass over the batch: token partials, then the partial grid
       // FROM the partials (linearity — the raw batch feeds nothing twice)
       val part = SketchQueries.tokenCounts(batch).localCheckpoint(true)
       part.write.mode("append").parquet(countsDir)
       SketchQueries.counterGrid(part).write.mode("append").parquet(gridDir)
-      ()
-    }.trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
+      releaseCheckpoint(part)
+    }
 
     // merge = sum of partials on both stores (integer, order-free), then
     // the SAME assembly code path as the batch query

@@ -183,9 +183,15 @@ object StressFixture {
     * foreign key valid AND keep per-dimension fan-out constant
     * (lineitem's part/supp keys shift in lockstep with part/supplier);
     * region/nation stay fixed exactly as TPC-H keeps them fixed across
-    * SFs. All shifts are ≡ 0 (mod 20·64), preserving the `% k` bucket
-    * assignments queries derive from keys (bioproject = custkey % 20
-    * etc.). documents/embeddings go through `gen` with vocabMult
+    * SFs. A `key % k` bucket survives the shift exactly when k divides
+    * that key's stride (10⁷ order/doc, 10⁶ customer/part, 10⁵
+    * supplier): `custkey % 20` (the bioproject), `suppkey % 50`,
+    * `orderkey % 2` and (for genDup's shifted doc ids) `doc_id % 10`
+    * keep their buckets. No stride is ≡ 0 (mod 3) or (mod 64) — 10⁷,
+    * 10⁶, 10⁵ are ≡ 640, 320, 160 (mod 1280) — so the MWAS input filter
+    * `o_orderkey % 3 != 0` keeps a different third of each copy
+    * (10⁷ ≡ 1 (mod 3)), and a `% 64` bucketing would move.
+    * documents/embeddings go through `gen` with vocabMult
     * defaulting to mult so word document-frequency DENSITY stays
     * constant — the scale direction a growing real corpus has (new
     * documents bring new vocabulary), and the one that doesn't conflate

@@ -69,18 +69,38 @@ object StreamingQueries {
         df.filter(col(keyCol) > b2)))
   }
 
-  /** Fresh pid-scoped scratch dir for a streaming state store, wiped on
-    * create and removed on JVM exit (the stageBatches lifecycle). */
-  private[graft] def scratchDir(name: String, dir: String): java.io.File = {
-    val base = new java.io.File(
-      System.getProperty("java.io.tmpdir"),
-      name + "_" + pathTag(dir) +
-        "_" + ProcessHandle.current().pid())
+  /** Fresh scratch dir `<tmpdir>/<name>_<pid>`, wiped on create and
+    * removed on JVM exit. The pid suffix matters: with a FIXED name, two
+    * concurrent JVMs running the suite would share one dir, and the
+    * first to exit would delete it (cleanOnExit) out from under the peer
+    * mid-stream; the pid scopes both the create-time wipe and the
+    * exit-hook delete to this process. Crash leftovers die at the next
+    * same-pid reuse or tmpdir cleanup — the usual trade for crash-only
+    * debris. */
+  private def pidScoped(name: String): java.io.File = {
+    val base = new java.io.File(System.getProperty("java.io.tmpdir"),
+      s"${name}_${ProcessHandle.current().pid()}")
     org.apache.commons.io.FileUtils.deleteQuietly(base)
     base.mkdirs()
     graft.core.TempDirs.cleanOnExit(base.toPath)
     base
   }
+
+  /** Per-run scratch base for a query's stores over dataset `dir`
+    * (`<name>_<pathTag(dir)>_<pid>`, the [[pidScoped]] lifecycle), so
+    * no harness restates the wipe + exit-hook discipline (the r13
+    * TempDirs hook-registration bug lived in exactly that kind of
+    * restated boilerplate). */
+  private[graft] def scratchDir(name: String, dir: String): java.io.File =
+    pidScoped(name + "_" + pathTag(dir))
+
+  /** The replay source over a staging dir: one staged file per
+    * micro-batch, in pinned-mtime order. */
+  private def stagedSource(s: SparkSession,
+      schema: org.apache.spark.sql.types.StructType,
+      staging: java.io.File): DataFrame =
+    s.readStream.schema(schema)
+      .option("maxFilesPerTrigger", "1").parquet(staging.toString)
 
   /** Drive the staged batches through `f` one micro-batch at a time
     * (maxFilesPerTrigger=1 + AvailableNow) and block to completion —
@@ -95,51 +115,142 @@ object StreamingQueries {
     * replay-idempotence discipline). */
   private[graft] def runBatchesWithId(s: SparkSession,
       schema: org.apache.spark.sql.types.StructType,
-      staging: java.io.File)(f: (DataFrame, Long) => Unit): Unit = {
-    val q = s.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1").parquet(staging.toString)
+      staging: java.io.File)(f: (DataFrame, Long) => Unit): Unit =
+    stagedSource(s, schema, staging)
       .writeStream.foreachBatch { (batch: DataFrame, bid: Long) =>
         f(batch, bid); ()
-      }.trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
+      }.trigger(Trigger.AvailableNow()).start().awaitTermination()
+
+  /** Run `body` with `spark.sql.shuffle.partitions` set to `width` on
+    * `s` (left as is when None), restoring the previous value after.
+    * A stateful stream's width is frozen into its checkpoint when the
+    * query starts, so scoping the conf around start() pins it; a
+    * foreachBatch body runs sequentially on the driver, so scoping it
+    * per trigger is safe too. */
+  private[graft] def withShufflePartitions[T](s: SparkSession,
+      width: Option[String])(body: => T): T = {
+    val prev = s.conf.get("spark.sql.shuffle.partitions")
+    def pin(w: String): Unit = s.conf.set("spark.sql.shuffle.partitions", w)
+    width.foreach(pin)
+    try body finally pin(prev)
   }
 
-  /** Per-run scratch base for a stream's STATE stores (partial/delta/
-    * mapping dirs) — the same pid-scoped create-time wipe + exit-hook
-    * cleanup discipline [[stageBatches]] applies to its staging dir,
-    * factored so each harness doesn't restate it (the r13 TempDirs
-    * hook-registration bug lived in exactly this kind of restated
-    * boilerplate). */
-  private[graft] def stateBase(name: String, dir: String): java.io.File = {
-    val base = new java.io.File(
-      System.getProperty("java.io.tmpdir"),
-      name + "_" + pathTag(dir) +
-        "_" + ProcessHandle.current().pid())
-    org.apache.commons.io.FileUtils.deleteQuietly(base)
-    base.mkdirs()
-    graft.core.TempDirs.cleanOnExit(base.toPath)
-    base
+  /** Run `stream` to completion into a fresh memory sink
+    * (`Trigger.AvailableNow`) at shuffle width `width`, and return the
+    * sink table. */
+  private def runToMemory(s: SparkSession, outputMode: String,
+      width: Option[String])(stream: => DataFrame): DataFrame = {
+    val name = "stream_" + UUID.randomUUID().toString.replace("-", "")
+    withShufflePartitions(s, width) {
+      stream.writeStream.format("memory").queryName(name)
+        .outputMode(outputMode).trigger(Trigger.AvailableNow()).start()
+        .awaitTermination()
+    }
+    s.table(name)
+  }
+
+  /** An empty relation of a DDL schema — the seed of state that no
+    * trigger has written yet. */
+  private[graft] def emptyFrame(ss: SparkSession, ddl: String): DataFrame =
+    ss.createDataFrame(ss.sparkContext.emptyRDD[org.apache.spark.sql.Row],
+      org.apache.spark.sql.types.StructType.fromDDL(ddl))
+
+  /** Release the blocks of an eager `localCheckpoint`. `Dataset.unpersist`
+    * does not: the checkpoint lives on the RDD under the frame's
+    * LogicalRDD leaf, not in the cache manager (on Spark 4.1.2 the
+    * persistent-RDD count stays put after `unpersist(true)`). A frame
+    * that is not a checkpoint is left alone. */
+  private[graft] def releaseCheckpoint(df: DataFrame): Unit =
+    df.queryExecution.logical match {
+      case r: org.apache.spark.sql.execution.LogicalRDD =>
+        r.rdd.unpersist(blocking = false)
+      case _ =>
+    }
+
+  /** A batchId-keyed parquet store: each trigger writes its own `b<id>`
+    * subdir with overwrite, so a replayed micro-batch lands on its own
+    * path instead of double-appending (partial sums are not
+    * replay-invariant) — the durable, replay-idempotent append. */
+  private[graft] final case class BatchStore(root: String) {
+    def write(df: DataFrame, bid: Long): Unit =
+      df.write.mode("overwrite").parquet(s"$root/b$bid")
+
+    /** Every EARLIER trigger's rows, or None before the first write. The
+      * trigger's own subdir is excluded: a replayed trigger would
+      * otherwise probe (or anti-join) its batch against its own prior
+      * write. */
+    def prior(ss: SparkSession, bid: Long): Option[DataFrame] = {
+      val dirs = Option(new java.io.File(root).listFiles()).toSeq.flatten
+        .filter(f => f.isDirectory && f.getName != s"b$bid").map(_.getPath)
+      if (dirs.isEmpty) None else Some(ss.read.parquet(dirs: _*))
+    }
+
+    /** Every trigger's rows. recursiveFileLookup (not a /b* glob) reads
+      * the keyed subdirs, and the existing parent dir keeps the
+      * FileStreamSink.hasMetadata probe from logging a spurious
+      * FileNotFoundException trace. */
+    def readAll(s: SparkSession): DataFrame =
+      s.read.option("recursiveFileLookup", "true").parquet(root)
+  }
+
+  /** Derived state carried in memory across the triggers of one stream
+    * (a contracted component mapping, a top-k heap remnant, a merged
+    * sufficient-statistics relation): each advance hands in the next
+    * version as an eager `localCheckpoint` and releases the superseded
+    * one, so the block manager holds one version per stream however many
+    * triggers run.
+    *
+    * Durability contract: local mode only. The blocks live in the block
+    * manager, so an executor loss loses them, and a checkpoint has no
+    * lineage to recompute from: the readout would fail. Within that
+    * contract nothing durable is needed, because the state is derived:
+    * a replayed trigger recomputes it from the staged batches and the
+    * stream's idempotent batchId-keyed store ([[BatchStore]]); for the
+    * component mappings re-contracting with the same pairs is also the
+    * identity, so a replay on top of the advanced version is safe. Off
+    * local mode the state belongs in a reliable checkpoint or a store.
+    *
+    * Triggers run strictly sequentially under AvailableNow; the slot is
+    * volatile because foreachBatch runs on the stream thread while the
+    * caller reads the final version on its own. */
+  private[graft] final class CarriedState {
+    @volatile private var cur: Option[DataFrame] = None
+
+    /** The current version; None before the first advance. */
+    def current: Option[DataFrame] = cur
+
+    /** Install `next` (an eager checkpoint) and release the version it
+      * supersedes. */
+    def advance(next: DataFrame): Unit = {
+      val prev = cur
+      cur = Some(next)
+      prev.foreach(releaseCheckpoint)
+    }
+
+    /** The final version re-based onto the outer session `s`: it was
+      * built on the micro-batch session clone, and its checkpointed rows
+      * carry over via the shared SparkContext. */
+    def on(s: SparkSession): DataFrame = {
+      val m = cur.getOrElse(throw new IllegalStateException(
+        "no trigger advanced the carried state"))
+      s.createDataFrame(m.rdd, m.schema)
+    }
+
+    /** Release the final version once nothing reads it. */
+    def release(): Unit = {
+      cur.foreach(releaseCheckpoint)
+      cur = None
+    }
   }
 
   /** Stage pre-split batches as single parquet files with ASCENDING
     * pinned mtimes, so a `maxFilesPerTrigger=1` file source replays them
     * as deterministic micro-batches in order. Shared by every multi-batch
     * streaming harness (append-window, incremental MWAS). Returns the
-    * staging directory. */
+    * staging directory (`<name>_<pid>`, the [[pidScoped]] lifecycle). */
   private[graft] def stageBatches(name: String,
       batches: Seq[DataFrame]): java.io.File = {
-    // per-JVM suffix: with a FIXED name, two concurrent JVMs running the
-    // suite would share one staging dir, and the first to exit would
-    // delete it (cleanOnExit) out from under the peer mid-stream; the
-    // pid scopes both the create-time wipe and the exit-hook delete to
-    // this process. Crash leftovers die at the next same-pid reuse or
-    // tmpdir cleanup — the usual trade for crash-only debris.
-    val staging = new java.io.File(
-      System.getProperty("java.io.tmpdir"),
-      s"${name}_${ProcessHandle.current().pid()}")
-    org.apache.commons.io.FileUtils.deleteQuietly(staging)
-    staging.mkdirs()
-    graft.core.TempDirs.cleanOnExit(staging.toPath)
+    val staging = pidScoped(name)
     batches.zipWithIndex.foreach { case (batch, i) =>
       val k = i + 1
       val tmp = new java.io.File(staging, s"_stage_$k")
@@ -174,7 +285,6 @@ object StreamingQueries {
     // to the events file
     val src = codec.normalize(s.readStream.schema(codec.schema)
       .option("pathGlobFilter", "events.parquet").parquet(dir))
-    val name = "stream_" + UUID.randomUUID().toString.replace("-", "")
     // A stateful stream's shuffle width is frozen into its state store
     // at first run and Structured Streaming has no AQE — so the width
     // must be the STATE-sized one, never a batch-analytics width the
@@ -183,15 +293,8 @@ object StreamingQueries {
     // micro-batch). ClusterProfile publishes the state width as
     // spark.graft.stream.statePartitions; absent (the unprofiled
     // bench/Verify posture) the session width stands, unchanged.
-    val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.getOption("spark.graft.stream.statePartitions")
-      .foreach(w => s.conf.set("spark.sql.shuffle.partitions", w))
-    try {
-      val q = f(src).writeStream.format("memory").queryName(name)
-        .outputMode(outputMode).trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-    } finally s.conf.set("spark.sql.shuffle.partitions", prevParts)
-    s.table(name)
+    runToMemory(s, outputMode,
+      s.conf.getOption("spark.graft.stream.statePartitions"))(f(src))
   }
 
   /** Q24: tumbling 1-hour windows × event_type. */
@@ -349,25 +452,15 @@ object StreamingQueries {
     val staging = stageBatches(
       "graft_stream_append_" + pathTag(dir),
       ranges.map(ev.filter))
-    val schema = ev.schema
-    val src = s.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1").parquet(staging.toString)
-    val name = "stream_" + UUID.randomUUID().toString.replace("-", "")
     // 4 micro-batches × state-store commits per partition: size the state
     // partitioning to the key cardinality (|event_type| × open windows),
     // not the relational default — same scoped-conf pattern as the
     // stream-stream join (partition count is fixed into the checkpoint)
-    val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.set("spark.sql.shuffle.partitions", "8")
-    val q = try src.withWatermark("ts", "10 minutes")
-      .groupBy(col("event_type"), window(col("ts"), "1 hour"))
-      .count()
-      .writeStream.format("memory").queryName(name)
-      .outputMode("append").trigger(Trigger.AvailableNow()).start()
-    finally s.conf.set("spark.sql.shuffle.partitions", prevParts)
-    q.awaitTermination()
-    s.table(name)
-      .select(col("event_type"), col("window.start").as("window_start"),
+    runToMemory(s, "append", Some("8")) {
+      stagedSource(s, ev.schema, staging).withWatermark("ts", "10 minutes")
+        .groupBy(col("event_type"), window(col("ts"), "1 hour"))
+        .count()
+    }.select(col("event_type"), col("window.start").as("window_start"),
         col("count").as("n"))
       .orderBy(col("event_type"), col("window_start"))
   }
@@ -407,20 +500,11 @@ object StreamingQueries {
       expr("""c_user = p_user AND
               purchase_ts >= click_ts AND
               purchase_ts <= click_ts + interval 30 minutes"""))
-    val name = "stream_" + UUID.randomUUID().toString.replace("-", "")
     // a stream-stream join keeps FOUR state stores per shuffle partition
     // (key→count + key+index→row, each side); size the state partitioning
     // to the key cardinality instead of inheriting the relational default —
-    // store-commit overhead, not data volume, dominates otherwise. The
-    // partition count is fixed into the checkpoint at query start, so
-    // scoping the conf around start() is safe.
-    val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.set("spark.sql.shuffle.partitions", "8")
-    val q = try joined.writeStream.format("memory").queryName(name)
-      .outputMode("append").trigger(Trigger.AvailableNow()).start()
-    finally s.conf.set("spark.sql.shuffle.partitions", prevParts)
-    q.awaitTermination()
-    s.table(name)
+    // store-commit overhead, not data volume, dominates otherwise.
+    runToMemory(s, "append", Some("8"))(joined)
       .select(col("c_user").as("user_id"), col("click_id"),
         col("purchase_id"),
         (unix_micros(col("purchase_ts")) - unix_micros(col("click_ts")))

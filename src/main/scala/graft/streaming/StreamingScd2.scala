@@ -3,7 +3,6 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 
 /** Incremental SCD type-2 maintenance — the CDC-ingest shape every
   * dimensional warehouse actually runs: change events arrive in
@@ -46,35 +45,25 @@ object StreamingScd2 {
     val b1 = tsMin + (tsMax - tsMin) / 3
     val b2 = tsMin + 2 * (tsMax - tsMin) / 3
     val staging = StreamingQueries.stageBatches(
-      "graft_stream_scd2_stage_" + graft.streaming.StreamingQueries.pathTag(dir),
+      "graft_stream_scd2_stage_" + StreamingQueries.pathTag(dir),
       Seq(ev.filter(unix_micros(col("ts")) <= b1),
         ev.filter(unix_micros(col("ts")) > b1 &&
           unix_micros(col("ts")) <= b2),
         ev.filter(unix_micros(col("ts")) > b2)))
 
-    val base = new java.io.File(
-      System.getProperty("java.io.tmpdir"),
-      "graft_stream_scd2_" + graft.streaming.StreamingQueries.pathTag(dir) +
-        "_" + ProcessHandle.current().pid())
-    org.apache.commons.io.FileUtils.deleteQuietly(base)
-    base.mkdirs()
-    graft.core.TempDirs.cleanOnExit(base.toPath)
+    val base = StreamingQueries.scratchDir("graft_stream_scd2", dir)
     val closedDir = s"$base/closed"
     // generation-suffixed open-store dirs; the var tracks the live one
     // (foreachBatch executes strictly sequentially under AvailableNow)
     @volatile var openPath: Option[String] = None
 
-    val src = s.readStream.schema(ev.schema)
-      .option("maxFilesPerTrigger", "1").parquet(staging.toString)
-    val q = src.writeStream.foreachBatch { (batch: DataFrame, bid: Long) =>
+    StreamingQueries.runBatchesWithId(s, ev.schema, staging) { (batch, bid) =>
       val ss = batch.sparkSession
       val seed = openPath match {
         case Some(p) => ss.read.parquet(p)
-        case None => ss.createDataFrame(
-          ss.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-          org.apache.spark.sql.types.StructType.fromDDL(
-            "user_id LONG, version INT, status STRING, " +
-              "valid_from TIMESTAMP, event_id LONG"))
+        case None => StreamingQueries.emptyFrame(ss,
+          "user_id LONG, version INT, status STRING, " +
+            "valid_from TIMESTAMP, event_id LONG")
       }
       // open versions re-enter as pseudo-events carrying their TRUE
       // (ts, event_id) sort key and version, so batch-local lag/renumber
@@ -109,9 +98,7 @@ object StreamingScd2 {
           col("valid_from"), col("event_id"))
         .write.mode("overwrite").parquet(nextOpen)
       openPath = Some(nextOpen)
-      ()
-    }.trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
+    }
 
     val closed = scala.util.Try(s.read.parquet(closedDir)).getOrElse(
       s.emptyDataFrame)

@@ -118,44 +118,47 @@ class PipelineSpec extends AnyFunSuite {
     assert(r.head.getAs[Double]("fold_change") === Double.NegativeInfinity)
   }
 
-  test("the delta-driven readout equals the full recompute") {
+  test("two incremental triggers equal the batch run over both batches") {
     import spark.implicits._
-    // three bioprojects of 8 biosamples; the second batch touches bp1
-    // only, so 2·|changed| < |universe| and the delta arm runs
+    // three bioprojects of 8 biosamples, two runs per biosample; the
+    // second batch brings bp1's second runs, so its g1 state rows merge
+    // by addition and g2 appears for bp1 only
     val bps = Seq("bp1", "bp2", "bp3")
-    val catalog = for (bp <- bps; i <- 1 to 8)
-      yield (s"$bp-R$i", s"$bp-BS$i", bp, 1000000.0)
+    val catalog = for (bp <- bps; i <- 1 to 8; r <- Seq("a", "b"))
+      yield (s"$bp-R$i$r", s"$bp-BS$i", bp, 1000000.0)
     val catalogDf = catalog.toDF("run", "bio_sample", "bio_project", "spots")
     val sets = bps.zipWithIndex.map { case (bp, k) =>
       (bp, "tissue", "liver", (1 to 4).map(i => s"$bp-BS$i"), 4, true, 8,
         k.toLong)
     }.toDF("bioproject", "attributes", "values", "members", "n_stored",
       "include", "n_biosamples", "set_id")
-    val first = catalog.map { case (run, _, bp, _) =>
-      (run, "g1", (run.hashCode & 0xff).toDouble) }
-    val second = catalog.filter(_._3 == "bp1").map { case (run, _, _, _) =>
-      (run, "g2", (run.hashCode & 0x7f).toDouble + 1) }
+    val runs = catalog.map(_._1)
+    val first = runs.filter(_.endsWith("a"))
+      .map(run => (run, "g1", (run.hashCode & 0xff).toDouble))
+    val second = runs.filter(r => r.startsWith("bp1") && r.endsWith("b"))
+      .flatMap(run => Seq((run, "g1", (run.hashCode & 0x3f).toDouble),
+        (run, "g2", (run.hashCode & 0x7f).toDouble + 1)))
     val batches = Seq(first, second)
       .map(_.toDF("run", "group", "quantifier"))
+    val cfg = MwasConfig(onlyTTest = true)
 
-    def stream(cfg: MwasConfig): Set[String] = {
-      val pdims = Pipeline.dims(catalogDf, sets)
-      val nUniverse = pdims.bpUniverse.count()
-      val (_, out) = batches.foldLeft(
-          (Option.empty[org.apache.spark.sql.DataFrame],
-            Option.empty[org.apache.spark.sql.DataFrame])) {
-        case ((state, results), batch) =>
-          val (next, full) = Pipeline.incrementalTrigger(batch, catalogDf,
-            sets, cfg, pdims, nUniverse, state, results)
-          (Some(next), Some(full))
-      }
-      out.get.drop("runtime_seconds", "memory_usage_bytes").collect()
+    val pdims = Pipeline.dims(catalogDf, sets)
+    val streamed = batches.foldLeft(
+        (Option.empty[org.apache.spark.sql.DataFrame],
+          Option.empty[org.apache.spark.sql.DataFrame])) {
+      case ((state, _), batch) =>
+        val (next, full) = Pipeline.incrementalTrigger(batch, catalogDf,
+          sets, cfg, pdims, state)
+        (Some(next), Some(full))
+    }._2.get
+    def rows(df: org.apache.spark.sql.DataFrame): Set[String] =
+      df.drop("runtime_seconds", "memory_usage_bytes").collect()
         .map(_.toSeq.mkString("|")).toSet
-    }
 
-    val full = stream(MwasConfig(onlyTTest = true))
-    assert(full.size === 4) // (g1 × 3 bioprojects) + (g2 × bp1)
-    assert(stream(MwasConfig(onlyTTest = true, deltaReadout = true)) === full)
+    val out = rows(streamed)
+    assert(out.size === 4) // (g1 × 3 bioprojects) + (g2 × bp1)
+    assert(out === rows(Pipeline.run(batches.reduce(_ union _), catalogDf,
+      sets, cfg)))
   }
 
   test("catalog-input join and state-aggregation exchange are each " +

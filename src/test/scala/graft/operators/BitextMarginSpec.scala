@@ -83,8 +83,11 @@ class BitextMarginSpec extends AnyFunSuite {
     // reproduce the batch neighborhoods exactly after the last trigger
     val batch = EmbeddingQueries.bitextMarginMine(spark, dir)
       .collect().map(_.toString).sorted
-    val stream = EmbeddingQueries.streamBitextMine(spark, dir)
-      .collect().map(_.toString).sorted
+    val (out, stray) = BoundedState.stray(spark)(
+      EmbeddingQueries.streamBitextMine(spark, dir))
+    // the readout is parquet: no heap remnant or static side stays resident
+    assert(stray.isEmpty, s"stream left unread persistent RDDs $stray")
+    val stream = out.collect().map(_.toString).sorted
     assert(stream.length == batch.length)
     assert(stream.sameElements(batch))
   }

@@ -11,7 +11,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * identity CC(contract(G) ∪ E') = CC(G ∪ E') says staging order
   * cannot matter. A second gate pins that the final mapping state is
   * one row per NON-SINGLETON vertex (the state-size claim), by
-  * construction of the converged star relation. */
+  * construction of the converged star relation. The stream also leaves
+  * no superseded mapping or per-trigger checkpoint resident. */
 class StreamingComponentsSpec extends AnyFunSuite {
 
   private val dir = "/root/testdata/sf0.001"
@@ -59,7 +60,11 @@ class StreamingComponentsSpec extends AnyFunSuite {
   test("streamed components are bit-identical to the batch clustering") {
     val batch = DedupQueries.dedupComponents(spark, dir)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getBoolean(2)))
-    val stream = StreamingComponentsQueries.streamComponents(spark, dir)
+    val (out, stray) = BoundedState.stray(spark)(
+      StreamingComponentsQueries.streamComponents(spark, dir))
+    // only the final mapping, which the readout reads, may stay resident
+    assert(stray.isEmpty, s"stream left unread persistent RDDs $stray")
+    val stream = out
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getBoolean(2)))
     assert(stream.length == batch.length)
     assert(stream.sortBy(_._1).sameElements(batch.sortBy(_._1)),

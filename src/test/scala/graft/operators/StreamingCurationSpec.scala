@@ -12,6 +12,8 @@ import org.scalatest.funsuite.AnyFunSuite
   *      against the same SQL through Verify.
   *   2. Append-only exact dedup really is exact under id-ordered
   *      arrival: no surviving text hash appears twice in the output.
+  *   3. Bounded state: no superseded mapping or per-trigger checkpoint
+  *      stays resident after the stream.
   */
 class StreamingCurationSpec extends AnyFunSuite {
 
@@ -25,8 +27,11 @@ class StreamingCurationSpec extends AnyFunSuite {
     .getOrCreate()
 
   test("incremental manifest equals the batch pipeline's") {
-    val stream = StreamingCurationQueries
-      .streamCorpusPipeline(spark, dir).collect().map(_.toSeq)
+    val (out, stray) = BoundedState.stray(spark)(
+      StreamingCurationQueries.streamCorpusPipeline(spark, dir))
+    // only the final mapping, which the readout reads, may stay resident
+    assert(stray.isEmpty, s"stream left unread persistent RDDs $stray")
+    val stream = out.collect().map(_.toSeq)
     val batch = DedupQueries
       .corpusPipelineE2e(spark, dir).collect().map(_.toSeq)
     assert(stream.nonEmpty)

@@ -39,7 +39,11 @@ class StreamingDedupSpec extends AnyFunSuite {
       .coalesce(1).write.mode("overwrite")
       .parquet(s"$dir/documents.parquet")
 
-    val out = StreamingDedupQueries.streamMinhashDedup(spark, dir)
+    val (df, stray) = BoundedState.stray(spark)(
+      StreamingDedupQueries.streamMinhashDedup(spark, dir))
+    // the readout is parquet: no per-trigger checkpoint stays resident
+    assert(stray.isEmpty, s"stream left unread persistent RDDs $stray")
+    val out = df
       .collect()
       .map(r => (r.getLong(0),
         if (r.isNullAt(1)) None else Some(r.getLong(1)),

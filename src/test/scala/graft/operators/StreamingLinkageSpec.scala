@@ -26,7 +26,11 @@ class StreamingLinkageSpec extends AnyFunSuite {
     val batch = LinkageQueries.entityResolve(spark, dir)
       .collect()
       .map(r => (r.getLong(0), r.getString(1), r.getLong(2), r.getBoolean(3)))
-    val stream = StreamingLinkageQueries.streamEntityResolve(spark, dir)
+    val (out, stray) = BoundedState.stray(spark)(
+      StreamingLinkageQueries.streamEntityResolve(spark, dir))
+    // only the staged dirty relation, which the readout reads, may stay
+    assert(stray.isEmpty, s"stream left unread persistent RDDs $stray")
+    val stream = out
       .collect()
       .map(r => (r.getLong(0), r.getString(1), r.getLong(2), r.getBoolean(3)))
     assert(stream.length == batch.length)

@@ -17,6 +17,8 @@ import org.scalatest.funsuite.AnyFunSuite
   *      original — so each planted cluster is necessarily a
   *      new-against-historical-store probe hit, not a within-batch
   *      pair.
+  *   3. Bounded state: no superseded mapping or per-trigger checkpoint
+  *      stays resident after the stream.
   */
 class StreamingPhashSpec extends AnyFunSuite {
 
@@ -31,7 +33,11 @@ class StreamingPhashSpec extends AnyFunSuite {
 
   test("incremental phash dedup equals the one-shot batch run exactly; " +
       "re-encode twins resolve across triggers") {
-    val stream = StreamingPhashQueries.streamPhashDedup(spark, dir)
+    val (out, stray) = BoundedState.stray(spark)(
+      StreamingPhashQueries.streamPhashDedup(spark, dir))
+    // only the final mapping, which the readout reads, may stay resident
+    assert(stray.isEmpty, s"stream left unread persistent RDDs $stray")
+    val stream = out
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
         r.getBoolean(3)))
     val batch = MultimodalQueries.dedupImagePhash(spark, dir)
