@@ -5,6 +5,7 @@ import java.nio.charset.StandardCharsets
 
 import com.sun.net.httpserver.{HttpExchange, HttpServer}
 
+import org.apache.spark.SparkThrowable
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{col, struct, to_json}
 import org.apache.spark.sql.types.{DoubleType, StringType, StructField, StructType}
@@ -47,10 +48,13 @@ object MwasServer {
           .collect { case kv if kv.startsWith("flag=") =>
             java.net.URLDecoder.decode(kv.stripPrefix("flag="), "UTF-8") }
           .toSet
-        val cfg = MwasIntake.flagsToConfig(flags)
+        val cfg = try MwasIntake.flagsToConfig(flags) catch {
+          case e: NumberFormatException =>
+            respond(ex, 400, s"""{"error":${jsonStr(e.toString)}}"""); return
+        }
 
         import spark.implicits._
-        // FAILFAST: a malformed body must be a 500, not a silent
+        // FAILFAST: a malformed body must be a 400, not a silent
         // zero-row 200 that reads as "no significant results"
         val input = spark.read.schema(inputSchema)
           .option("mode", "FAILFAST")
@@ -71,12 +75,24 @@ object MwasServer {
             s""""results":${rows.mkString("[", ",", "]")}}""")
       } catch {
         case e: Throwable =>
-          respond(ex, 500, s"""{"error":${jsonStr(e.toString)}}""")
+          respond(ex, if (badBody(e)) 400 else 500,
+            s"""{"error":${jsonStr(e.toString)}}""")
       }
 
     server.start()
     server
   }
+
+  /** The request's own fault: its body failed FAILFAST parsing — not
+    * JSON, or a field of the wrong type such as a non-numeric quantifier.
+    * The parse runs inside the request's job, so the failure is told from
+    * an engine failure by its cause chain, at no extra job. */
+  private def badBody(e: Throwable): Boolean =
+    Iterator.iterate(e)(_.getCause).takeWhile(_ != null).exists {
+      case t: SparkThrowable =>
+        Option(t.getCondition).exists(_.startsWith("MALFORMED_RECORD_IN_PARSING"))
+      case _ => false
+    }
 
   private def jsonStr(s: String): String = graft.core.JsonUtil.escape(s)
 

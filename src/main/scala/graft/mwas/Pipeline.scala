@@ -1,5 +1,6 @@
 package graft.mwas
 
+import scala.collection.immutable.ArraySeq
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.{DataFrame, Row}
@@ -7,19 +8,17 @@ import org.apache.spark.sql.functions._
 
 import graft.functions.StatFunctions.{log2FoldChange, rpm}
 import graft.functions.WelchTTest.welch_t
-import graft.stats.PermutationTest
-
-/** Permutation-kernel output row (top-level: generated projections need
-  * public accessor access). */
-case class PermOut(stat: Double, p: Double, method: String)
+import graft.stats.{PermResult, PermutationTest}
 
 /** One (group × set) contrast of a bioproject, as [[Pipeline.contrastsUdf]]
-  * derives it (top-level for the same reason as [[PermOut]]). */
+  * derives it, routed and tested (top-level: generated projections need
+  * public accessor access). `perm` is empty on the Welch route and in
+  * statistic-only mode. */
 case class Contrast(group: String, attributes: String, values: String,
     members: Seq[String], include: Boolean, num_true: Long, num_false: Long,
     mean_rpm_true: Double, mean_rpm_false: Double,
-    sd_rpm_true: Double, sd_rpm_false: Double, perm_capped: Boolean,
-    stored_vals: Array[Double], all_vals: Array[Double])
+    sd_rpm_true: Double, sd_rpm_false: Double, is_t_test: Boolean,
+    perm: Option[PermResult])
 
 /** Readout dimensions derived purely from (catalog, sets), both one row per
   * bioproject — see [[Pipeline.dims]]. */
@@ -34,14 +33,13 @@ case class MwasConfig(
     permutationSideCutoff: Int = 4, // min-side size routing :407
     biosampleListCap: Int = 1000, // truncated listing :428-430
     permResamples: Int = 10000, // n_resamples :416
-    permMaxPooled: Int = 20000, // guard: fall back to Welch beyond this
-    // hard cap on OBSERVED NONZERO values per (bioproject, group) handed
-    // to the permutation kernel; larger groups route to Welch (closed form,
-    // still exact) instead of carrying an unbounded value array on every
-    // contrast row — the analog of the reference skipping >50 MB projects
-    // (main/mwas_general.py:72), except nothing is dropped here. 100k
-    // doubles ≈ 800 KB per array.
-    permCollectCap: Int = 100000,
+    // bioprojects whose catalog universe exceeds this route every contrast
+    // to Welch (closed form, still exact) — the analog of the reference
+    // skipping >50 MB projects (main/mwas_general.py:72), except nothing is
+    // dropped here. It is the one bound on the kernel's arrays per task: a
+    // side's observed values never outnumber the universe, so a padded
+    // side holds at most 20000 doubles (160 KB)
+    permMaxPooled: Int = 20000,
     // statistic-only mode for consumers that never read the permutation
     // p-value (the stats slice, the results summary): the permutation
     // route's TEST STATISTIC is the closed-form mean difference — only its
@@ -192,17 +190,29 @@ object Pipeline {
     val PipelineDims(bpUniverse, bpSets) =
       precomputed.getOrElse(dims(catalog, sets))
 
-    // ---- stages 2b–3: bioproject-local contrast statistics ---------------
+    // ---- stages 2b–4: bioproject-local contrasts, routed and tested -------
     // Every readout key carries bio_project and bioprojects are
     // statistically independent, so one row per bioproject — its observed
     // state rows, its sets, its catalog universe — holds everything a
-    // contrast needs, and [[contrastsUdf]] derives all of its
-    // (group × set) contrasts in one pass (reference process_bioproject,
+    // contrast needs, and [[contrastsUdf]] derives, routes and tests all of
+    // its (group × set) contrasts in one pass (reference process_bioproject,
     // main/mwas_general.py:344-679). MEMORY BOUND: one bioproject's
     // observed (group, biosample) rows plus its sets sit in one task — the
     // grain the reference holds as a dense matrix (:477), minus the
-    // implicit zeros, which stay virtual.
+    // implicit zeros, which stay virtual — plus the permutation memo, whose
+    // keys are the per-side nonzero values of that bioproject's contrasts.
+    //
+    // WIDTH PIN (r16 audit): the explicit repartition by bioproject is
+    // load-bearing. The resampling kernel runs in the stage that reads it,
+    // and that stage's input is tiny next to its CPU cost; AQE coalesces
+    // post-shuffle partitions by BYTES, and it once collapsed the kernel
+    // to a 15.9 s single-task straggler at the 10× fixture while the 30×
+    // point, with more bytes, ran faster (NOTES_r16). A user repartition is
+    // never coalesced, and it adds no shuffle: the per-bioproject
+    // aggregate's exchange is this one.
     val obs = state
+      .repartition(state.sparkSession.sparkContext.defaultParallelism,
+        col("bio_project"))
       .select(col("bio_project"), struct(col("group"), col("bio_sample"),
         (col("rpm_sum") / col("n_runs")).as("rpm"), col("n_runs")).as("o"))
       .groupBy(col("bio_project"))
@@ -214,97 +224,24 @@ object Pipeline {
         inline(contrastsUdf(cfg)(col("obs"), col("sets"),
           size(col("all_biosamples")))))
 
-    // ---- stage 4: test routing (O14 :404-419) + significance (:424-434) --
-    // Welch when a side is tiny (or forced), else the permutation test —
-    // run through the value-level memoization the reference keeps as a
-    // driver-side dict (O10 :351,396-399): `distinct` the test inputs,
-    // evaluate each distinct input ONCE, join results back. Deterministic
-    // and parallel-safe where the reference's dict was neither.
-    val isTTest = lit(cfg.onlyTTest) ||
-      least(col("num_true"), col("num_false")) < lit(cfg.permutationSideCutoff) ||
-      (col("num_true") + col("num_false")) > cfg.permMaxPooled ||
-      col("perm_capped") // values were never collected for capped groups
-    val routed = withStats
+    // the permutation route's statistic is the mean difference; in
+    // statistic-only mode the side means carry it and the p-value is null
+    val (permStat, permStatus) =
+      if (cfg.statClosedForm)
+        (col("mean_rpm_true") - col("mean_rpm_false"),
+          lit("permutation_test (stat_only)"))
+      else (col("perm.statistic"),
+        concat(lit("permutation_test ("), col("perm.method"), lit(")")))
+    val tested = withStats
       .withColumn("w", welch_t(
         col("mean_rpm_true"), col("sd_rpm_true"), col("num_true").cast("double"),
         col("mean_rpm_false"), col("sd_rpm_false"), col("num_false").cast("double")))
-      .withColumn("is_t_test", isTTest)
-
-    val withTest =
-      if (cfg.statClosedForm)
-        // the permutation route's statistic is the mean difference — the
-        // side means already carry it; only the p-value
-        // would need the resampling kernel, and this mode's consumers
-        // never read it
-        routed
-          .withColumn("test_statistic",
-            when(col("is_t_test"), col("w.t"))
-              .otherwise(col("mean_rpm_true") - col("mean_rpm_false")))
-          .withColumn("p_value",
-            when(col("is_t_test"), col("w.p")))
-          .withColumn("status_base",
-            when(col("is_t_test"), lit("t_test"))
-              .otherwise(lit("permutation_test (stat_only)")))
-      else {
-        // the permutation p is a pure function of (stored multiset, group
-        // multiset, polarity, side sizes) — hash of the sorted arrays is
-        // the memo key. xxhash64 hashes ARRAY columns natively (recursive
-        // element hash, codegen'd); the arrays were already sorted by
-        // [[contrastsUdf]], so this is a straight pass over the doubles —
-        // no JSON string ever built.
-        val keyed = routed.withColumn("memo_key",
-          when(col("is_t_test"), lit(null).cast("long")).otherwise(
-            xxhash64(col("stored_vals"), col("all_vals"), col("include"),
-              col("num_true"), col("num_false"))))
-        // the hash leads the join key for cheap shuffle/equality, but the
-        // REAL inputs ride along: a 64-bit collision is even odds around
-        // 4e9 distinct tests (birthday bound) — at the 100 TB target that
-        // is not ignorable, and a collision would silently hand one
-        // contrast another's p (r9 review)
-        val memoCols = Seq("memo_key", "stored_vals", "all_vals",
-          "include", "num_true", "num_false")
-        // early-stop bound: 20× the significance threshold — tests that are
-        // decisively insignificant settle at the 1000-resample checkpoint;
-        // anything near or under the threshold runs the full budget
-        val permUdf = Pipeline.permPaddedUdf(cfg.permResamples,
-          earlyStopAbove = 20.0 * cfg.pValueThreshold)
-        // WIDTH PIN (r16 audit): the explicit repartition between the
-        // memo dedup and the kernel projection is load-bearing. Without
-        // it, AQE coalesces the dedup's post-shuffle partitions by
-        // BYTES — and memo rows are tiny, so the CPU-heavy resampling
-        // kernel (the one place bytes wildly understate cost) collapsed
-        // to a 15.9 s single-task straggler at the 10× fixture while
-        // the 30× point, with more bytes and therefore more coalesced
-        // partitions, ran FASTER (the r15 audit's inverted-curvature
-        // row). A user repartition is never coalesced, the shuffled
-        // relation is the distinct memo tuples (small by construction),
-        // and hash-on-key spreads the early-stop cost variance across
-        // the full width. Measured 26.1 → 9.5 s at 10×; monotone
-        // 1×/10×/30× walls after the pin (NOTES_r16).
-        val permResults = keyed.filter(!col("is_t_test"))
-          .select(memoCols.map(col): _*)
-          .dropDuplicates(memoCols)
-          .repartition(
-            keyed.sparkSession.sparkContext.defaultParallelism)
-          .select(col("memo_key") +: memoCols.drop(1).map(col) :+
-            permUdf(col("stored_vals"), col("all_vals"), col("include"),
-              col("num_true"), col("num_false")).as("perm"): _*)
-        // plain equi-join back on the full memo tuple (AQE broadcasts
-        // when small; at scale the distinct-inputs relation can be large,
-        // so don't force it)
-        keyed
-          .join(permResults, memoCols, "left_outer")
-          .withColumn("test_statistic",
-            when(col("is_t_test"), col("w.t")).otherwise(col("perm.stat")))
-          .withColumn("p_value",
-            when(col("is_t_test"), col("w.p")).otherwise(col("perm.p")))
-          .withColumn("status_base",
-            when(col("is_t_test"), lit("t_test"))
-              .otherwise(concat(lit("permutation_test ("),
-                col("perm.method"), lit(")"))))
-      }
-
-    val tested = withTest
+      .withColumn("test_statistic",
+        when(col("is_t_test"), col("w.t")).otherwise(permStat))
+      .withColumn("p_value",
+        when(col("is_t_test"), col("w.p")).otherwise(col("perm.p_value")))
+      .withColumn("status_base",
+        when(col("is_t_test"), lit("t_test")).otherwise(permStatus))
       .withColumn("fold_change",
         log2FoldChange(col("mean_rpm_true"), col("mean_rpm_false")))
 
@@ -358,59 +295,80 @@ object Pipeline {
     output.coalesce(1).write.mode("overwrite")
       .option("header", "true").csv(dir)
 
-  /** Every (group × set) contrast of one bioproject, from its observed
-    * state rows `obs` (group, bio_sample, rpm, n_runs), its `sets` and its
-    * catalog size `nCat`. Per group: acceptance on the provided run count
-    * (A4 :485-491) and the permutation value cap; per contrast: side sizes
-    * by polarity (:363-372), the size guard (:376), each side's sum and
-    * sum of squares over its own observed members — so an all-zero side's
-    * mean is exactly 0.0, as in the reference's dense `np.mean`
-    * (:384-385) — population sds, and the both-zero-means skip (:388).
+  /** Every (group × set) contrast of one bioproject, routed and tested,
+    * from its observed state rows `obs` (group, bio_sample, rpm, n_runs),
+    * its `sets` and its catalog size `nCat`. Per group: acceptance on the
+    * provided run count (A4 :485-491); per contrast: side sizes by polarity
+    * (:363-372), the size guard (:376), each side's sum and sum of squares
+    * over its own observed members — so an all-zero side's mean is exactly
+    * 0.0, as in the reference's dense `np.mean` (:384-385) — population
+    * sds, and the both-zero-means skip (:388). Rows are sorted by biosample
+    * first, so sums do not depend on the order collect_list happened to
+    * gather them in.
     *
-    * The permutation kernel's inputs are the sorted NONZERO rpms of the
-    * stored side and of the whole group ([[permPaddedUdf]] pads with
-    * implicit zeros, so observed zeros carry nothing). They are filled only
-    * where the kernel can run: values wanted at all, the group's nonzeros
-    * within `permCollectCap` and the pooled universe within
-    * `permMaxPooled`; elsewhere they stay empty and routing sends the
-    * contrast to Welch. Rows are sorted by biosample first, so sums do not
-    * depend on the order collect_list happened to gather them in. */
+    * Routing (O14 :404-419) is decided here, once: Welch when forced, when
+    * a side is smaller than `permutationSideCutoff`, or when the pooled
+    * universe exceeds `permMaxPooled`; otherwise the permutation test over
+    * virtually-zero-padded sides. Each side is its members' NONZERO rpms,
+    * sorted ascending, then padded with implicit zeros up to its true
+    * cardinality, reproducing the reference's dense per-bioproject vectors
+    * (:477) without materializing them. Identical (true values, false
+    * values, side sizes) inputs are tested once per bioproject — the
+    * reference's `reusable_results` dict (O10 :351,396-399), at its grain,
+    * deterministic where the dict was not. */
   private[mwas] def contrastsUdf(cfg: MwasConfig) = {
-    val threshold = cfg.groupNonzerosThreshold
-    val cap = cfg.permCollectCap
-    val needVals = !cfg.onlyTTest && !cfg.statClosedForm
-    val maxPooled = cfg.permMaxPooled
+    // early-stop bound: 20× the significance threshold — tests that are
+    // decisively insignificant settle at the 1000-resample checkpoint;
+    // anything near or under the threshold runs the full budget
+    val earlyStopAbove = 20.0 * cfg.pValueThreshold
     udf((obs: Seq[Row], sets: Seq[Row], nCat: Int) => {
-      val bpVals = needVals && nCat <= maxPooled
+      val bpTTest = cfg.onlyTTest || nCat > cfg.permMaxPooled
       val setRows = sets.map { r =>
         val members = r.getSeq[String](2)
         (r, members, new java.util.HashSet[String](members.asJava))
+      }
+      val memo = scala.collection.mutable.HashMap.empty[
+        (Seq[Double], Seq[Double], Long, Long), PermResult]
+      def permutation(trueObs: Array[Double], falseObs: Array[Double],
+          nTrue: Long, nFalse: Long): PermResult = {
+        def padded(v: Array[Double], n: Long) =
+          java.util.Arrays.copyOf(v, math.max(n.toInt, v.length))
+        val key = (ArraySeq.unsafeWrapArray(trueObs),
+          ArraySeq.unsafeWrapArray(falseObs), nTrue, nFalse)
+        memo.getOrElseUpdate(key, PermutationTest.test(padded(trueObs, nTrue),
+          padded(falseObs, nFalse), cfg.permResamples, exactCutoff = 20000,
+          earlyStopAbove))
       }
       val out = scala.collection.mutable.ArrayBuffer.empty[Contrast]
       obs.groupBy(_.getString(0)).foreach { case (group, rows) =>
         val sorted = rows.sortBy(_.getString(1))
         val bs = sorted.map(_.getString(1)).toArray
         val rpm = sorted.map(_.getDouble(2)).toArray
-        val nonzeros = rpm.count(_ != 0)
-        val capped = nonzeros > cap
-        val vals = bpVals && !capped
-        if (sorted.map(_.getLong(3)).sum >= threshold) {
-          // primitive sort, same Double.compare order: `sorted` boxes through
-          // Sorting.stableSort, the largest JIT compile of a warm job
-          val allVals = if (vals) rpm.filter(_ != 0) else Array.empty[Double]
-          java.util.Arrays.sort(allVals)
+        // each contrast's per-side nonzeros, copied out before the next
+        val (inVals, outVals) =
+          (new Array[Double](bs.length), new Array[Double](bs.length))
+        if (sorted.map(_.getLong(3)).sum >= cfg.groupNonzerosThreshold) {
           setRows.foreach { case (set, members, memberSet) =>
             val include = set.getBoolean(4)
             val nStored = set.getLong(3)
             val numTrue = if (include) nStored else nCat - nStored
             val numFalse = nCat - numTrue
             if (numTrue >= 2 && numFalse >= 2) {
+              val isTTest = bpTTest ||
+                math.min(numTrue, numFalse) < cfg.permutationSideCutoff
+              val split = !cfg.statClosedForm && !isTTest
+              var (nIn, nOut) = (0, 0)
               var (sumIn, sqIn, sumOut, sqOut) = (0.0, 0.0, 0.0, 0.0)
               var i = 0
               while (i < bs.length) {
                 val v = rpm(i)
-                if (memberSet.contains(bs(i))) { sumIn += v; sqIn += v * v }
-                else { sumOut += v; sqOut += v * v }
+                if (memberSet.contains(bs(i))) {
+                  sumIn += v; sqIn += v * v
+                  if (split && v != 0) { inVals(nIn) = v; nIn += 1 }
+                } else {
+                  sumOut += v; sqOut += v * v
+                  if (split && v != 0) { outVals(nOut) = v; nOut += 1 }
+                }
                 i += 1
               }
               val (sumT, sqT, sumF, sqF) =
@@ -419,18 +377,22 @@ object Pipeline {
               val meanT = sumT / numTrue
               val meanF = sumF / numFalse
               if (!(meanT == 0 && meanF == 0)) {
-                val storedVals =
-                  if (!vals) Array.empty[Double]
-                  else bs.indices.collect {
-                    case j if rpm(j) != 0 && memberSet.contains(bs(j)) =>
-                      rpm(j)
-                  }.toArray
-                java.util.Arrays.sort(storedVals)
+                val perm = Option.when(split) {
+                  // primitive sort, same Double.compare order: `sorted`
+                  // boxes through Sorting.stableSort, the largest JIT
+                  // compile of a warm job
+                  val stored = java.util.Arrays.copyOf(inVals, nIn)
+                  val other = java.util.Arrays.copyOf(outVals, nOut)
+                  java.util.Arrays.sort(stored)
+                  java.util.Arrays.sort(other)
+                  if (include) permutation(stored, other, numTrue, numFalse)
+                  else permutation(other, stored, numTrue, numFalse)
+                }
                 out += Contrast(group, set.getString(0), set.getString(1),
                   members, include, numTrue, numFalse, meanT, meanF,
                   math.sqrt(math.max(sqT / numTrue - meanT * meanT, 0.0)),
                   math.sqrt(math.max(sqF / numFalse - meanF * meanF, 0.0)),
-                  capped, storedVals, allVals)
+                  isTTest, perm)
               }
             }
           }
@@ -439,36 +401,4 @@ object Pipeline {
       out.toSeq
     })
   }
-
-  /** Permutation test over virtually-zero-padded sides.
-    *
-    * Inputs are the OBSERVED values only; each side is padded with implicit
-    * zeros up to its true cardinality (nTrue/nFalse from set membership),
-    * reproducing the reference's dense per-bioproject vectors
-    * (main/mwas_general.py:477) without ever materializing them in the
-    * plan. The non-stored side's observations are recovered by multiset
-    * subtraction (array_except can't: it has set semantics and drops
-    * duplicate rpm values). */
-  private[mwas] def permPaddedUdf(resamples: Int,
-      earlyStopAbove: Double = Double.PositiveInfinity) =
-    udf((stored: Seq[Double], all: Seq[Double], include: Boolean,
-        nTrue: Long, nFalse: Long) => {
-      val cnt = scala.collection.mutable.HashMap.empty[Double, Int]
-      stored.foreach(v => cnt.update(v, cnt.getOrElse(v, 0) + 1))
-      val other = scala.collection.mutable.ArrayBuffer.empty[Double]
-      all.foreach { v =>
-        val c = cnt.getOrElse(v, 0)
-        if (c > 0) cnt.update(v, c - 1) else other += v
-      }
-      val trueObs = if (include) stored else other.toSeq
-      val falseObs = if (include) other.toSeq else stored
-      val x = trueObs.toArray[Double] ++
-        new Array[Double]((nTrue - trueObs.length).max(0).toInt)
-      val y = falseObs.toArray[Double] ++
-        new Array[Double]((nFalse - falseObs.length).max(0).toInt)
-      val r = PermutationTest.test(x, y, resamples, exactCutoff = 20000,
-        earlyStopAbove)
-      PermOut(r.statistic, r.p_value, r.method)
-    }).asNondeterministic() // deterministic in fact; flag stops Catalyst
-      // from duplicating the (expensive) call during plan rewrites
 }

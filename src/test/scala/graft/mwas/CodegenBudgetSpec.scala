@@ -49,6 +49,23 @@ trait CodegenBudget extends AnyFunSuite {
       ("run,group,quantifier" +: rows).mkString("\n"))
   }
 
+  /** Cold and warm compiles of a default-flag job over pre-condensed sets:
+    * a 2-member (Welch), a 5-member (exact: C(20,5) within the 20000
+    * enumeration cutoff) and a 6-member (Monte-Carlo) set per bioproject,
+    * so all three routes run. */
+  protected def defaultFlagJob(dir: String): (Long, Long) = {
+    import spark.implicits._
+    writeInputs(dir)
+    val sets = for (bp <- 1 to 2; (n, inc) <- Seq((2, true), (5, false),
+        (6, true)))
+      yield (s"bp$bp", "factor", s"v$n", (1 to n).map(i => s"P$bp-BS$i"),
+        n, inc, 20)
+    sets.toDF("bioproject", "attributes", "values", "members", "n_stored",
+      "include", "n_biosamples")
+      .write.mode("overwrite").parquet(s"$dir/sets")
+    coldWarm(dir, s"$dir/sets")
+  }
+
   /** Janino compiles of a cold and then a warm `MwasCli.run` over
     * `dir`'s inputs and `metadata`; both jobs must give the same counts. */
   protected def coldWarm(dir: String, metadata: String,
@@ -72,20 +89,23 @@ class CodegenBudgetSpec extends CodegenBudget {
 
   test("a warm MwasCli job compiles almost nothing; a cold one stays " +
       "under the codegen cache") {
-    import spark.implicits._
     val dir = graft.core.TempDirs.create("graft_codegen")
-    writeInputs(dir)
-    // pre-condensed sets: a 2-member (Welch), a 5-member (exact: C(20,5)
-    // within the 20000 enumeration cutoff) and a 6-member (Monte-Carlo)
-    // set per bioproject; default flags, so all three routes run
-    val sets = for (bp <- 1 to 2; (n, inc) <- Seq((2, true), (5, false),
-        (6, true)))
-      yield (s"bp$bp", "factor", s"v$n", (1 to n).map(i => s"P$bp-BS$i"),
-        n, inc, 20)
-    sets.toDF("bioproject", "attributes", "values", "members", "n_stored",
-      "include", "n_biosamples")
-      .write.mode("overwrite").parquet(s"$dir/sets")
-    val (cold, warm) = coldWarm(dir, s"$dir/sets")
+    val (cold, warm) = defaultFlagJob(dir)
+    assert(cold <= 90, s"cold job compiled $cold classes")
+    assert(warm <= 5, s"warm job compiled $warm classes")
+  }
+}
+
+/** The same job with every join a shuffle join, as a large input plans it:
+  * the sort-merge joins add stages, so this is where a second reader of the
+  * readout would overflow the cache. */
+class CodegenBudgetNoBroadcastSpec extends CodegenBudget {
+
+  test("the default-flag job fits the codegen cache with broadcast joins " +
+      "off") {
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    val dir = graft.core.TempDirs.create("graft_codegen_nobc")
+    val (cold, warm) = defaultFlagJob(dir)
     assert(cold <= 90, s"cold job compiled $cold classes")
     assert(warm <= 5, s"warm job compiled $warm classes")
   }

@@ -62,11 +62,46 @@ class MwasServerSpec extends AnyFunSuite {
       assert(r2.contains("significant"))
       assert(r2.contains(""""significant":1"""))
 
-      // malformed body is a clean 500 (FAILFAST parse), never a silent
+      // malformed body is a clean 400 (FAILFAST parse), never a silent
       // zero-row 200
       val (c3, r3) = post(base, "not json")
-      assert(c3 === 500, s"$c3 $r3")
+      assert(c3 === 400, s"$c3 $r3")
       assert(r3.contains("error"), r3)
     } finally server.stop(0)
+  }
+
+  test("a client error answers 400; an engine failure answers 500") {
+    import spark.implicits._
+    val catalog = (1 to 6)
+      .map(i => (s"R$i", s"BS$i", "bp1", 1000000.0))
+      .toDF("run", "bio_sample", "bio_project", "spots")
+    val sets = Seq(("bp1", "tissue", "liver", Seq("BS1", "BS2", "BS3"),
+        3, true, 6, 42L))
+      .toDF("bioproject", "attributes", "values", "members", "n_stored",
+        "include", "n_biosamples", "set_id")
+    val body = (1 to 6)
+      .map(i => s"""{"run":"R$i","group":"g1","quantifier":$i.0}""")
+      .mkString("[", ",", "]")
+    // the engine fails on a catalog without spots, whatever the request
+    val servers = Seq(catalog, catalog.drop("spots"))
+      .map(MwasServer.start(spark, _, sets, port = 0))
+    try {
+      val Seq(good, broken) = servers.map(s =>
+        s"http://127.0.0.1:${s.getAddress.getPort}/run_mwas")
+      val nonNumeric = body.replace("\"quantifier\":3.0",
+        "\"quantifier\":\"three\"")
+      for ((what, url, b) <- Seq(
+          ("non-numeric quantifier", good, nonNumeric),
+          ("truncated body", good, body.dropRight(2)),
+          ("non-numeric flag", good + "?flag=--p-threshold%3Dlow", body))) {
+        val (code, resp) = post(url, b)
+        assert(code === 400, s"$what: $code $resp")
+        assert(resp.contains("error"), s"$what: $resp")
+      }
+      val (code, resp) = post(broken, body)
+      assert(code === 500, s"$code $resp")
+      // a valid request still answers 200 after the client errors
+      assert(post(good, body)._1 === 200)
+    } finally servers.foreach(_.stop(0))
   }
 }

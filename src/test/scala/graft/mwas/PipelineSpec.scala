@@ -54,11 +54,11 @@ class PipelineSpec extends AnyFunSuite {
     assert(back.select(col("bioproject")).as[String].head() === "bp1")
   }
 
-  test("a group over permCollectCap completes and routes to the Welch " +
-      "path (no unbounded value buffer)") {
+  test("a bioproject over permMaxPooled routes to the Welch path") {
     import spark.implicits._
     // 10 nonzero biosamples; stored side {BS1..BS5} → min side 5 >= the
-    // permutation cutoff (4), so ONLY the cap can force the t-test route
+    // permutation cutoff (4), so ONLY the pooled bound can force the t-test
+    // route
     val catalog = (1 to 10)
       .map(i => (s"R$i", s"BS$i", "bp1", 1000000.0))
       .toDF("run", "bio_sample", "bio_project", "spots")
@@ -73,14 +73,13 @@ class PipelineSpec extends AnyFunSuite {
       Pipeline.run(input, catalog, sets, cfg)
         .select(col("status")).as[String].head()
 
-    // sanity: uncapped, this contrast takes the permutation route
+    // sanity: within the bound, this contrast takes the permutation route
     assert(statusWith(MwasConfig()).startsWith("permutation_test"))
-    // capped below the group's 10 nonzeros: values are never collected
-    // and the contrast routes to the closed-form Welch t — completing
-    // where an unbounded collect_list would have buffered the whole group
-    val capped = Pipeline.run(input, catalog, sets,
-      MwasConfig(permCollectCap = 5)).cache()
-    val r = capped.collect().head
+    // a pooled universe of 10 over the bound of 9: no side is split out
+    // for the kernel and the contrast routes to the closed-form Welch t
+    val bounded = Pipeline.run(input, catalog, sets,
+      MwasConfig(permMaxPooled = 9)).cache()
+    val r = bounded.collect().head
     assert(r.getAs[String]("status").startsWith("t_test"))
     assert(!r.getAs[Double]("test_statistic").isNaN)
     assert(r.getAs[Long]("num_true") === 5L)
@@ -88,6 +87,65 @@ class PipelineSpec extends AnyFunSuite {
     // t = (3-8)/sqrt(2/5 + 2/5) = -5.590169...
     assert(math.abs(r.getAs[Double]("test_statistic") -
       (-5.0 / math.sqrt(0.8))) < 1e-9)
+  }
+
+  test("the kernel's sides are the members' nonzero multisets, zero-padded; " +
+      "memo hits return the same result") {
+    import spark.implicits._
+    // 24 biosamples: BS1..BS20 provided, their rpms repeating on both sides
+    // of every set (BS2, BS7, ... explicit zeros), BS21..BS24 catalog-only
+    // (implicit zeros). g1 and g2 carry identical values, so each of their
+    // contrasts is the other's memo hit; g3 moves BS20, a non-member of
+    // every set, so none of its contrasts is
+    val n = 24
+    val base = Array(2.0, 0.0, 5.0, 2.0, 7.0)
+    def value(g: String, i: Int): Double =
+      if (i > 20) 0.0 else if (g == "g3" && i == 20) 3.0 else base((i - 1) % 5)
+    val catalog = (1 to n)
+      .map(i => (s"R$i", s"BS$i", "bp1", 1000000.0))
+      .toDF("run", "bio_sample", "bio_project", "spots")
+    val input = (for (g <- Seq("g1", "g2", "g3"); i <- 1 to 20)
+      yield (s"R$i", g, value(g, i))).toDF("run", "group", "quantifier")
+    // the same 12 stored members with both polarities (Monte-Carlo: C(24,
+    // 12) resamples past the enumeration cutoff), and a 4-member set
+    // (exact: C(24, 4) = 10626)
+    val sets = Seq(("a", 12, true), ("b", 12, false), ("c", 4, true))
+    val setsDf = sets.zipWithIndex.map { case ((v, k, inc), id) =>
+        ("bp1", "f", v, (1 to k).map(i => s"BS$i"), k, inc, n, id.toLong)
+      }.toDF("bioproject", "attributes", "values", "members", "n_stored",
+        "include", "n_biosamples", "set_id")
+    val cfg = MwasConfig()
+    val out = Pipeline.run(input, catalog, setsDf, cfg).collect()
+    assert(out.length === 9)
+
+    // each side by hand: its members' nonzero rpms sorted ascending, then
+    // its zeros, observed and implicit alike
+    def side(g: String, in: Int => Boolean): Array[Double] = {
+      val xs = (1 to n).filter(in).map(value(g, _)).toArray
+      val nonzero = xs.filter(_ != 0)
+      java.util.Arrays.sort(nonzero)
+      nonzero ++ new Array[Double](xs.length - nonzero.length)
+    }
+    for (r <- out) {
+      val g = r.getAs[String]("group")
+      val (v, k, inc) = sets.find(_._1 == r.getAs[String]("metadata_value")).get
+      val isTrue = (i: Int) => (i <= k) == inc
+      val e = graft.stats.PermutationTest.test(side(g, isTrue),
+        side(g, i => !isTrue(i)), cfg.permResamples, 20000,
+        20.0 * cfg.pValueThreshold)
+      assert(r.getAs[String]("status")
+        .startsWith(s"permutation_test (${e.method})"), s"$g $v")
+      assert(r.getAs[Double]("test_statistic") === e.statistic, s"$g $v")
+      assert(r.getAs[Double]("p_value") === e.p_value, s"$g $v")
+    }
+    val statuses = out.map(_.getAs[String]("status"))
+    assert(statuses.exists(_.contains("permutation_exact")) &&
+      statuses.exists(_.contains("permutation_mc")), statuses.mkString(", "))
+    def byGroup(g: String) = out.filter(_.getAs[String]("group") == g)
+      .map(r => (r.getAs[String]("metadata_value"),
+        r.getAs[Double]("test_statistic"), r.getAs[Double]("p_value"))).toSet
+    assert(byGroup("g1") === byGroup("g2"))
+    assert((byGroup("g1") intersect byGroup("g3")).isEmpty)
   }
 
   test("an all-zero true side has mean exactly 0.0 and fold change " +
@@ -179,9 +237,9 @@ class PipelineSpec extends AnyFunSuite {
     try {
       val plan = Pipeline.run(input, catalog, sets, MwasConfig())
         .queryExecution.executedPlan.toString
-      // the memo dedup reads the readout twice (distinct tuples, join
-      // back); both reads must share one state aggregation and one
-      // catalog⋈input join instead of re-deriving them per consumer
+      // the state aggregation and the catalog⋈input join feed the
+      // per-bioproject pass once each; a second reader (the memo dedup's
+      // join-back once was one) must share them, not re-derive them
       // (ReusedExchange lines quote the target exchange's description,
       // hence the line-wise filter)
       val lines = plan.linesIterator.filterNot(_.contains("ReusedExchange"))
@@ -197,5 +255,37 @@ class PipelineSpec extends AnyFunSuite {
       assert(runJoin.size === 1,
         s"catalog⋈input join planned ${runJoin.size} times:\n$plan")
     } finally spark.conf.set("spark.sql.adaptive.enabled", "true")
+  }
+
+  test("the per-bioproject pass is planned once, with no memo join-back") {
+    import spark.implicits._
+    val catalog = (1 to 8)
+      .map(i => (s"R$i", s"BS$i", "bp1", 1000000.0))
+      .toDF("run", "bio_sample", "bio_project", "spots")
+    val input = (1 to 8).map(i => (s"R$i", "g1", i.toDouble))
+      .toDF("run", "group", "quantifier")
+    val sets = Seq(("bp1", "tissue", "liver", (1 to 4).map(i => s"BS$i"),
+        4, true, 8, 42L))
+      .toDF("bioproject", "attributes", "values", "members", "n_stored",
+        "include", "n_biosamples", "set_id")
+    // the static plan, with every join a shuffle join: what a large input
+    // plans, and where a second reader of the readout would show
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    try {
+      val plan = Pipeline.run(input, catalog, sets, MwasConfig())
+        .queryExecution.executedPlan.toString
+      val lines = plan.linesIterator.toSeq
+      val generates = lines.filter(_.contains("Generate "))
+      assert(generates.size === 1,
+        s"contrasts Generate planned ${generates.size} times:\n$plan")
+      val memo = lines.filter(l => (l.contains("Join") ||
+          l.contains("Aggregate")) &&
+        Seq("memo_key", "stored_vals", "all_vals").exists(l.contains))
+      assert(memo.isEmpty, s"memo join or dedup planned:\n$plan")
+    } finally {
+      spark.conf.set("spark.sql.adaptive.enabled", "true")
+      spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
+    }
   }
 }
