@@ -1,5 +1,7 @@
 package graft
 
+import java.io.File
+
 import org.apache.spark.sql.SparkSession
 
 /** Perf surface: every SparkEntry query timed on one shared session.
@@ -322,20 +324,13 @@ object Bench {
       .mkString("{", ",", "}")
     val fullLine =
       f"""{"metric":"total","value":$total%.3f,"unit":"sec","reps":$reps,"queries":$fullQs,"samples":$fullSamples,"reruns":$fullReruns,"weather":$weatherJson,"shared_total":$sharedJson$slopeFrag%s,"errors":$errs,"sf":"$sfDir"}"""
-    val fw = new java.io.PrintWriter("BENCH_FULL.json", "UTF-8")
-    try fw.println(fullLine) finally fw.close()
-    // append-only per-run history: spikes become machine-detectable by
-    // comparing a query's new median against its own past lines (a
-    // round's BENCH_r{N}.json keeps only its truncated tail)
-    if (appendsHistory(measured.nonEmpty, sys.env)) {
-      val hw = new java.io.FileWriter("BENCH_HISTORY.jsonl", true)
-      try hw.write(fullLine + "\n") finally hw.close()
-    }
+    record(fullLine, measured.nonEmpty, sys.env)
 
     val budget = 1600 // line bytes; leaves headroom in the 2000-char tail
     val head = f"""{"metric":"total","value":$total%.3f,"unit":"sec","queries":{"""
+    val detail = if (filtered(sys.env)) "null" else "\"BENCH_FULL.json\""
     val tailFmt = (omitted: Int) =>
-      s"""},"omitted":$omitted,"detail":"BENCH_FULL.json","weather":$weatherJson,"shared_total":$sharedJson$slopeFrag,"errors":$errs,"sf":"$sfDir"}"""
+      s"""},"omitted":$omitted,"detail":$detail,"weather":$weatherJson,"shared_total":$sharedJson$slopeFrag,"errors":$errs,"sf":"$sfDir"}"""
     val entries = measured.sortBy(-_._2)
       .map { case (k, v) => "\"" + k + f"\":$v%.2f" }
     // strict prefix of the slowest-first ordering: stop at the first entry
@@ -359,6 +354,29 @@ object Bench {
     if (errors.nonEmpty) sys.exit(1)
   }
 
+  /** Record a run's full line in `dir`: BENCH_FULL.json, unless the run
+    * is [[filtered]] (its partial line would replace the whole-surface
+    * detail), and the append-only BENCH_HISTORY.jsonl, when
+    * [[appendsHistory]] says so — spikes become machine-detectable by
+    * comparing a query's new median against its own past lines (a round's
+    * BENCH_r{N}.json keeps only its truncated tail). */
+  private[graft] def record(fullLine: String, anyMeasured: Boolean,
+      env: Map[String, String], dir: File = new File(".")): Unit = {
+    if (!filtered(env)) {
+      val fw = new java.io.PrintWriter(new File(dir, "BENCH_FULL.json"), "UTF-8")
+      try fw.println(fullLine) finally fw.close()
+    }
+    if (appendsHistory(anyMeasured, env)) {
+      val hw = new java.io.FileWriter(new File(dir, "BENCH_HISTORY.jsonl"), true)
+      try hw.write(fullLine + "\n") finally hw.close()
+    }
+  }
+
+  /** A run restricted to some queries (`SPARK_GRAFT_BENCH_ONLY`): its line
+    * is partial, so it enters neither BENCH_FULL.json nor the history. */
+  private[graft] def filtered(env: Map[String, String]): Boolean =
+    env.contains("SPARK_GRAFT_BENCH_ONLY")
+
   /** Whether a run's full line enters BENCH_HISTORY.jsonl. Not when
     *   - every query errored: nothing to compare against later, and the
     *     empty queries map would trip BenchDiff's malformed-line guard
@@ -371,8 +389,7 @@ object Bench {
     *     a whole-surface run. */
   private[graft] def appendsHistory(anyMeasured: Boolean,
       env: Map[String, String]): Boolean =
-    anyMeasured && !env.contains("SPARK_GRAFT_PROFILE") &&
-      !env.contains("SPARK_GRAFT_BENCH_ONLY")
+    anyMeasured && !env.contains("SPARK_GRAFT_PROFILE") && !filtered(env)
 
   // lower median: with 3 samples the middle one; robust to one stall
   private def median(ts: Seq[Double]): Double =

@@ -1,6 +1,6 @@
 package graft.mwas
 
-import scala.collection.immutable.ArraySeq
+import scala.collection.mutable.ArrayBuffer
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.{DataFrame, Row}
@@ -36,9 +36,9 @@ case class MwasConfig(
     // bioprojects whose catalog universe exceeds this route every contrast
     // to Welch (closed form, still exact) — the analog of the reference
     // skipping >50 MB projects (main/mwas_general.py:72), except nothing is
-    // dropped here. It is the one bound on the kernel's arrays per task: a
-    // side's observed values never outnumber the universe, so a padded
-    // side holds at most 20000 doubles (160 KB)
+    // dropped here. It is the one bound on the kernel's arrays per task:
+    // per group, the pooled, work and swap arrays hold at most nCat
+    // entries each (the universe), so at most 20000 doubles (160 KB) apiece
     permMaxPooled: Int = 20000,
     // statistic-only mode for consumers that never read the permutation
     // p-value (the stats slice, the results summary): the permutation
@@ -72,6 +72,14 @@ case class MwasConfig(
   * own >50 MB skip case (main/mwas_general.py:72). The per-bioproject
   * pass also keeps the plan small: its fixed per-job cost (planning,
   * stages, generated code) is what dominates at interactive sizes.
+  *
+  * Permutation tests share one Monte-Carlo stream per (bioproject, group):
+  * every set of a group permutes the same pooled multiset — the group's
+  * rpms over the catalog universe, zero-padded — and only the side size
+  * differs, so one partial shuffle per resample serves all of the group's
+  * Monte-Carlo contrasts ([[graft.stats.PermutationTest.monteCarlo]]).
+  * Each p-value is still a pure function of its own contrast's inputs, so
+  * identical contrasts get identical results without a memo.
   *
   * Faithful-mode quirk kept on purpose: the reference feeds POPULATION sd
   * (np.nanstd, ddof=0; main/mwas_general.py:384-385) into scipy's
@@ -199,8 +207,9 @@ object Pipeline {
     // main/mwas_general.py:344-679). MEMORY BOUND: one bioproject's
     // observed (group, biosample) rows plus its sets sit in one task — the
     // grain the reference holds as a dense matrix (:477), minus the
-    // implicit zeros, which stay virtual — plus the permutation memo, whose
-    // keys are the per-side nonzero values of that bioproject's contrasts.
+    // implicit zeros, which stay virtual — plus, for the group being
+    // tested, the permutation kernel's pool, work and swap arrays (at most
+    // the catalog universe each, see MwasConfig.permMaxPooled).
     //
     // WIDTH PIN (r16 audit): the explicit repartition by bioproject is
     // load-bearing. The resampling kernel runs in the stage that reads it,
@@ -209,9 +218,12 @@ object Pipeline {
     // to a 15.9 s single-task straggler at the 10× fixture while the 30×
     // point, with more bytes, ran faster (NOTES_r16). A user repartition is
     // never coalesced, and it adds no shuffle: the per-bioproject
-    // aggregate's exchange is this one.
+    // aggregate's exchange is this one. Its width is the session's shuffle
+    // width when the readout is planned, so a caller's scoped width (a
+    // stream trigger's) holds here too.
     val obs = state
-      .repartition(state.sparkSession.sparkContext.defaultParallelism,
+      .repartition(
+        state.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt,
         col("bio_project"))
       .select(col("bio_project"), struct(col("group"), col("bio_sample"),
         (col("rpm_sum") / col("n_runs")).as("rpm"), col("n_runs")).as("o"))
@@ -312,34 +324,30 @@ object Pipeline {
     * virtually-zero-padded sides. Each side is its members' NONZERO rpms,
     * sorted ascending, then padded with implicit zeros up to its true
     * cardinality, reproducing the reference's dense per-bioproject vectors
-    * (:477) without materializing them. Identical (true values, false
-    * values, side sizes) inputs are tested once per bioproject — the
-    * reference's `reusable_results` dict (O10 :351,396-399), at its grain,
-    * deterministic where the dict was not. */
+    * (:477) without materializing them. Exact-enumeration contrasts are
+    * tested one by one. A group's Monte-Carlo contrasts are tested
+    * together, after its sets are walked, by one call of
+    * [[graft.stats.PermutationTest.monteCarlo]] over the group's pool (its
+    * nonzero rpms plus the universe's zeros, sorted once): each resample is
+    * one shuffle as deep as the largest running side, and each contrast
+    * reads its side sum at its own size. A contrast's result is
+    * bit-identical to `PermutationTest.test` on its own padded sides, so
+    * the reference's `reusable_results` dict (O10 :351,396-399) needs no
+    * counterpart: identical inputs give identical results by
+    * construction. */
   private[mwas] def contrastsUdf(cfg: MwasConfig) = {
     // early-stop bound: 20× the significance threshold — tests that are
     // decisively insignificant settle at the 1000-resample checkpoint;
     // anything near or under the threshold runs the full budget
     val earlyStopAbove = 20.0 * cfg.pValueThreshold
+    val exactCutoff = 20000L
     udf((obs: Seq[Row], sets: Seq[Row], nCat: Int) => {
       val bpTTest = cfg.onlyTTest || nCat > cfg.permMaxPooled
       val setRows = sets.map { r =>
         val members = r.getSeq[String](2)
         (r, members, new java.util.HashSet[String](members.asJava))
       }
-      val memo = scala.collection.mutable.HashMap.empty[
-        (Seq[Double], Seq[Double], Long, Long), PermResult]
-      def permutation(trueObs: Array[Double], falseObs: Array[Double],
-          nTrue: Long, nFalse: Long): PermResult = {
-        def padded(v: Array[Double], n: Long) =
-          java.util.Arrays.copyOf(v, math.max(n.toInt, v.length))
-        val key = (ArraySeq.unsafeWrapArray(trueObs),
-          ArraySeq.unsafeWrapArray(falseObs), nTrue, nFalse)
-        memo.getOrElseUpdate(key, PermutationTest.test(padded(trueObs, nTrue),
-          padded(falseObs, nFalse), cfg.permResamples, exactCutoff = 20000,
-          earlyStopAbove))
-      }
-      val out = scala.collection.mutable.ArrayBuffer.empty[Contrast]
+      val out = ArrayBuffer.empty[Contrast]
       obs.groupBy(_.getString(0)).foreach { case (group, rows) =>
         val sorted = rows.sortBy(_.getString(1))
         val bs = sorted.map(_.getString(1)).toArray
@@ -347,6 +355,9 @@ object Pipeline {
         // each contrast's per-side nonzeros, copied out before the next
         val (inVals, outVals) =
           (new Array[Double](bs.length), new Array[Double](bs.length))
+        // the group's Monte-Carlo contrasts — (row in `out`, true-side size,
+        // statistic) — tested together once the sets are walked
+        val mc = ArrayBuffer.empty[(Int, Int, Double)]
         if (sorted.map(_.getLong(3)).sum >= cfg.groupNonzerosThreshold) {
           setRows.foreach { case (set, members, memberSet) =>
             val include = set.getBoolean(4)
@@ -377,7 +388,7 @@ object Pipeline {
               val meanT = sumT / numTrue
               val meanF = sumF / numFalse
               if (!(meanT == 0 && meanF == 0)) {
-                val perm = Option.when(split) {
+                val perm = if (!split) None else {
                   // primitive sort, same Double.compare order: `sorted`
                   // boxes through Sorting.stableSort, the largest JIT
                   // compile of a warm job
@@ -385,8 +396,23 @@ object Pipeline {
                   val other = java.util.Arrays.copyOf(outVals, nOut)
                   java.util.Arrays.sort(stored)
                   java.util.Arrays.sort(other)
-                  if (include) permutation(stored, other, numTrue, numFalse)
-                  else permutation(other, stored, numTrue, numFalse)
+                  val (x, y) = if (include) (stored, other) else (other, stored)
+                  // a side's values plus its padding make the group's pool
+                  // only when no side stores more values than its size
+                  val pooled = x.length <= numTrue && y.length <= numFalse
+                  val exact =
+                    PermutationTest.choose(nCat, numTrue.toInt) <= exactCutoff
+                  if (!pooled || exact) {
+                    def padded(v: Array[Double], n: Long) =
+                      java.util.Arrays.copyOf(v, math.max(n.toInt, v.length))
+                    Some(PermutationTest.test(padded(x, numTrue),
+                      padded(y, numFalse), cfg.permResamples, exactCutoff,
+                      earlyStopAbove))
+                  } else {
+                    mc += ((out.length, numTrue.toInt,
+                      PermutationTest.meanDiff(x, numTrue, y, numFalse)))
+                    None
+                  }
                 }
                 out += Contrast(group, set.getString(0), set.getString(1),
                   members, include, numTrue, numFalse, meanT, meanF,
@@ -395,6 +421,19 @@ object Pipeline {
                   isTTest, perm)
               }
             }
+          }
+        }
+        if (mc.nonEmpty) {
+          // the pool every Monte-Carlo contrast of the group permutes: its
+          // nonzero rpms and the zeros up to the universe, sorted once
+          val pool = new Array[Double](nCat)
+          var z = 0
+          rpm.foreach { v => if (v != 0) { pool(z) = v; z += 1 } }
+          java.util.Arrays.sort(pool)
+          val res = PermutationTest.monteCarlo(pool, mc.map(_._2).toArray,
+            mc.map(_._3).toArray, cfg.permResamples, earlyStopAbove)
+          mc.indices.foreach { c =>
+            out(mc(c)._1) = out(mc(c)._1).copy(perm = Some(res(c)))
           }
         }
       }

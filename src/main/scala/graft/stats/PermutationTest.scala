@@ -28,10 +28,15 @@ case class PermResult(statistic: Double, p_value: Double, method: String,
   *   - EXACT enumeration of all C(n, k) label assignments when that count is
   *     <= `exactCutoff` — deterministic and engine-independent (the reference
   *     explored the same cutoff idea, main/tests/permutation_test.py:25-78);
-  *   - otherwise `resamples` Monte-Carlo permutations from an RNG seeded by
-  *     the data content (order-independent), so results are reproducible
+  *   - otherwise `resamples` Monte-Carlo permutations
+  *     ([[PermutationTest.monteCarlo]]). The master RNG is seeded from the
+  *     pooled multiset's content and size only, and resample r draws from
+  *     the master's r-th `split()` sub-stream, so results are reproducible
   *     across runs/partitionings — scipy's global RNG is not, which is why
   *     parity with the reference is statistical, not bitwise (SURVEY §7.4.1).
+  *     Every contrast over the same pooled multiset sees the same resamples
+  *     (Westfall & Young's shared label permutations), which is what lets
+  *     one shuffle per resample serve all of them.
   *
   * Two-sided p-value; the Monte-Carlo path uses the (hits+1)/(N+1)
   * correction, matching scipy's randomized estimator.
@@ -66,10 +71,18 @@ class PermutationTest(resamples: Int = 10000, exactCutoff: Long = 20000,
 
 object PermutationTest {
 
-  private def mean(a: Array[Double], from: Int, until: Int): Double = {
-    var s = 0.0; var i = from
-    while (i < until) { s += a(i); i += 1 }
-    s / (until - from)
+  /** The statistic, mean(x) − mean(y), for sides given as their stored
+    * values and their sizes `nx`, `ny` (at least the stored counts): a side
+    * reads as its values followed by implicit zeros, which add nothing to
+    * its sum. */
+  def meanDiff(x: Array[Double], nx: Long, y: Array[Double],
+      ny: Long): Double = {
+    def sum(a: Array[Double]): Double = {
+      var s = 0.0; var i = 0
+      while (i < a.length) { s += a(i); i += 1 }
+      s
+    }
+    sum(x) / nx - sum(y) / ny
   }
 
   /** C(n, k) with overflow clamp. */
@@ -85,7 +98,10 @@ object PermutationTest {
     r
   }
 
-  /** @param earlyStopAbove Monte-Carlo only: at deterministic checkpoints
+  /** One contrast: exact enumeration when C(n, nx) <= `exactCutoff`,
+    * otherwise the one-contrast call of [[monteCarlo]].
+    *
+    * @param earlyStopAbove Monte-Carlo only: at deterministic checkpoints
     *        (1000, 2000, 5000 resamples) stop early if the p estimate
     *        already exceeds this bound. Callers that only CLASSIFY against
     *        a significance threshold pass a generous multiple of it (the
@@ -106,16 +122,16 @@ object PermutationTest {
     val pooled = new Array[Double](nx + ny)
     System.arraycopy(x, 0, pooled, 0, nx)
     System.arraycopy(y, 0, pooled, nx, ny)
-    val obs = mean(x, 0, nx) - mean(y, 0, ny)
-    val total = pooled.sum
+    val obs = meanDiff(x, nx, y, ny)
     val n = pooled.length
-    // p(side-of-size-nx assignment) from the sum of the chosen side alone:
-    // meanDiff = s/nx - (total-s)/ny, so only the chosen side's sum matters.
-    def diffFromSum(s: Double): Double = s / nx - (total - s) / ny
-    val eps = 1e-12 * math.max(1.0, math.abs(obs))
-    val absObs = math.abs(obs)
 
     if (choose(n, nx) <= exactCutoff) {
+      val total = pooled.sum
+      // p(side-of-size-nx assignment) from the sum of the chosen side alone:
+      // meanDiff = s/nx - (total-s)/ny, so only the chosen side's sum matters.
+      def diffFromSum(s: Double): Double = s / nx - (total - s) / ny
+      val eps = 1e-12 * math.max(1.0, math.abs(obs))
+      val absObs = math.abs(obs)
       // exact: enumerate every C(n, k) choice of the SMALLER side (same
       // combination count as the x-side walk — C(n,nx) == C(n,ny) over the
       // complement — but the inner sum is min(nx, ny) adds) via a
@@ -145,55 +161,108 @@ object PermutationTest {
       }
       PermResult(obs, hits.toDouble / count, "permutation_exact", nx, ny)
     } else {
-      // Monte-Carlo: seed from a commutative content hash (Long addition is
-      // order-independent, unlike FP summation) so the result is reproducible
-      // across runs, row orders, and partitionings. SplittableRandom, not
-      // java.util.Random: Random.next() CASes an AtomicLong per draw, which
-      // dominated the hot loop (the r16 audit's 7.9 s single-row straggler
-      // in mwas_pipeline_full — resamples × min-side draws at the
-      // permMaxPooled bound). Every consumer gate is statistical (3·SE
-      // bands, order-invariance, early-stop equivalence), so the stream
-      // only needs to be deterministic, not any particular sequence.
-      var seed = 41L * n + 7L * nx
-      pooled.foreach { v =>
-        seed += java.lang.Double.doubleToLongBits(v) * 0x9E3779B97F4A7C15L
-      }
-      val rng = new java.util.SplittableRandom(seed)
       // sort so the resampling stream is independent of input row order
       // (the statistic depends only on the multiset)
-      val work = pooled.clone()
-      java.util.Arrays.sort(work)
-      // drawing a size-k side determines BOTH side sums (s and total-s), so
-      // always resample the SMALLER side — the loop is resamples × min(nx,
-      // ny) instead of resamples × nx, which matters when the true side is
-      // the majority (include=false contrasts)
-      val k = math.min(nx, ny)
-      val sampleIsX = k == nx
-      var hits = 0L
-      var r = 0
-      var stopped = false
-      while (r < resamples && !stopped) {
-        // partial Fisher-Yates: first k entries become the resampled small
-        // side; work(i) is final once swapped, so the side sum accumulates
-        // in the same pass (identical RNG stream and result as a separate
-        // summing loop — this is the hot path)
-        var s = 0.0
-        var i = 0
-        while (i < k) {
-          val j = i + rng.nextInt(n - i)
-          val tmp = work(i); work(i) = work(j); work(j) = tmp
-          s += work(i)
-          i += 1
+      java.util.Arrays.sort(pooled)
+      monteCarlo(pooled, Array(nx), Array(obs), resamples, earlyStopAbove)(0)
+    }
+  }
+
+  /** Monte-Carlo permutation p-values of every contrast over ONE pooled
+    * multiset: contrast c puts `nx(c)` of the `sorted.length` values on its
+    * x side and observed the mean difference `obs(c)`.
+    *
+    * Each resample is one partial Fisher–Yates shuffle of the pool, run only
+    * as far as the largest side among the contrasts still running. Drawing
+    * a size-k side determines both side sums (s and total − s), so contrast
+    * c reads its side sum at its own k = min(nx, ny), the smaller side. The
+    * swaps are undone after each resample, and resample r draws from the
+    * master RNG's r-th `split()` sub-stream, seeded from the pooled content
+    * and size only. So contrast c's length-k prefix in resample r depends on
+    * the pool and r alone, and its result is bit-identical to the
+    * one-contrast call ([[test]] on its own sides): contrasts neither share
+    * state nor see each other, only their draws.
+    *
+    * The (1000, 2000, 5000) early-stop checkpoints of [[test]] stay per
+    * contrast; a stopped contrast leaves the running set and, if it had the
+    * largest side, shortens every later shuffle.
+    *
+    * @param sorted the pooled values in `java.util.Arrays.sort` order */
+  def monteCarlo(sorted: Array[Double], nx: Array[Int], obs: Array[Double],
+      resamples: Int,
+      earlyStopAbove: Double = Double.PositiveInfinity): Array[PermResult] = {
+    val n = sorted.length
+    val m = nx.length
+    require(obs.length == m && nx.forall(v => v >= 1 && v < n),
+      "every contrast needs 1 <= nx < the pool size, and one obs")
+    // commutative content hash (Long addition is order-independent, unlike
+    // FP summation). SplittableRandom, not java.util.Random:
+    // Random.next() CASes an AtomicLong per draw, which dominated the hot
+    // loop (the r16 audit's 7.9 s single-row straggler in
+    // mwas_pipeline_full). Every consumer gate is statistical (3·SE bands,
+    // order-invariance, early-stop equivalence), so the stream only needs
+    // to be deterministic, not any particular sequence.
+    var seed = 41L * n
+    var total = 0.0
+    sorted.foreach { v =>
+      seed += java.lang.Double.doubleToLongBits(v) * 0x9E3779B97F4A7C15L
+      total += v
+    }
+    val master = new java.util.SplittableRandom(seed)
+    val k = Array.tabulate(m)(c => math.min(nx(c), n - nx(c)))
+    val absObs = obs.map(math.abs)
+    val eps = obs.map(o => 1e-12 * math.max(1.0, math.abs(o)))
+    val hits = new Array[Long](m)
+    // resamples drawn when contrast c stopped early; 0 while it runs
+    val stoppedAt = new Array[Int](m)
+    // running contrasts in ascending k: one pass over a resample's prefix
+    // reads every side sum at its own length
+    var running = (0 until m).sortBy(k(_)).toArray
+    val work = sorted.clone()
+    val swaps = new Array[Int](k.foldLeft(0)(math.max))
+    var r = 0
+    while (r < resamples && running.nonEmpty) {
+      val rng = master.split()
+      val kMax = k(running.last)
+      // the next running contrast to read, and its k (0 past the last)
+      var next = 0
+      var nextK = k(running(0))
+      var s = 0.0
+      var i = 0
+      while (i < kMax) {
+        val j = i + rng.nextInt(n - i)
+        swaps(i) = j
+        val tmp = work(i); work(i) = work(j); work(j) = tmp
+        s += work(i)
+        i += 1
+        while (i == nextK) {
+          val c = running(next)
+          val sx = if (k(c) == nx(c)) s else total - s
+          if (math.abs(sx / nx(c) - (total - sx) / (n - nx(c))) >=
+              absObs(c) - eps(c)) hits(c) += 1
+          next += 1
+          nextK = if (next < running.length) k(running(next)) else 0
         }
-        val sx = if (sampleIsX) s else total - s
-        if (math.abs(diffFromSum(sx)) >= absObs - eps) hits += 1
-        r += 1
-        if ((r == 1000 || r == 2000 || r == 5000) && r < resamples &&
-            (hits + 1).toDouble / (r + 1) > earlyStopAbove)
-          stopped = true
       }
-      PermResult(obs, (hits + 1).toDouble / (r + 1),
-        if (stopped) "permutation_mc_early" else "permutation_mc", nx, ny)
+      // undo in reverse: every resample starts from the sorted pool
+      while (i > 0) {
+        i -= 1
+        val j = swaps(i)
+        val tmp = work(i); work(i) = work(j); work(j) = tmp
+      }
+      r += 1
+      if ((r == 1000 || r == 2000 || r == 5000) && r < resamples)
+        running = running.filter { c =>
+          val stop = (hits(c) + 1).toDouble / (r + 1) > earlyStopAbove
+          if (stop) stoppedAt(c) = r
+          !stop
+        }
+    }
+    Array.tabulate(m) { c =>
+      val drawn = if (stoppedAt(c) > 0) stoppedAt(c) else r
+      PermResult(obs(c), (hits(c) + 1).toDouble / (drawn + 1),
+        if (stoppedAt(c) > 0) "permutation_mc_early" else "permutation_mc",
+        nx(c), n - nx(c))
     }
   }
 }

@@ -148,6 +148,46 @@ class PipelineSpec extends AnyFunSuite {
     assert((byGroup("g1") intersect byGroup("g3")).isEmpty)
   }
 
+  test("a set with members outside the catalog is tested on its own " +
+      "sides, next to its group's shared-stream contrasts") {
+    import spark.implicits._
+    // 24 catalog biosamples, all nonzero; set "out" stores BS1..BS12 plus
+    // BSX, which no catalog lists: n_stored = 13, so its include=false
+    // true side counts 24 - 13 = 11 but holds the 12 non-members' values,
+    // more than its size. Set "in" (BS1..BS12, include=true) is a plain
+    // Monte-Carlo contrast of the same group
+    val n = 24
+    def value(i: Int): Double = (i % 7 + 1).toDouble
+    val catalog = (1 to n)
+      .map(i => (s"R$i", s"BS$i", "bp1", 1000000.0))
+      .toDF("run", "bio_sample", "bio_project", "spots")
+    val input = (1 to n).map(i => (s"R$i", "g1", value(i)))
+      .toDF("run", "group", "quantifier")
+    val stored = (1 to 12).map(i => s"BS$i")
+    val setsDf = Seq(("in", stored, 12, true, 0L),
+        ("out", stored :+ "BSX", 13, false, 1L))
+      .map { case (v, m, k, inc, id) =>
+        ("bp1", "f", v, m, k, inc, n, id)
+      }.toDF("bioproject", "attributes", "values", "members", "n_stored",
+        "include", "n_biosamples", "set_id")
+    val cfg = MwasConfig()
+    val out = Pipeline.run(input, catalog, setsDf, cfg).collect()
+      .map(r => r.getAs[String]("metadata_value") -> r).toMap
+    val (low, high) = (1 to n).map(value).toArray.splitAt(12)
+    java.util.Arrays.sort(low)
+    java.util.Arrays.sort(high)
+    // "out": true side = BS13..BS24 (12 values, no padding), false side =
+    // BS1..BS12 padded to 13 with one zero
+    for ((v, x, y) <- Seq(("in", low, high),
+        ("out", high, java.util.Arrays.copyOf(low, 13)))) {
+      val e = graft.stats.PermutationTest.test(x, y, cfg.permResamples,
+        20000, 20.0 * cfg.pValueThreshold)
+      assert(e.method.startsWith("permutation_mc"), v)
+      assert(out(v).getAs[Double]("test_statistic") === e.statistic, v)
+      assert(out(v).getAs[Double]("p_value") === e.p_value, v)
+    }
+  }
+
   test("an all-zero true side has mean exactly 0.0 and fold change " +
       "-Infinity") {
     import spark.implicits._
@@ -287,5 +327,34 @@ class PipelineSpec extends AnyFunSuite {
       spark.conf.set("spark.sql.adaptive.enabled", "true")
       spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
     }
+  }
+
+  test("the readout's width pin takes a caller's scoped shuffle width") {
+    import spark.implicits._
+    val catalog = (1 to 8)
+      .map(i => (s"R$i", s"BS$i", "bp1", 1000000.0))
+      .toDF("run", "bio_sample", "bio_project", "spots")
+    val input = (1 to 8).map(i => (s"R$i", "g1", i.toDouble))
+      .toDF("run", "group", "quantifier")
+    val sets = Seq(("bp1", "tissue", "liver", (1 to 4).map(i => s"BS$i"),
+        4, true, 8, 42L))
+      .toDF("bioproject", "attributes", "values", "members", "n_stored",
+        "include", "n_biosamples", "set_id")
+    // AQE off: the static plan shows each exchange's planned width
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try {
+      // planned under the scope of a stream trigger, on local[4]
+      val out = graft.streaming.StreamingQueries
+        .withShufflePartitions(spark, Some("2")) {
+          Pipeline.run(input, catalog, sets, MwasConfig())
+        }
+      val plan = out.queryExecution.executedPlan.toString
+      val pinned = plan.linesIterator.filter(_.contains("REPARTITION_BY_NUM"))
+        .toSeq
+      assert(pinned.size === 1, plan)
+      assert(pinned.head.contains("hashpartitioning(bio_project") &&
+        pinned.head.contains(", 2)"), plan)
+      assert(out.count() === 1L)
+    } finally spark.conf.set("spark.sql.adaptive.enabled", "true")
   }
 }

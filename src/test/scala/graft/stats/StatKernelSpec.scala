@@ -124,4 +124,86 @@ class StatKernelSpec extends AnyFunSuite {
     assert(earlySig.method === "permutation_mc")
     assert(earlySig.p_value === fullSig.p_value)
   }
+
+  /** A sorted pool of `n` values, some of them repeated, the rest zeros. */
+  private def pool(rng: Random, n: Int, nonzero: Int): Array[Double] = {
+    val vs = Array.tabulate(n)(i =>
+      if (i < nonzero) (1 + rng.nextInt(12)) * 0.5 else 0.0)
+    java.util.Arrays.sort(vs)
+    vs
+  }
+
+  /** A contrast over `vs`: the `nx` values at the shuffled positions `at`
+    * form x, the rest y. */
+  private def split(vs: Array[Double], at: Seq[Int],
+      nx: Int): (Array[Double], Array[Double]) = {
+    val (xi, yi) = at.splitAt(nx)
+    (xi.map(vs).toArray, yi.map(vs).toArray)
+  }
+
+  /** One multi-contrast kernel call over the pool `vs`, contrasts given by
+    * their sides. */
+  private def monteCarlo(vs: Array[Double],
+      contrasts: Seq[(Array[Double], Array[Double])], resamples: Int,
+      bound: Double = Double.PositiveInfinity): Array[PermResult] =
+    PermutationTest.monteCarlo(vs, contrasts.map(_._1.length).toArray,
+      contrasts.map { case (x, y) =>
+        PermutationTest.meanDiff(x, x.length, y, y.length)
+      }.toArray, resamples, bound)
+
+  test("a multi-contrast Monte-Carlo call equals the one-contrast test " +
+      "of each contrast, early stops included") {
+    val rng = new Random(23)
+    val n = 48
+    val vs = pool(rng, n, 30)
+    // k from 4 to n/2, both polarities (x the smaller or the larger side),
+    // over random splits (p spread over (0, 1)) and planted ones (the k
+    // largest values: tiny p, full budget). Several early-stop bounds, so
+    // some contrasts settle at each checkpoint
+    val desc = vs.indices.sortBy(i => -vs(i))
+    val contrasts = for {
+      k <- 4 to n / 2
+      xSmall <- Seq(true, false)
+      at <- Seq(desc) ++ Seq.fill(4)(rng.shuffle(vs.indices.toVector))
+    } yield {
+      val (small, large) = split(vs, at, k)
+      if (xSmall) (small, large) else (large, small)
+    }
+    def bits(d: Double) = java.lang.Double.doubleToLongBits(d)
+    val stops = Seq(0.1, 0.2, 0.3, 0.4, 0.5).flatMap { bound =>
+      val res = monteCarlo(vs, contrasts, 10000, bound)
+      contrasts.zip(res).map { case ((x, y), r) =>
+        val one = PermutationTest.test(x, y, 10000, exactCutoff = 1, bound)
+        assert(r.method === one.method &&
+          bits(r.p_value) === bits(one.p_value) &&
+          bits(r.statistic) === bits(one.statistic) &&
+          r.n_true === one.n_true && r.n_false === one.n_false,
+          s"nx=${x.length} ny=${y.length} bound=$bound: $r vs $one")
+        // an early stop reports the fixed-budget p of its checkpoint
+        if (r.method == "permutation_mc") 10000
+        else Seq(1000, 2000, 5000).find(c =>
+          PermutationTest.test(x, y, c, exactCutoff = 1).p_value == r.p_value)
+          .getOrElse(fail(s"no checkpoint gives $r"))
+      }
+    }
+    assert(Set(1000, 2000, 5000, 10000).subsetOf(stops.toSet),
+      stops.groupBy(identity).map { case (c, v) => c -> v.size })
+  }
+
+  test("monte-carlo p of several side sizes over one pool approximates " +
+      "each exact p") {
+    val rng = new Random(29)
+    val n = 20
+    val vs = pool(rng, n, 14)
+    val at = rng.shuffle(vs.indices.toVector)
+    val contrasts = Seq(4, 6, 8, 10, 13).map(split(vs, at, _))
+    val mc = monteCarlo(vs, contrasts, 20000)
+    contrasts.zip(mc).foreach { case ((x, y), r) =>
+      val exact = PermutationTest.test(x, y, 0, exactCutoff = Long.MaxValue)
+      assert(exact.method === "permutation_exact")
+      assert(r.method === "permutation_mc")
+      assert(math.abs(r.p_value - exact.p_value) < 0.02,
+        s"nx=${x.length}: mc=${r.p_value} exact=${exact.p_value}")
+    }
+  }
 }
