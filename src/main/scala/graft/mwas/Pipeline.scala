@@ -6,19 +6,22 @@ import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 
-import graft.functions.StatFunctions.{log2FoldChange, rpm}
-import graft.functions.WelchTTest.welch_t
+import graft.functions.StatFunctions.rpm
+import graft.functions.WelchTTest
 import graft.stats.{PermResult, PermutationTest}
 
-/** One (group × set) contrast of a bioproject, as [[Pipeline.contrastsUdf]]
-  * derives it, routed and tested (top-level: generated projections need
-  * public accessor access). `perm` is empty on the Welch route and in
-  * statistic-only mode. */
-case class Contrast(group: String, attributes: String, values: String,
-    members: Seq[String], include: Boolean, num_true: Long, num_false: Long,
+/** One finished (group × set) output row of a bioproject, as
+  * [[Pipeline.contrastsUdf]] emits it: the 18 output columns but
+  * `bioproject`, in output order (top-level: generated projections need
+  * public accessor access). Runtime/memory instrumentation is 0 (Spark-side
+  * metrics live in the event log, not in data rows). */
+case class Contrast(group: String, metadata_field: String,
+    metadata_value: String, status: String, runtime_seconds: Double,
+    memory_usage_bytes: Long, num_true: Long, num_false: Long,
     mean_rpm_true: Double, mean_rpm_false: Double,
-    sd_rpm_true: Double, sd_rpm_false: Double, is_t_test: Boolean,
-    perm: Option[PermResult])
+    sd_rpm_true: Double, sd_rpm_false: Double, fold_change: Option[Double],
+    test_statistic: Option[Double], p_value: Option[Double],
+    true_biosamples: String, false_biosamples: String)
 
 /** Readout dimensions derived purely from (catalog, sets), both one row per
   * bioproject — see [[Pipeline.dims]]. */
@@ -44,8 +47,8 @@ case class MwasConfig(
     // p-value (the stats slice, the results summary): the permutation
     // route's TEST STATISTIC is the closed-form mean difference — only its
     // p-value needs resampling — so value collection and the kernel are
-    // skipped wholesale and the plan stays pure relational algebra.
-    // p_value is null (and status says so) on permutation-routed rows.
+    // skipped wholesale. p_value is null (and status says so) on
+    // permutation-routed rows.
     statClosedForm: Boolean = false)
 
 /** The MWAS query engine: the reference's run_on_file + process_bioproject +
@@ -71,15 +74,14 @@ case class MwasConfig(
   * holds; a single bioproject too large for one task is the reference's
   * own >50 MB skip case (main/mwas_general.py:72). The per-bioproject
   * pass also keeps the plan small: its fixed per-job cost (planning,
-  * stages, generated code) is what dominates at interactive sizes.
+  * stages, generated code and its JIT) is what dominates at interactive
+  * sizes, so the pass emits finished output rows and the plan ends in
+  * `inline`, with no generated assembly stage to compile per job.
   *
-  * Permutation tests share one Monte-Carlo stream per (bioproject, group):
-  * every set of a group permutes the same pooled multiset — the group's
-  * rpms over the catalog universe, zero-padded — and only the side size
-  * differs, so one partial shuffle per resample serves all of the group's
-  * Monte-Carlo contrasts ([[graft.stats.PermutationTest.monteCarlo]]).
-  * Each p-value is still a pure function of its own contrast's inputs, so
-  * identical contrasts get identical results without a memo.
+  * Permutation tests share one Monte-Carlo stream per (bioproject, group)
+  * — every set of a group permutes the same zero-padded pool — and each
+  * p-value is still a pure function of its own contrast's inputs, so
+  * identical contrasts need no memo ([[contrastsUdf]]).
   *
   * Faithful-mode quirk kept on purpose: the reference feeds POPULATION sd
   * (np.nanstd, ddof=0; main/mwas_general.py:384-385) into scipy's
@@ -94,9 +96,7 @@ object Pipeline {
     *                catalog slice (main/mwas_general.py:37-54)
     * @param sets    MetadataCondenser.condense output
     * @return the reference's 18-column output relation
-    *         (main/mwas_general.py:92-94); runtime/memory instrumentation
-    *         columns are 0 (Spark-side metrics live in the event log, not
-    *         in data rows)
+    *         (main/mwas_general.py:92-94), see [[Contrast]]
     */
   def run(input: DataFrame, catalog: DataFrame, sets: DataFrame,
       cfg: MwasConfig = MwasConfig()): DataFrame =
@@ -198,18 +198,18 @@ object Pipeline {
     val PipelineDims(bpUniverse, bpSets) =
       precomputed.getOrElse(dims(catalog, sets))
 
-    // ---- stages 2b–4: bioproject-local contrasts, routed and tested -------
+    // ---- stages 2b–5: bioproject-local contrasts, tested and assembled ----
     // Every readout key carries bio_project and bioprojects are
     // statistically independent, so one row per bioproject — its observed
     // state rows, its sets, its catalog universe — holds everything a
-    // contrast needs, and [[contrastsUdf]] derives, routes and tests all of
-    // its (group × set) contrasts in one pass (reference process_bioproject,
-    // main/mwas_general.py:344-679). MEMORY BOUND: one bioproject's
-    // observed (group, biosample) rows plus its sets sit in one task — the
-    // grain the reference holds as a dense matrix (:477), minus the
-    // implicit zeros, which stay virtual — plus, for the group being
-    // tested, the permutation kernel's pool, work and swap arrays (at most
-    // the catalog universe each, see MwasConfig.permMaxPooled).
+    // contrast needs, and [[contrastsUdf]] derives, routes, tests and
+    // assembles all of its (group × set) output rows in one pass (reference
+    // process_bioproject, main/mwas_general.py:344-679). MEMORY BOUND: one
+    // bioproject's observed (group, biosample) rows plus its sets sit in
+    // one task — the grain the reference holds as a dense matrix (:477),
+    // minus the implicit zeros, which stay virtual — plus, for the group
+    // being tested, the permutation kernel's pool, work and swap arrays
+    // (at most the catalog universe each, see MwasConfig.permMaxPooled).
     //
     // WIDTH PIN (r16 audit): the explicit repartition by bioproject is
     // load-bearing. The resampling kernel runs in the stage that reads it,
@@ -229,70 +229,13 @@ object Pipeline {
         (col("rpm_sum") / col("n_runs")).as("rpm"), col("n_runs")).as("o"))
       .groupBy(col("bio_project"))
       .agg(collect_list(col("o")).as("obs"))
-    val withStats = obs
+    obs
       .join(bpSets, Seq("bio_project"))
       .join(bpUniverse, Seq("bio_project"))
-      .select(col("bio_project"), col("all_biosamples"),
+      // the reference's 18 columns (main/mwas_general.py:92-94)
+      .select(col("bio_project").as("bioproject"),
         inline(contrastsUdf(cfg)(col("obs"), col("sets"),
-          size(col("all_biosamples")))))
-
-    // the permutation route's statistic is the mean difference; in
-    // statistic-only mode the side means carry it and the p-value is null
-    val (permStat, permStatus) =
-      if (cfg.statClosedForm)
-        (col("mean_rpm_true") - col("mean_rpm_false"),
-          lit("permutation_test (stat_only)"))
-      else (col("perm.statistic"),
-        concat(lit("permutation_test ("), col("perm.method"), lit(")")))
-    val tested = withStats
-      .withColumn("w", welch_t(
-        col("mean_rpm_true"), col("sd_rpm_true"), col("num_true").cast("double"),
-        col("mean_rpm_false"), col("sd_rpm_false"), col("num_false").cast("double")))
-      .withColumn("test_statistic",
-        when(col("is_t_test"), col("w.t")).otherwise(permStat))
-      .withColumn("p_value",
-        when(col("is_t_test"), col("w.p")).otherwise(col("perm.p_value")))
-      .withColumn("status_base",
-        when(col("is_t_test"), lit("t_test")).otherwise(permStatus))
-      .withColumn("fold_change",
-        log2FoldChange(col("mean_rpm_true"), col("mean_rpm_false")))
-
-    // coalesce to false: a null p (stat-only permutation mode) must read
-    // as NOT significant — the reference's `p < threshold` is False for
-    // its nan/empty cases, giving no suffix and EMPTY listings
-    // (mwas_general.py:426-434); Kleene null would skip the
-    // `when(!significant, "")` arm below and leak populated listings
-    val significant =
-      coalesce(col("p_value") < cfg.pValueThreshold, lit(false))
-    val trueMembers = when(col("include"), col("members"))
-      .otherwise(array_except(col("all_biosamples"), col("members")))
-    val falseMembers = when(col("include"),
-      array_except(col("all_biosamples"), col("members")))
-      .otherwise(col("members"))
-    val tooMany = lit("too many biosamples to list")
-
-    tested.select(
-      col("bio_project").as("bioproject"),
-      col("group"),
-      // CSV-sanitized labels (F6 :441)
-      regexp_replace(col("attributes"), ",", " ").as("metadata_field"),
-      regexp_replace(col("values"), ",", " ").as("metadata_value"),
-      when(significant, concat(col("status_base"), lit("; significant")))
-        .otherwise(col("status_base")).as("status"),
-      lit(0.0).as("runtime_seconds"),
-      lit(0L).as("memory_usage_bytes"),
-      col("num_true"), col("num_false"),
-      col("mean_rpm_true"), col("mean_rpm_false"),
-      col("sd_rpm_true"), col("sd_rpm_false"),
-      col("fold_change"), col("test_statistic"), col("p_value"),
-      when(!significant, lit(""))
-        .when(col("num_true") < cfg.biosampleListCap,
-          array_join(trueMembers, "; "))
-        .otherwise(tooMany).as("true_biosamples"),
-      when(!significant, lit(""))
-        .when(col("num_false") < cfg.biosampleListCap,
-          array_join(falseMembers, "; "))
-        .otherwise(tooMany).as("false_biosamples"))
+          col("all_biosamples"))))
   }
 
   /** S7/S8 output sinks (reference main/mwas_general.py:631-679): the
@@ -307,16 +250,27 @@ object Pipeline {
     output.coalesce(1).write.mode("overwrite")
       .option("header", "true").csv(dir)
 
-  /** Every (group × set) contrast of one bioproject, routed and tested,
-    * from its observed state rows `obs` (group, bio_sample, rpm, n_runs),
-    * its `sets` and its catalog size `nCat`. Per group: acceptance on the
-    * provided run count (A4 :485-491); per contrast: side sizes by polarity
-    * (:363-372), the size guard (:376), each side's sum and sum of squares
-    * over its own observed members — so an all-zero side's mean is exactly
-    * 0.0, as in the reference's dense `np.mean` (:384-385) — population
-    * sds, and the both-zero-means skip (:388). Rows are sorted by biosample
-    * first, so sums do not depend on the order collect_list happened to
-    * gather them in.
+  /** log2 fold change with the reference's 0/0 → 0, x/0 → +inf, 0/x → -inf
+    * sentinels (main/mwas_general.py:325-336), otherwise Spark's `log2` of
+    * the ratio: null where it is not positive. */
+  private def foldChange(t: Double, f: Double): Option[Double] =
+    if (t == 0 && f == 0) Some(0.0)
+    else if (f == 0) Some(Double.PositiveInfinity)
+    else if (t == 0) Some(Double.NegativeInfinity)
+    else if (t / f <= 0) None
+    else Some(StrictMath.log(t / f) / StrictMath.log(2.0))
+
+  /** Every (group × set) output row of one bioproject, routed, tested and
+    * assembled, from its observed state rows `obs` (group, bio_sample, rpm,
+    * n_runs), its `sets` and its catalog universe `all` (sorted in UTF-8
+    * byte order by `sort_array`). Per group: acceptance on the provided run
+    * count (A4 :485-491); per contrast: side sizes by polarity (:363-372),
+    * the size guard (:376), each side's sum and sum of squares over its own
+    * observed members — so an all-zero side's mean is exactly 0.0, as in
+    * the reference's dense `np.mean` (:384-385) — population sds, and the
+    * both-zero-means skip (:388). Rows are sorted by biosample first, so
+    * sums do not depend on the order collect_list happened to gather them
+    * in.
     *
     * Routing (O14 :404-419) is decided here, once: Welch when forced, when
     * a side is smaller than `permutationSideCutoff`, or when the pooled
@@ -334,14 +288,24 @@ object Pipeline {
     * bit-identical to `PermutationTest.test` on its own padded sides, so
     * the reference's `reusable_results` dict (O10 :351,396-399) needs no
     * counterpart: identical inputs give identical results by
-    * construction. */
+    * construction.
+    *
+    * Each row is finished as the reference writes it (:424-441): Welch
+    * from [[graft.functions.WelchTTest.compute]], the fold change, the
+    * "; significant" suffix (a null or NaN p is not significant), listings
+    * — empty unless significant, capped, the stored side as listed and the
+    * other side in universe order — and comma-free labels. */
   private[mwas] def contrastsUdf(cfg: MwasConfig) = {
     // early-stop bound: 20× the significance threshold — tests that are
     // decisively insignificant settle at the 1000-resample checkpoint;
     // anything near or under the threshold runs the full budget
     val earlyStopAbove = 20.0 * cfg.pValueThreshold
     val exactCutoff = 20000L
-    udf((obs: Seq[Row], sets: Seq[Row], nCat: Int) => {
+    val tooMany = "too many biosamples to list"
+    // CSV-sanitized labels (F6 :441)
+    def label(s: String) = if (s == null) null else s.replace(',', ' ')
+    udf((obs: Seq[Row], sets: Seq[Row], all: Seq[String]) => {
+      val nCat = all.length
       val bpTTest = cfg.onlyTTest || nCat > cfg.permMaxPooled
       val setRows = sets.map { r =>
         val members = r.getSeq[String](2)
@@ -356,8 +320,8 @@ object Pipeline {
         val (inVals, outVals) =
           (new Array[Double](bs.length), new Array[Double](bs.length))
         // the group's Monte-Carlo contrasts — (row in `out`, true-side size,
-        // statistic) — tested together once the sets are walked
-        val mc = ArrayBuffer.empty[(Int, Int, Double)]
+        // statistic, its row given the result) — tested after the sets
+        val mc = ArrayBuffer.empty[(Int, Int, Double, PermResult => Contrast)]
         if (sorted.map(_.getLong(3)).sum >= cfg.groupNonzerosThreshold) {
           setRows.foreach { case (set, members, memberSet) =>
             val include = set.getBoolean(4)
@@ -388,7 +352,37 @@ object Pipeline {
               val meanT = sumT / numTrue
               val meanF = sumF / numFalse
               if (!(meanT == 0 && meanF == 0)) {
-                val perm = if (!split) None else {
+                def sd(sq: Double, n: Long, m: Double) =
+                  math.sqrt(math.max(sq / n - m * m, 0.0))
+                val (sdT, sdF) =
+                  (sd(sqT, numTrue, meanT), sd(sqF, numFalse, meanF))
+                def row(stat: Option[Double], p: Option[Double],
+                    status: String): Contrast = {
+                  val significant = p.exists(_ < cfg.pValueThreshold)
+                  def listing(n: Long, stored: Boolean): String =
+                    if (!significant) ""
+                    else if (n >= cfg.biosampleListCap) tooMany
+                    else if (stored) members.filter(_ != null).mkString("; ")
+                    else all.filterNot(memberSet.contains).mkString("; ")
+                  Contrast(group, label(set.getString(0)),
+                    label(set.getString(1)),
+                    if (significant) s"$status; significant" else status,
+                    0.0, 0L, numTrue, numFalse, meanT, meanF, sdT, sdF,
+                    foldChange(meanT, meanF), stat, p,
+                    listing(numTrue, include), listing(numFalse, !include))
+                }
+                def permRow(r: PermResult) = row(Some(r.statistic),
+                  Some(r.p_value), s"permutation_test (${r.method})")
+                if (isTTest) {
+                  val w = WelchTTest.compute(meanT, sdT, numTrue.toDouble,
+                    meanF, sdF, numFalse.toDouble)
+                  out += row(w.map(_._1), w.map(_._3), "t_test")
+                } else if (cfg.statClosedForm) {
+                  // the permutation route's statistic is the mean
+                  // difference; only its p-value needs resampling
+                  out += row(Some(meanT - meanF), None,
+                    "permutation_test (stat_only)")
+                } else {
                   // primitive sort, same Double.compare order: `sorted`
                   // boxes through Sorting.stableSort, the largest JIT
                   // compile of a warm job
@@ -405,20 +399,16 @@ object Pipeline {
                   if (!pooled || exact) {
                     def padded(v: Array[Double], n: Long) =
                       java.util.Arrays.copyOf(v, math.max(n.toInt, v.length))
-                    Some(PermutationTest.test(padded(x, numTrue),
+                    out += permRow(PermutationTest.test(padded(x, numTrue),
                       padded(y, numFalse), cfg.permResamples, exactCutoff,
                       earlyStopAbove))
                   } else {
                     mc += ((out.length, numTrue.toInt,
-                      PermutationTest.meanDiff(x, numTrue, y, numFalse)))
-                    None
+                      PermutationTest.meanDiff(x, numTrue, y, numFalse),
+                      permRow))
+                    out += null
                   }
                 }
-                out += Contrast(group, set.getString(0), set.getString(1),
-                  members, include, numTrue, numFalse, meanT, meanF,
-                  math.sqrt(math.max(sqT / numTrue - meanT * meanT, 0.0)),
-                  math.sqrt(math.max(sqF / numFalse - meanF * meanF, 0.0)),
-                  isTTest, perm)
               }
             }
           }
@@ -432,9 +422,7 @@ object Pipeline {
           java.util.Arrays.sort(pool)
           val res = PermutationTest.monteCarlo(pool, mc.map(_._2).toArray,
             mc.map(_._3).toArray, cfg.permResamples, earlyStopAbove)
-          mc.indices.foreach { c =>
-            out(mc(c)._1) = out(mc(c)._1).copy(perm = Some(res(c)))
-          }
+          mc.indices.foreach { c => out(mc(c)._1) = mc(c)._4(res(c)) }
         }
       }
       out.toSeq

@@ -246,12 +246,12 @@ object MwasPipelineQueries {
         col("metadata_value"))
   }
 
-  /** Full-output oracle: [[pipelineCoreSql]] + the engine's exact routing
-    * predicate (min side < 4, pooled > 20000, value-collection cap —
-    * Pipeline.run's `isTTest`), Welch t/df with WelchTTest.compute's
+  /** Full-output oracle: [[pipelineCoreSql]] + the engine's routing
+    * predicate (min side < 4, pooled > 20000; `nonzeros > 100000` is the
+    * retired value-collection cap), Welch t/df with WelchTTest.compute's
     * guards, the continued-fraction t-CDF for p on Welch rows, and the
-    * status/listing assembly mirroring Pipeline.run's output stage
-    * (reference main/mwas_general.py:424-434) cell for cell. Null or nan
+    * row assembly `Pipeline.contrastsUdf` does in the per-bioproject pass
+    * (reference main/mwas_general.py:424-441) cell for cell. Null or nan
     * p reads as NOT significant (empty listings, no suffix) on both
     * sides — the r9 review retired the earlier quirk where a null p
     * leaked populated listings; zero-variance Welch rows mirror scipy
@@ -822,8 +822,10 @@ object MwasPipelineQueries {
     try runBatches(s, in.schema, staging) { batch =>
       // batch functions run sequentially on the driver: scoping the
       // shuffle width to the per-increment data size is safe and cuts
-      // 3 readouts' worth of near-empty shuffle tasks
-      withShufflePartitions(s, Some("8")) {
+      // 3 readouts' worth of near-empty shuffle tasks; the readout's width
+      // pin takes it, so it is capped at the cores
+      withShufflePartitions(s,
+          Some(math.min(8, s.sparkContext.defaultParallelism).toString)) {
         // merge + readout via the shared trigger step
         // ([[Pipeline.incrementalTrigger]]); parity gated by the
         // unchanged batch oracle (pipelineTSql)

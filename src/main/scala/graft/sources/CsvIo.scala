@@ -32,7 +32,7 @@ object CsvIo {
       col(c3).cast(StringType).as("quantifier_raw"))
       // try_cast, not cast: ANSI mode (Spark 4 default) makes a plain
       // cast THROW on the malformed rows this reader exists to route
-      .withColumn("quantifier", expr("try_cast(quantifier_raw AS DOUBLE)"))
+      .withColumn("quantifier", col("quantifier_raw").try_cast(DoubleType))
       .withColumn("reject_reason",
         when(col("quantifier_raw").isNull, "missing_quantifier")
           .when(col("quantifier").isNull, "non_numeric_quantifier"))

@@ -29,9 +29,9 @@ case class PermResult(statistic: Double, p_value: Double, method: String,
   *     <= `exactCutoff` — deterministic and engine-independent (the reference
   *     explored the same cutoff idea, main/tests/permutation_test.py:25-78);
   *   - otherwise `resamples` Monte-Carlo permutations
-  *     ([[PermutationTest.monteCarlo]]). The master RNG is seeded from the
-  *     pooled multiset's content and size only, and resample r draws from
-  *     the master's r-th `split()` sub-stream, so results are reproducible
+  *     ([[PermutationTest.monteCarlo]]). Resample r draws from a SplitMix64
+  *     stream whose state is derived from (seed, r), the seed from the
+  *     pooled multiset's content and size only, so results are reproducible
   *     across runs/partitionings — scipy's global RNG is not, which is why
   *     parity with the reference is statistical, not bitwise (SURVEY §7.4.1).
   *     Every contrast over the same pooled multiset sees the same resamples
@@ -70,6 +70,15 @@ class PermutationTest(resamples: Int = 10000, exactCutoff: Long = 20000,
 }
 
 object PermutationTest {
+
+  /** SplitMix64's golden-ratio increment and its output function
+    * (Stafford's Mix13), as in `java.util.SplittableRandom`. */
+  private final val Gamma = 0x9E3779B97F4A7C15L
+  private def mix64(z: Long): Long = {
+    val a = (z ^ (z >>> 30)) * 0xBF58476D1CE4E5B9L
+    val b = (a ^ (a >>> 27)) * 0x94D049BB133111EBL
+    b ^ (b >>> 31)
+  }
 
   /** The statistic, mean(x) − mean(y), for sides given as their stored
     * values and their sizes `nx`, `ny` (at least the stored counts): a side
@@ -176,12 +185,14 @@ object PermutationTest {
     * as far as the largest side among the contrasts still running. Drawing
     * a size-k side determines both side sums (s and total − s), so contrast
     * c reads its side sum at its own k = min(nx, ny), the smaller side. The
-    * swaps are undone after each resample, and resample r draws from the
-    * master RNG's r-th `split()` sub-stream, seeded from the pooled content
-    * and size only. So contrast c's length-k prefix in resample r depends on
-    * the pool and r alone, and its result is bit-identical to the
-    * one-contrast call ([[test]] on its own sides): contrasts neither share
-    * state nor see each other, only their draws.
+    * swaps are undone after each resample, and resample r draws from its
+    * own SplitMix64 state, the r-th output of a SplitMix64 stream seeded
+    * from the pooled content and size only, each swap position bounded by
+    * Lemire's multiply-shift (TOMACS 2019): no allocation per resample. So
+    * contrast c's length-k prefix in resample r depends on the pool and r
+    * alone, and its result is bit-identical to the one-contrast call
+    * ([[test]] on its own sides): contrasts neither share state nor see
+    * each other, only their draws.
     *
     * The (1000, 2000, 5000) early-stop checkpoints of [[test]] stay per
     * contrast; a stopped contrast leaves the running set and, if it had the
@@ -196,19 +207,19 @@ object PermutationTest {
     require(obs.length == m && nx.forall(v => v >= 1 && v < n),
       "every contrast needs 1 <= nx < the pool size, and one obs")
     // commutative content hash (Long addition is order-independent, unlike
-    // FP summation). SplittableRandom, not java.util.Random:
-    // Random.next() CASes an AtomicLong per draw, which dominated the hot
-    // loop (the r16 audit's 7.9 s single-row straggler in
-    // mwas_pipeline_full). Every consumer gate is statistical (3·SE bands,
-    // order-invariance, early-stop equivalence), so the stream only needs
-    // to be deterministic, not any particular sequence.
+    // FP summation). Not java.util.Random, whose per-draw AtomicLong CAS
+    // was the r16 audit's 7.9 s straggler in mwas_pipeline_full. Every
+    // consumer gate is statistical (3·SE bands, order-invariance, early-stop
+    // equivalence): the stream must be deterministic, not any one sequence.
     var seed = 41L * n
     var total = 0.0
     sorted.foreach { v =>
-      seed += java.lang.Double.doubleToLongBits(v) * 0x9E3779B97F4A7C15L
+      seed += java.lang.Double.doubleToLongBits(v) * Gamma
       total += v
     }
-    val master = new java.util.SplittableRandom(seed)
+    // mixed first: the hash is linear in Gamma, so unmixed, two pools
+    // whose bit sums differ by d would read each other's resamples d apart
+    val base = mix64(seed)
     val k = Array.tabulate(m)(c => math.min(nx(c), n - nx(c)))
     val absObs = obs.map(math.abs)
     val eps = obs.map(o => 1e-12 * math.max(1.0, math.abs(o)))
@@ -222,7 +233,7 @@ object PermutationTest {
     val swaps = new Array[Int](k.foldLeft(0)(math.max))
     var r = 0
     while (r < resamples && running.nonEmpty) {
-      val rng = master.split()
+      var state = mix64(base + (r + 1) * Gamma)
       val kMax = k(running.last)
       // the next running contrast to read, and its k (0 past the last)
       var next = 0
@@ -230,7 +241,18 @@ object PermutationTest {
       var s = 0.0
       var i = 0
       while (i < kMax) {
-        val j = i + rng.nextInt(n - i)
+        // j uniform on [i, n): a 32-bit draw times the bound, redrawn while
+        // its low word falls in the biased sliver (a division only then)
+        val bound = (n - i).toLong
+        state += Gamma
+        var prod = (mix64(state) >>> 32) * bound
+        if ((prod & 0xFFFFFFFFL) < bound) {
+          val sliver = (0x100000000L - bound) % bound
+          while ((prod & 0xFFFFFFFFL) < sliver) {
+            state += Gamma; prod = (mix64(state) >>> 32) * bound
+          }
+        }
+        val j = i + (prod >>> 32).toInt
         swaps(i) = j
         val tmp = work(i); work(i) = work(j); work(j) = tmp
         s += work(i)

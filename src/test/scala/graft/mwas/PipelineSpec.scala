@@ -1,7 +1,9 @@
 package graft.mwas
 
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{Row, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.{ArrayExcept, Log2,
+  RegExpReplace}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -313,8 +315,9 @@ class PipelineSpec extends AnyFunSuite {
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try {
-      val plan = Pipeline.run(input, catalog, sets, MwasConfig())
-        .queryExecution.executedPlan.toString
+      val executed = Pipeline.run(input, catalog, sets, MwasConfig())
+        .queryExecution.executedPlan
+      val plan = executed.toString
       val lines = plan.linesIterator.toSeq
       val generates = lines.filter(_.contains("Generate "))
       assert(generates.size === 1,
@@ -323,6 +326,13 @@ class PipelineSpec extends AnyFunSuite {
           l.contains("Aggregate")) &&
         Seq("memo_key", "stored_vals", "all_vals").exists(l.contains))
       assert(memo.isEmpty, s"memo join or dedup planned:\n$plan")
+      // the pass emits finished rows: no Welch, complement, label or log2
+      // expression is left for a generated stage to evaluate
+      val assembly = executed.flatMap(_.expressions.flatMap(_.collect {
+        case e @ (_: graft.functions.WelchTTest | _: ArrayExcept |
+            _: RegExpReplace | _: Log2) => e.getClass.getSimpleName
+      }))
+      assert(assembly.isEmpty, s"${assembly.distinct} planned:\n$plan")
     } finally {
       spark.conf.set("spark.sql.adaptive.enabled", "true")
       spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
@@ -356,5 +366,138 @@ class PipelineSpec extends AnyFunSuite {
         pinned.head.contains(", 2)"), plan)
       assert(out.count() === 1L)
     } finally spark.conf.set("spark.sql.adaptive.enabled", "true")
+  }
+
+  test("output rows by hand: zero-variance Welch, complement listings, " +
+      "the listing cap, stat-only rows, labels, non-positive mean ratios") {
+    import spark.implicits._
+    // ten biosamples BS01..BS10, values taken as rpm, in three groups:
+    // g1 is 2 on BS01..03 and 5 elsewhere (both sides constant on every
+    // Welch set), g2 is 3 everywhere (equal constant sides), g3 is
+    // -1, -2, -3 on BS01..03 and 2 elsewhere (negative mean ratios)
+    val ids = (1 to 10).map(i => f"BS$i%02d")
+    val catalog = ids.map(b => (s"R$b", b, "bp1", 1000000.0))
+      .toDF("run", "bio_sample", "bio_project", "spots")
+    def value(g: String, i: Int): Double = g match {
+      case "g1" => if (i <= 3) 2.0 else 5.0
+      case "g2" => 3.0
+      case _ => if (i <= 3) -i.toDouble else 2.0
+    }
+    val input = (for (g <- Seq("g1", "g2", "g3"); i <- 1 to 10)
+      yield (s"R${ids(i - 1)}", g, value(g, i)))
+      .toDF("run", "group", "quantifier")
+    val (low, high) = ids.splitAt(3)
+    // "liver": BS01..03 stored, include — true side listed as stored;
+    // "male": BS04..10 stored, exclude — the same split, true side listed
+    // as the complement; "right": BS04..10 stored, include — the mirror
+    // split; "old": BS01..05, 5 vs 5 — the permutation route
+    val setsDf = Seq(("tissue,type", "liver,left", low, true),
+        ("sex", "male", high, false), ("side", "right", high, true),
+        ("age", "old", ids.take(5), true))
+      .zipWithIndex.map { case ((a, v, m, inc), id) =>
+        ("bp1", a, v, m, m.size, inc, 10, id.toLong)
+      }.toDF("bioproject", "attributes", "values", "members", "n_stored",
+        "include", "n_biosamples", "set_id")
+    def rows(cfg: MwasConfig): Map[(String, String), Row] =
+      Pipeline.run(input, catalog, setsDf, cfg.copy(alreadyNormalized = true))
+        .collect().map(r => (r.getAs[String]("group"),
+          r.getAs[String]("metadata_value")) -> r).toMap
+    def isNull(r: Row, c: String) = r.isNullAt(r.fieldIndex(c))
+    def near(a: Double, b: Double) = math.abs(a - b) < 1e-9
+
+    val out = rows(MwasConfig())
+    assert(out.size === 12)
+    out.values.foreach { r =>
+      assert(r.getAs[String]("bioproject") === "bp1")
+      assert(r.getAs[Double]("runtime_seconds") === 0.0)
+      assert(r.getAs[Long]("memory_usage_bytes") === 0L)
+    }
+    // labels lose their commas
+    val liver = out(("g1", "liver left"))
+    assert(liver.getAs[String]("metadata_field") === "tissue type")
+    // g1: constant sides, different means: t = ±inf, p = 0, significant
+    for ((v, t, trueList, falseList) <- Seq(
+        ("liver left", Double.NegativeInfinity, low, high),
+        ("male", Double.NegativeInfinity, low, high),
+        ("right", Double.PositiveInfinity, high, low))) {
+      val r = out(("g1", v))
+      val (nT, nF) = (trueList.size.toLong, falseList.size.toLong)
+      val (mT, mF) = if (nT == 3) (2.0, 5.0) else (5.0, 2.0)
+      assert(r.getAs[String]("status") === "t_test; significant", v)
+      assert((r.getAs[Long]("num_true"), r.getAs[Long]("num_false")) ===
+        ((nT, nF)), v)
+      assert((r.getAs[Double]("mean_rpm_true"),
+        r.getAs[Double]("mean_rpm_false")) === ((mT, mF)), v)
+      assert((r.getAs[Double]("sd_rpm_true"),
+        r.getAs[Double]("sd_rpm_false")) === ((0.0, 0.0)), v)
+      assert(r.getAs[Double]("test_statistic") === t, v)
+      assert(r.getAs[Double]("p_value") === 0.0, v)
+      assert(near(r.getAs[Double]("fold_change"),
+        math.log(mT / mF) / math.log(2.0)), v)
+      assert(r.getAs[String]("true_biosamples") === trueList.mkString("; "), v)
+      assert(r.getAs[String]("false_biosamples") === falseList.mkString("; "),
+        v)
+    }
+    // g2: constant, equal sides: t and p are NaN, not significant
+    for (v <- Seq("liver left", "male", "right")) {
+      val r = out(("g2", v))
+      assert(r.getAs[String]("status") === "t_test", v)
+      assert(r.getAs[Double]("test_statistic").isNaN, v)
+      assert(r.getAs[Double]("p_value").isNaN, v)
+      assert(r.getAs[Double]("fold_change") === 0.0, v)
+      assert(r.getAs[String]("true_biosamples") === "", v)
+      assert(r.getAs[String]("false_biosamples") === "", v)
+    }
+    // g3: mean ratio -1 has no log2: null fold change. True side {-1,-2,-3}
+    // (pop sd sqrt(2/3)) vs constant 2: t = ∓4/sqrt(2/9), df = 2, where
+    // the two-sided t-tail is 1 - |t|/sqrt(2 + t²) = 1 - sqrt(72/74)
+    for ((v, sign) <- Seq(("liver left", -1), ("male", -1), ("right", 1))) {
+      val r = out(("g3", v))
+      assert(isNull(r, "fold_change"), v)
+      assert(near(r.getAs[Double]("test_statistic"),
+        sign * 4.0 / math.sqrt(2.0 / 9)), v)
+      assert(near(r.getAs[Double]("p_value"), 1 - math.sqrt(72.0 / 74)), v)
+      assert(r.getAs[String]("status") === "t_test", v)
+      assert(r.getAs[String]("true_biosamples") === "", v)
+    }
+    // "old" is 5 vs 5, exact enumeration of C(10, 5) = 252 splits: g1 and
+    // g3 each have 42 splits at least as extreme (p = 1/6), g2 has 252
+    for ((g, mT, mF, p, fold) <- Seq(
+        ("g1", 3.2, 5.0, 1.0 / 6, Some(math.log(3.2 / 5) / math.log(2.0))),
+        ("g2", 3.0, 3.0, 1.0, Some(0.0)),
+        ("g3", -0.4, 2.0, 1.0 / 6, None))) {
+      val r = out((g, "old"))
+      assert(r.getAs[String]("status") ===
+        "permutation_test (permutation_exact)", g)
+      assert(near(r.getAs[Double]("mean_rpm_true"), mT), g)
+      assert(near(r.getAs[Double]("test_statistic"), mT - mF), g)
+      assert(near(r.getAs[Double]("p_value"), p), g)
+      assert(fold.fold(isNull(r, "fold_change"))(f =>
+        near(r.getAs[Double]("fold_change"), f)), g)
+      assert(r.getAs[String]("false_biosamples") === "", g)
+    }
+
+    // the listing cap: a side of at least biosampleListCap is not listed
+    val capped = rows(MwasConfig(biosampleListCap = 4))
+    for ((v, trueList, falseList) <- Seq(
+        ("liver left", low.mkString("; "), "too many biosamples to list"),
+        ("male", low.mkString("; "), "too many biosamples to list"),
+        ("right", "too many biosamples to list", low.mkString("; ")))) {
+      assert(capped(("g1", v)).getAs[String]("true_biosamples") === trueList)
+      assert(capped(("g1", v)).getAs[String]("false_biosamples") === falseList)
+    }
+
+    // statistic-only mode: the permutation rows carry the mean difference,
+    // a null p, no suffix and no listings; Welch rows are unchanged
+    val statOnly = rows(MwasConfig(statClosedForm = true))
+    for ((g, diff) <- Seq(("g1", 3.2 - 5.0), ("g2", 0.0), ("g3", -0.4 - 2))) {
+      val r = statOnly((g, "old"))
+      assert(r.getAs[String]("status") === "permutation_test (stat_only)", g)
+      assert(near(r.getAs[Double]("test_statistic"), diff), g)
+      assert(isNull(r, "p_value"), g)
+      assert(r.getAs[String]("true_biosamples") === "", g)
+      assert(r.getAs[String]("false_biosamples") === "", g)
+    }
+    assert(statOnly(("g1", "male")).toSeq === out(("g1", "male")).toSeq)
   }
 }
