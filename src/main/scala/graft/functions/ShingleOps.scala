@@ -271,13 +271,12 @@ object SortedLongJaccard {
   * signature slots m_k = min over the set of XXH64(element, seed = k),
   * folded into `numBands` band hashes (rows-per-band =
   * numHashes/numBands consecutive slots chained through XXH64). One
-  * compiled loop per row — the banded streaming stores
-  * ([[graft.operators.StreamingComponentsQueries]]) compute signatures
-  * per ROW at ingest instead of paying the explode + 64-aggregate
-  * shuffle + reassembly join of the batch arm's
-  * [[graft.operators.DedupQueries.bandRelation]] every trigger. The
-  * values are internal to the store (never compared cross-engine), so
-  * the seed scheme only needs determinism, not bandRelation parity.
+  * compiled loop per row, so signaturing a corpus or a streamed batch
+  * is a narrow map with no shuffle; the only MinHash signature of the
+  * text near-dup family, called once from
+  * [[graft.operators.DedupQueries.bandSignatures]]. The values are
+  * internal to the engine (never compared cross-engine), so the seed
+  * scheme only needs determinism.
   * Empty input yields the seeds' fold of Long.MaxValue slots — empty
   * sets all land in the same buckets and are rejected by exact
   * verification (J(∅,∅) = 0.0 in [[SortedLongJaccard]]). */

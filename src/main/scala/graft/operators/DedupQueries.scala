@@ -38,17 +38,10 @@ object DedupQueries {
 
   /** Word 3-gram shingle set as sorted distinct xxhash64 values — one
     * compiled loop per row ([[graft.functions.NgramHashes]]) instead of
-    * the interpreted transform/slice/concat_ws/array_distinct chain.
-    * Downstream equality joins and min-aggregates see the exact values
-    * the old `xxhash64(gram_string)` produced. */
+    * the interpreted transform/slice/concat_ws/array_distinct chain,
+    * with the exact values the old `xxhash64(gram_string)` produced. */
   private val shingles: Column =
     graft.functions.ShingleOps.ngram_hashes(split(col("text"), " "), 3)
-
-  /** Set Jaccard over the sorted-distinct hash arrays: linear merge,
-    * no per-pair array building. Collision-equivalent to string-set
-    * Jaccard (as the old xxhash64 bucket join already was). */
-  private def jaccard(a: Column, b: Column): Column =
-    graft.functions.ShingleOps.sorted_jaccard(a, b)
 
   /** embeddings with double-cast vector and L2 norm. */
   private def vecs(s: SparkSession, dir: String): DataFrame =
@@ -156,13 +149,38 @@ object DedupQueries {
    * banded candidate relation (dedupMinhashLsh), where the probe side
    * of THIS join is a batch and the broadcast is ∝ batch by design. */
   private def jaccardJoin(w: DataFrame, wRight: DataFrame,
-      pred: (org.apache.spark.sql.Column, org.apache.spark.sql.Column) =>
-        org.apache.spark.sql.Column): DataFrame = {
+      pred: (Column, Column) => Column): DataFrame =
+    sharedWordCounts(w, wRight, pred(col("doc_a"), col("doc_b")) &&
+        least(col("na"), col("nb")).cast("double") >=
+          lit(jaccardThreshold) * greatest(col("na"), col("nb")))
+      .withColumn("jaccard", col("inter").cast("double") /
+        (col("na") + col("nb") - col("inter")).cast("double"))
+      .filter(col("jaccard") >= jaccardThreshold)
+      .select(col("doc_a"), col("doc_b"), col("jaccard"))
+
+  /** (doc_a, doc_b, na, nb, inter): shared distinct-word counts per
+    * (source, word)-joined pair of `w` × `wRight` rows that pass `keep`
+    * (a filter over doc_a, doc_b, na, nb, applied before the pair
+    * aggregation), with na/nb the docs' distinct-word counts over `w`.
+    * The pinned shape of [[jaccardJoin]] (above) and
+    * [[dedupContainment]]: doc-partitioned probe at explicit width,
+    * broadcast count and word sides. */
+  private def sharedWordCounts(w: DataFrame, wRight: DataFrame,
+      keep: Column): DataFrame = {
     val nw = w.groupBy(col("doc_id")).agg(count(lit(1)).as("nw"))
-    val right = wRight.select(col("source"), col("doc_id").as("doc_r"),
+    val left = w.repartition(w.sparkSession.sparkContext.defaultParallelism,
+        col("doc_id"))
+      .select(col("source"), col("doc_id").as("doc_a"), col("word"))
+      .join(broadcast(nw.select(col("doc_id").as("doc_a"),
+        col("nw").as("na"))), "doc_a")
+    val right = wRight.select(col("source"), col("doc_id").as("doc_b"),
         col("word"))
-      .join(broadcast(nw.select(col("doc_id").as("doc_r"),
-        col("nw").as("nr"))), "doc_r")
+      .join(broadcast(nw.select(col("doc_id").as("doc_b"),
+        col("nw").as("nb"))), "doc_b")
+    val shared = left.join(broadcast(right), Seq("source", "word"))
+      .filter(keep)
+      .groupBy(col("doc_a"), col("doc_b"), col("na"), col("nb"))
+      .agg(count(lit(1)).as("inter"))
     // Enforce the posture bound MECHANICALLY (ADVICE r15): the pinned
     // broadcast of the word relation is only valid inside the documented
     // ≤30×/oracle envelope — past it the failure mode is Spark's 8 GiB
@@ -172,25 +190,12 @@ object DedupQueries {
     // stats compress), so this warns rather than throws.
     val rightEst = right.queryExecution.optimizedPlan.stats.sizeInBytes
     if (rightEst > BigInt(4L << 30))
-      System.err.println(s"[graft] jaccardJoin: broadcast word-relation " +
-        s"estimate $rightEst B exceeds 4 GiB — this exact arm is the " +
-        "bounded oracle posture; at this scale route candidates through " +
-        "the banded path (bandedWordEdges / dedupMinhashLsh)")
-    w.repartition(w.sparkSession.sparkContext.defaultParallelism,
-        col("doc_id"))
-      .select(col("source"), col("doc_id").as("doc_l"), col("word"))
-      .join(broadcast(nw.select(col("doc_id").as("doc_l"),
-        col("nw").as("nl"))), "doc_l")
-      .join(broadcast(right), Seq("source", "word"))
-      .filter(pred(col("doc_l"), col("doc_r")) &&
-        least(col("nl"), col("nr")).cast("double") >=
-          lit(jaccardThreshold) * greatest(col("nl"), col("nr")))
-      .groupBy(col("doc_l"), col("doc_r"), col("nl"), col("nr"))
-      .agg(count(lit(1)).as("inter"))
-      .withColumn("jaccard", col("inter").cast("double") /
-        (col("nl") + col("nr") - col("inter")).cast("double"))
-      .filter(col("jaccard") >= jaccardThreshold)
-      .select(col("doc_l"), col("doc_r"), col("jaccard"))
+      System.err.println(s"[graft] sharedWordCounts: broadcast " +
+        s"word-relation estimate $rightEst B exceeds 4 GiB — this exact " +
+        "arm is the bounded oracle posture; at this scale route " +
+        "candidates through the banded path (bandedWordEdges / " +
+        "dedupMinhashLsh)")
+    shared
   }
 
   /** [[bandedWordEdges]] over the corpus, in the pair relation's
@@ -210,8 +215,6 @@ object DedupQueries {
   private[operators] def jaccardPairs(s: SparkSession, dir: String): DataFrame = {
     val w = wordRel(s, dir)
     jaccardJoin(w, w, _ < _)
-      .select(col("doc_l").as("doc_a"), col("doc_r").as("doc_b"),
-        col("jaccard"))
   }
 
   /** Asymmetric variant for consumers that only need pairs TOUCHING a
@@ -228,7 +231,7 @@ object DedupQueries {
     val wp = w.join(broadcast(rightIds.select(col("doc_id"))),
       Seq("doc_id"), "left_semi")
     jaccardJoin(w, wp, _ =!= _)
-      .select(col("doc_l").as("doc_x"), col("doc_r").as("doc_p"))
+      .select(col("doc_a").as("doc_x"), col("doc_b").as("doc_p"))
   }
 
   /** Word relation from an explicit documents frame — the streaming
@@ -282,19 +285,32 @@ object DedupQueries {
   private[operators] def bandedWordEdges(d: DataFrame): DataFrame =
     bandedWordPairsJ(d).select(col("u"), col("v"))
 
-  /** The banded pair relation WITH the verified jaccard value — the
-    * 100 TB arm for the value-bearing consumer too (VERDICT r16 item 2):
-    * verification already computes the exact sorted-set Jaccard on every
-    * candidate, so emitting it costs nothing, and `sorted_jaccard` is
-    * the double division of the same integers the exact arm divides
-    * (hash-proven cross-engine by the dedup_minhash_lsh oracle).
+  /** The banded pair relation WITH the verified jaccard value, at the
+    * word grain — the 100 TB arm for the value-bearing consumer too
+    * (VERDICT r16 item 2): verification already computes the exact
+    * sorted-set Jaccard on every candidate, so emitting it costs nothing,
+    * and `sorted_jaccard` is the double division of the same integers
+    * the exact arm divides. */
+  private[operators] def bandedWordPairsJ(d: DataFrame): DataFrame =
+    bandedPairsJ(wordHashSets(d))
+
+  /** The one MinHash-LSH pair core of the text near-dup family, over any
+    * (doc_id, source, wh) relation of sorted-distinct hash sets: word
+    * sets ([[bandedWordPairsJ]]) or 3-gram shingle sets under a constant
+    * source ([[minhashPairsOf]]). `source` is the block key; pairs never
+    * cross it. Signatures ([[bandSignatures]]), the slim band self-join
+    * with the length-ratio prefilter ([[bandCandidates]]), and exact
+    * `sorted_jaccard` ≥ 0.7 verification; returns (u, v, jaccard),
+    * u < v, distinct. A true J ≥ 0.7 pair misses all 32 bands with
+    * probability ≤ (1−J²)³² ≈ 4.4e-10, and no false pair ever enters:
+    * the band-miss waiver every consumer records at its registration.
     *
     * EXACT-DUP PRE-CONTRACTION, DATA-GATED (r17, VERDICT r16 item 3):
-    * docs with IDENTICAL word-hash sets are certain J = 1.0 pairs and
-    * share all 32 band hashes, so every (source, band, bh) bucket holds
-    * the whole clique and the band self-join is quadratic in clique
-    * size — the latent skew cliff on duplicate-heavy corpora (§2.5).
-    * The contracted arm collapses each identical-set group to one
+    * docs with IDENTICAL hash sets are certain J = 1.0 pairs and share
+    * all 32 band hashes, so every (source, band, bh) bucket holds the
+    * whole clique and the band self-join is quadratic in clique size —
+    * the latent skew cliff on duplicate-heavy corpora (§2.5). The
+    * contracted arm collapses each identical-set group to one
     * representative before banding and expands after verification; but
     * its (source, wh) set shuffle costs ~1.5 s per consumer on the
     * LOW-duplication bench fixture (dup mass 0.08), where it buys
@@ -308,30 +324,38 @@ object DedupQueries {
     * (`approx_count_distinct` at its default rsd of 0.05) can only move
     * the cutover point, never a result. */
   /* The gate's price: one extra job per call, a narrow HLL aggregate
-   * over `whs` that also recomputes `d` and the per-doc word hashing
-   * when the caller has not materialized `d`. Both arms pay it; its
-   * cost is unmeasured. */
+   * over `hs` that also recomputes the caller's documents relation and
+   * the per-doc hashing when the caller has not materialized it. Both
+   * arms pay it; its cost is unmeasured. */
   private[operators] val contractionDupMassGate = 0.25
 
-  private[operators] def bandedWordPairsJ(d: DataFrame): DataFrame = {
-    val whs = wordHashSets(d)
-    val st = whs.agg(count(lit(1)).as("n"),
+  private[operators] def bandedPairsJ(hs: DataFrame): DataFrame = {
+    val st = hs.agg(count(lit(1)).as("n"),
       approx_count_distinct(xxhash64(col("source"), col("wh"))).as("nd"))
       .head()
     val n = st.getLong(0)
     val dupMass = if (n == 0L) 0.0 else 1.0 - st.getLong(1).toDouble / n
-    if (dupMass >= contractionDupMassGate) bandedContractedPairsJ(whs)
-    else bandedDirectPairsJ(whs)
+    if (dupMass >= contractionDupMassGate) bandedContractedPairsJ(hs)
+    else bandedDirectPairsJ(hs)
   }
+
+  /** (doc_id, source, wh, nw, bands): a hash-set relation's signature
+    * rows — the set size and its 32 MinHash(64) band hashes (2 rows per
+    * band) via the native per-row [[graft.functions.MinhashBands]]: a
+    * narrow map, zero shuffles to signature a corpus or a batch. The
+    * batch core and the streaming signature stores
+    * ([[StreamingComponentsQueries]], [[StreamingDedupQueries]]) both
+    * signature here, so the scheme is defined once. */
+  private[operators] def bandSignatures(hs: DataFrame): DataFrame =
+    hs.select(col("doc_id"), col("source"), col("wh"),
+      size(col("wh")).as("nw"),
+      graft.functions.ShingleOps.minhash_bands(col("wh"), 64, 32)
+        .as("bands"))
 
   /** The direct (r16) banded shape: signature every doc, band self-join,
     * exact verify — the arm for low-duplication corpora. */
   private def bandedDirectPairsJ(whs: DataFrame): DataFrame = {
-    val sig = whs.select(col("doc_id"), col("source"),
-      size(col("wh")).as("nw"),
-      graft.functions.ShingleOps.minhash_bands(col("wh"), 64, 32)
-        .as("bands"))
-    val cand = bandCandidates(sig)
+    val cand = bandCandidates(bandSignatures(whs))
     val wa = whs.select(col("doc_id").as("u"), col("wh").as("wa"))
     val wb = whs.select(col("doc_id").as("v"), col("wh").as("wb"))
     cand.join(wa, Seq("u")).join(wb, Seq("v"))
@@ -341,7 +365,7 @@ object DedupQueries {
       .filter(col("jaccard") >= jaccardThreshold)
   }
 
-  /** The contracted arm: one row per DISTINCT word set enters the band
+  /** The contracted arm: one row per DISTINCT hash set enters the band
     * self-join; within-group pairs emit deterministically at J = 1.0
     * (a band can no longer miss them) and every verified rep–rep pair
     * expands through both member lists (identical sets ⇒ the identical
@@ -353,11 +377,8 @@ object DedupQueries {
         sort_array(collect_list(col("doc_id"))).as("ids"),
         count(lit(1)).as("gsz"))
       .localCheckpoint(true)
-    val sig = grp.select(col("rep").as("doc_id"), col("source"),
-      size(col("wh")).as("nw"),
-      graft.functions.ShingleOps.minhash_bands(col("wh"), 64, 32)
-        .as("bands"))
-    val cand = bandCandidates(sig)
+    val cand = bandCandidates(bandSignatures(
+      grp.select(col("rep").as("doc_id"), col("source"), col("wh"))))
     // verify AND expand from the same two group joins (wh and ids ride
     // together), so grp is read twice here, not four times
     val ga = grp.select(col("rep").as("u"), col("wh").as("wa"),
@@ -447,24 +468,7 @@ object DedupQueries {
     * cross-engine, no rounding needed. */
   def dedupContainment(s: SparkSession, dir: String): DataFrame = {
     val w = wordRel(s, dir)
-    val nw = w.groupBy(col("doc_id")).agg(count(lit(1)).as("nw"))
-    // jaccardJoin's pinned shape (r15 audit): doc-partitioned probe at
-    // explicit width + broadcast word side — pair fan-outs stay
-    // task-local so the partial aggregate emits final-sized counts
-    val shared = w
-      .repartition(s.sparkContext.defaultParallelism, col("doc_id"))
-      .select(col("source"), col("doc_id").as("doc_a"), col("word"))
-      .join(broadcast(nw.select(col("doc_id").as("doc_a"),
-        col("nw").as("na"))), "doc_a")
-      .join(broadcast(
-        w.select(col("source"), col("doc_id").as("doc_b"), col("word"))
-          .join(broadcast(nw.select(col("doc_id").as("doc_b"),
-            col("nw").as("nb"))), "doc_b")),
-        Seq("source", "word"))
-      .filter(col("doc_a") < col("doc_b"))
-      .groupBy(col("doc_a"), col("doc_b"), col("na"), col("nb"))
-      .agg(count(lit(1)).as("inter"))
-    shared
+    sharedWordCounts(w, w, col("doc_a") < col("doc_b"))
       .withColumn("containment", col("inter").cast("double") /
         least(col("na"), col("nb")).cast("double"))
       .filter(col("containment") >= 0.95)
@@ -693,51 +697,28 @@ object DedupQueries {
 
   // ----------------------------------------------------- D3: MinHash + LSH
 
-  /** MinHash(64) → 32 bands × 2 rows → bucket-join candidates → exact
-    * 3-gram-Jaccard verification at 0.7. Miss probability for a true pair
-    * at J=0.7 is ≈(1−0.7²)³² ≈ 6e-10, so the oracle (exhaustive
-    * shared-shingle join) agrees. Sub-quadratic: the only shuffles are the
-    * signature groupBy and the band buckets.
-    *
-    * Formulated as explode → 64 codegen'd `min(xxhash64(k, h))` aggregates
-    * over a once-per-shingle base hash, NOT nested higher-order lambdas:
-    * HOFs evaluate interpreted per element, and the lambda version cost
-    * 200+ s at sf0.1 vs seconds for this shape. (Seeded re-hash of the
-    * 8-byte base hash, not arithmetic mixing — ANSI mode, on by default in
-    * Spark 4, rejects the wrapping long multiply a*h+b needs.) */
+  /** Near-dup pairs by exact 3-gram-shingle Jaccard ≥ 0.7 across the
+    * whole corpus (no source block), via the family's MinHash-LSH core
+    * ([[bandedPairsJ]]): MinHash(64) → 32 bands × 2 rows → bucket-join
+    * candidates → exact verification. Miss probability for a true pair
+    * at J = 0.7 is ≈ (1−0.7²)³² ≈ 6e-10, so the oracle (exhaustive
+    * shared-shingle join) agrees. Sub-quadratic: the shuffles are the
+    * band buckets and the verification joins, plus the contraction
+    * gate's narrow HLL prepass. */
   def dedupMinhashLsh(s: SparkSession, dir: String): DataFrame =
     minhashPairs(s, dir).orderBy(col("doc_a"), col("doc_b"))
 
-  /** (doc_id, sh) — per-doc distinct xxhash64 shingle sets; docs with
-    * fewer than 3 words carry no shingles and are excluded (they can
-    * never be near-dups). The explode downstream feeds the same `h`
-    * values the old `xxhash64(gram_string)` produced. Shared by the
-    * batch pair relation and the incremental streaming dedup
+  /** (doc_id, source, wh) — per-doc distinct xxhash64 3-gram shingle
+    * sets under one constant block key, since MinHash pairs cross
+    * sources; docs with fewer than 3 words carry no shingles and are
+    * excluded (they can never be near-dups). The `wh` values are the
+    * ones the old `xxhash64(gram_string)` produced. Shared by the batch
+    * pair relation and the incremental streaming dedup
     * ([[StreamingDedupQueries]]), which signatures ONE BATCH at a time
     * through this same function. */
   private[operators] def shingleSets(d: DataFrame): DataFrame =
-    d.select(col("doc_id"), shingles.as("sh")).filter(size(col("sh")) > 0)
-
-  /** (doc_id, band, bh) — the 32-band LSH bucket relation over MinHash(64)
-    * signatures (64 codegen'd `min(xxhash64(k, h))` aggregates, 2 rows
-    * per band). Factored from [[minhashPairs]] so the streaming dedup
-    * appends exactly these rows to its accumulated signature store —
-    * bucket values are bit-identical between the batch and incremental
-    * paths by construction. */
-  private[operators] def bandRelation(base: DataFrame): DataFrame = {
-    val hashed = base.select(col("doc_id"), explode(col("sh")).as("h"))
-    val minAggs = (0 until 64).map { k =>
-      min(xxhash64(lit(k), col("h"))).as(s"m$k")
-    }
-    val sig = hashed.groupBy(col("doc_id"))
-      .agg(minAggs.head, minAggs.tail: _*)
-    val bandStructs = (0 until 32).map { b =>
-      struct(lit(b).as("band"),
-        hash(col(s"m${2 * b}"), col(s"m${2 * b + 1}")).as("bh"))
-    }
-    sig.select(col("doc_id"), explode(array(bandStructs: _*)).as("e"))
-      .select(col("doc_id"), col("e.band"), col("e.bh"))
-  }
+    d.select(col("doc_id"), lit("").as("source"), shingles.as("wh"))
+      .filter(size(col("wh")) > 0)
 
   /** The unordered MinHash-LSH verified pair relation — shared by
     * [[dedupMinhashLsh]] (the pair query) and [[dedupCanonical]] (which
@@ -748,21 +729,9 @@ object DedupQueries {
   /** [[minhashPairs]] over an arbitrary document relation — the
     * containment posture selector runs it over a hash SAMPLE of the
     * corpus ([[dedupContainmentAuto]]). */
-  private[operators] def minhashPairsOf(d: DataFrame): DataFrame = {
-    val base = shingleSets(d)
-    val banded = bandRelation(base)
-    val cand = banded.as("x").join(banded.as("y"),
-        col("x.band") === col("y.band") && col("x.bh") === col("y.bh") &&
-          col("x.doc_id") < col("y.doc_id"))
-      .select(col("x.doc_id").as("doc_a"), col("y.doc_id").as("doc_b"))
-      .distinct()
-    val sa = base.select(col("doc_id").as("doc_a"), col("sh").as("sha"))
-    val sb = base.select(col("doc_id").as("doc_b"), col("sh").as("shb"))
-    cand.join(sa, "doc_a").join(sb, "doc_b")
-      .withColumn("jaccard", jaccard(col("sha"), col("shb")))
-      .filter(col("jaccard") >= 0.7)
-      .select(col("doc_a"), col("doc_b"), col("jaccard"))
-  }
+  private[operators] def minhashPairsOf(d: DataFrame): DataFrame =
+    bandedPairsJ(shingleSets(d))
+      .select(col("u").as("doc_a"), col("v").as("doc_b"), col("jaccard"))
 
   val dedupMinhashLshSql: String =
     """WITH sh AS (
@@ -795,13 +764,14 @@ object DedupQueries {
     * 10× → 109.8 s at 30× — exponent ≈1.6 past 10×, block-bucket
     * collision pair work. The lever is bits-per-block ≈ log2(N) (a WIDER
     * fingerprint; more same-width blocks only add collision chances):
-    * [[simhashNear]] measured 16-bit blocks at 75.7 s and 20-bit at
-    * 65.2 s on the same 30× fixture (−40% vs shipped 15-bit). The
-    * residual is true near-identical fingerprint cliques (the fixture's
-    * 31-word vocab makes them common, as does boilerplate in real
-    * corpora) whose m² pair output no bucketing shrinks — the next lever
-    * past blockBits is collapsing identical-fingerprint groups
-    * algebraically before pairing. */
+    * a blockBits-parameterized measurement arm (4 blocks, each hashing
+    * its own md5 hex span; retired once recorded) measured 16-bit blocks
+    * at 75.7 s and 20-bit at 65.2 s on the same 30× fixture (−40% vs
+    * shipped 15-bit). The residual is true near-identical fingerprint
+    * cliques (the fixture's 31-word vocab makes them common, as does
+    * boilerplate in real corpora) whose m² pair output no bucketing
+    * shrinks — the next lever past blockBits is collapsing
+    * identical-fingerprint groups algebraically before pairing. */
   def dedupSimhash(s: SparkSession, dir: String): DataFrame = {
     // explode distinct words → one codegen'd sign-sum aggregate per bit
     // (the nested-lambda formulation of the same math ran interpreted and
@@ -852,67 +822,6 @@ object DedupQueries {
     sim.join(cnt, Seq("doc_id"), "left_outer")
       .na.fill(Map("n_near" -> 0L))
       .select(col("doc_id"), col("simhash"), col("n_near"))
-      .orderBy(col("doc_id"))
-  }
-
-  /** Scale-lever variant of the SimHash near-dup counter for the stress
-    * harness (tools.StressFixture): 4 pigeonhole blocks × `blockBits`
-    * each, so bucket occupancy per block is N/2^blockBits — the r11
-    * stress run measured the shipped 15-bit blocks going superlinear at
-    * 30× sf0.1 (19.3 s → 109.8 s for 3× the docs, exponent ≈1.6, all of
-    * it bucket-collision pair work), which is exactly the documented
-    * lever point: HOLD occupancy by growing blockBits ≈ log2(N), i.e. a
-    * wider fingerprint, not more blocks (more same-width blocks only add
-    * collision chances). Each block hashes its own md5 hex span, so
-    * blockBits must divide by 4; the relation (doc_id, n_near) matches
-    * [[dedupSimhash]]'s counting semantics with the fingerprint carried
-    * as a 4-long array (hamming = summed per-block bit_count(xor)). The
-    * shipped 60-bit operator keeps its bit-exact DuckDB oracle; this
-    * variant exists to MEASURE the lever, like annLshNn's nBits. */
-  private[operators] def simhashNear(s: SparkSession, dir: String,
-      blockBits: Int): DataFrame = {
-    require(blockBits % 4 == 0 && blockBits <= 28,
-      s"blockBits must be a multiple of 4 hex digits <= 28, got $blockBits")
-    val hexPer = blockBits / 4
-    val nBlocks = 4
-    val words = docs(s, dir)
-      .select(col("doc_id"),
-        explode(array_distinct(split(col("text"), " "))).as("w"))
-    val withH = words.select(col("doc_id") +: (0 until nBlocks).map { b =>
-      conv(substring(md5(col("w")), b * hexPer + 1, hexPer), 16, 10)
-        .cast("long").as(s"h$b")
-    }: _*)
-    val signAggs = for (b <- 0 until nBlocks; j <- 0 until blockBits) yield
-      sum(when(shiftright(col(s"h$b"), j).bitwiseAND(1L) =!= 0, 1L)
-        .otherwise(-1L)).as(s"s${b}_$j")
-    val bitsums = withH.groupBy(col("doc_id"))
-      .agg(signAggs.head, signAggs.tail: _*)
-    val blockVals = (0 until nBlocks).map { b =>
-      (0 until blockBits).map { j =>
-        when(col(s"s${b}_$j") > 0, lit(1L << j)).otherwise(0L)
-      }.reduce(_ + _).as(s"bv$b")
-    }
-    val sim = bitsums.select(col("doc_id") +: blockVals: _*)
-      .select(col("doc_id"),
-        array((0 until nBlocks).map(b => col(s"bv$b")): _*).as("bvs"))
-    val blocked = sim.select(col("doc_id"), col("bvs"),
-      posexplode(col("bvs")).as(Seq("blk", "bv")))
-    val hamming = (0 until nBlocks).map(b =>
-      bit_count(col("x.bvs").getItem(b)
-        .bitwiseXOR(col("y.bvs").getItem(b)))).reduce(_ + _)
-    val near = blocked.as("x").join(blocked.as("y"),
-        col("x.blk") === col("y.blk") && col("x.bv") === col("y.bv") &&
-          col("x.doc_id") < col("y.doc_id"))
-      .select(col("x.doc_id").as("doc_a"), col("y.doc_id").as("doc_b"),
-        hamming.as("hd"))
-      .distinct()
-      .filter(col("hd") <= 3)
-    val cnt = near.select(col("doc_a").as("doc_id"))
-      .union(near.select(col("doc_b").as("doc_id")))
-      .groupBy(col("doc_id")).agg(count(lit(1)).as("n_near"))
-    sim.join(cnt, Seq("doc_id"), "left_outer")
-      .na.fill(Map("n_near" -> 0L))
-      .select(col("doc_id"), col("n_near"))
       .orderBy(col("doc_id"))
   }
 
@@ -2019,7 +1928,7 @@ object DedupQueries {
     * default. */
   private[operators] def edgesE2e(w2: DataFrame): DataFrame =
     jaccardJoin(w2, w2, _ < _)
-      .select(col("doc_l").as("u"), col("doc_r").as("v"))
+      .select(col("doc_a").as("u"), col("doc_b").as("v"))
 
   /** [[edgesE2e]] over a documents relation — the exact arm in the
     * parameterized pipeline's (docs → edges) shape. */

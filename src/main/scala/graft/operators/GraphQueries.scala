@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.streaming.StreamingQueries.releaseCheckpoint
+
 /** Iterative graph analytics over the near-dup pair graph — PageRank as
   * the representative of the fixed-point-iteration class (power
   * iteration on a sparse matrix), the third graph shape next to the
@@ -54,6 +56,7 @@ object GraphQueries {
       .unionByName(pairs.select(col("doc_b").as("doc_a"),
         col("doc_a").as("doc_b")))
       .localCheckpoint(true)
+    releaseCheckpoint(pairs)
     val deg = edges.groupBy(col("doc_a")).agg(count(lit(1)).as("deg"))
     val n = deg.count()
     // loop-INVARIANT join hoist (r16): edges ⋈ deg never changes across
@@ -76,7 +79,7 @@ object GraphQueries {
     var ranks = deg.select(col("doc_a").as("doc_id"),
       lit(1.0 / n).as("pr"))
     for (_ <- 1 to iters) {
-      ranks = edgesW
+      val next = edgesW
         .join(ranks, edgesW("doc_a") === ranks("doc_id"))
         .select(col("doc_b").as("doc_id"), (col("pr") / col("deg"))
           .as("m"))
@@ -85,7 +88,13 @@ object GraphQueries {
         .select(col("doc_id"),
           (lit((1.0 - d) / n) + lit(d) * col("msum")).as("pr"))
         .localCheckpoint(true)
+      // next is materialized, so the superseded rank vector's blocks can
+      // go (the connectedComponents discipline); edgesW goes after the
+      // last round
+      releaseCheckpoint(ranks)
+      ranks = next
     }
+    releaseCheckpoint(edgesW)
     ranks.join(deg.select(col("doc_a").as("doc_id"), col("deg")),
         Seq("doc_id"))
   }
@@ -268,6 +277,7 @@ object GraphQueries {
       .unionByName(pairs.select(col("doc_b").as("doc_a"),
         col("doc_a").as("doc_b")))
       .localCheckpoint(true)
+    releaseCheckpoint(pairs)
     // fixpoint short-circuit (r16, the zero-discovery precedent): the
     // peeling semi-joins only REMOVE edges, so an unchanged edge count
     // after a round means keep contained every remaining endpoint and
@@ -280,11 +290,13 @@ object GraphQueries {
     for (_ <- 1 to coreRounds if !converged) {
       val keep = edges.groupBy(col("doc_a")).agg(count(lit(1)).as("n"))
         .filter(col("n") >= coreK).select(col("doc_a"))
-      edges = edges
+      val next = edges
         .join(keep, Seq("doc_a"), "left_semi")
         .join(keep.select(col("doc_a").as("doc_b")), Seq("doc_b"),
           "left_semi")
         .localCheckpoint(true)
+      releaseCheckpoint(edges)
+      edges = next
       val m2 = edges.count()
       converged = m2 == m
       m = m2

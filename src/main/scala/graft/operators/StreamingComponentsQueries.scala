@@ -10,9 +10,9 @@ import org.apache.spark.sql.functions._
   * Two-part state, both roles proven separately and composed here:
   *
   *   1. Pair discovery is a BANDED signature-store accumulate-and-probe
-  *      (the [[StreamingDedupQueries]] discipline, applied to the word
-  *      grain) with MAP-SIDE verification. The store holds ONE row per
-  *      document: its sorted-distinct xxhash64 word set
+  *      (shared with [[StreamingDedupQueries]], which runs it at the
+  *      3-gram shingle grain) with MAP-SIDE verification. The store
+  *      holds ONE row per document: its sorted-distinct xxhash64 word set
   *      ([[DedupQueries.wordHashSets]]), the set size, and its 32
   *      MinHash(64) band hashes as an array. Each trigger signatures
   *      its docs once, appends them (batchId-keyed overwrite), then
@@ -70,20 +70,14 @@ import org.apache.spark.sql.functions._
   * [[graft.streaming.StreamingQueries.CarriedState]]'s. */
 object StreamingComponentsQueries {
 
-  /** (doc_id, source, wh, nw, bands): the per-doc signature-store row —
-    * word-hash set, its size, and the 32 MinHash(64) band hashes as an
-    * array (band = position), so the store keeps ONE row per doc. The
-    * signature is the native per-row [[graft.functions.MinhashBands]]
-    * loop: the whole relation is a narrow map over the batch — zero
-    * shuffles per trigger, vs the explode + 64-aggregate + reassembly
-    * join the batch arm's [[DedupQueries.bandRelation]] shape would
-    * cost here every trigger. */
+  /** (doc_id, source, wh, nw, bands): the per-doc signature-store row
+    * at the word grain — word-hash set, its size, and the 32 MinHash(64)
+    * band hashes as an array (band = position), so the store keeps ONE
+    * row per doc. The signature is the batch core's
+    * ([[DedupQueries.bandSignatures]]), a narrow map over the batch: zero
+    * shuffles per trigger. */
   private[operators] def signatureRows(batch: DataFrame): DataFrame =
-    DedupQueries.wordHashSets(batch)
-      .select(col("doc_id"), col("source"), col("wh"),
-        size(col("wh")).as("nw"),
-        graft.functions.ShingleOps.minhash_bands(col("wh"), 64, 32)
-          .as("bands"))
+    DedupQueries.bandSignatures(DedupQueries.wordHashSets(batch))
 
   /** The store/probe rows exploded to the (source, band, bh) bucket
     * grain, word set riding along for map-side verification. */

@@ -11,80 +11,67 @@ import org.apache.spark.sql.functions._
   * id-ranged, so arrival order and id order agree) shares an LSH band
   * bucket and passes exact shingle-Jaccard ≥ 0.7. Lives in
   * `graft.operators` (not `graft.streaming`) to share the
-  * package-private [[DedupQueries.shingleSets]]/[[DedupQueries.bandRelation]],
-  * which makes the incremental bucket values bit-identical to the batch
-  * pair query's.
+  * package-private signature store and probe of
+  * [[StreamingComponentsQueries]] at the 3-gram grain
+  * ([[DedupQueries.shingleSets]]): the signature
+  * ([[DedupQueries.bandSignatures]]), length-ratio prefilter and exact
+  * verification are the batch pair query's
+  * ([[DedupQueries.bandedPairsJ]]).
   *
   * Why this exists next to `dedup_minhash_lsh` (the batch pair query)
   * and `stream_dedup` (exact-key streaming dedup): at 100 TB a corpus
   * is not re-paired from scratch per ingest — signatures are computed
-  * once per NEW document and the probe join's shuffle carries only
-  * (batch bands × matching accumulated buckets), never the historical
-  * corpus. Total signature work across the run equals the batch query's
-  * single pass; the per-batch probe is the standard sub-quadratic
-  * bucket join with the build side pruned to bucket-mates.
+  * once per NEW document and the probe's broadcast carries only the
+  * batch's band rows, never the historical corpus. Total signature work
+  * across the run equals the batch query's single pass.
   *
-  * Determinism: batches staged as single files with pinned ascending
-  * mtimes ([[graft.streaming.StreamingQueries.stageBatches]]),
-  * `maxFilesPerTrigger=1`, `Trigger.AvailableNow` — deterministic
-  * replay; every value written to the stores is a pure function of the
-  * input, and the final read sorts by doc_id. The DuckDB oracle is the
-  * batch formulation: dup_of = min verified smaller-id neighbor over
-  * the exhaustive 3-gram pair graph (LSH-miss probability ≈ 6e-10 at
-  * J ≥ 0.7, the [[DedupQueries.dedupMinhashLsh]] argument).
+  * Determinism: the house replay harness
+  * ([[graft.streaming.StreamingQueries]] — staged single-file batches,
+  * `Trigger.AvailableNow`, batchId-keyed store subdirs with overwrite,
+  * so a replayed trigger is idempotent); every value written to the
+  * stores is a pure function of the input, and the final read sorts by
+  * doc_id. The DuckDB oracle is the batch formulation: dup_of = min
+  * verified smaller-id neighbor over the exhaustive 3-gram pair graph
+  * (LSH-miss probability ≈ 6e-10 at J ≥ 0.7, the
+  * [[DedupQueries.dedupMinhashLsh]] argument).
   */
 object StreamingDedupQueries {
 
   def streamMinhashDedup(s: SparkSession, dir: String): DataFrame = {
-    import graft.streaming.StreamingQueries.{pathTag, releaseCheckpoint,
-      runBatches, scratchDir, stageThirds}
+    import graft.streaming.StreamingQueries.{BatchStore, pathTag,
+      releaseCheckpoint, runBatchesWithId, scratchDir, stageThirds}
     val d = DedupQueries.docs(s, dir).select(col("doc_id"), col("text"))
     val staging = stageThirds(
       "graft_stream_mhdedup_stage_" + pathTag(dir), d, "doc_id")
 
-    // accumulator stores (bands / shingles / per-doc verdicts)
     val base = scratchDir("graft_stream_mhdedup", dir)
-    val bandsDir = s"$base/bands"
-    val shDir = s"$base/shingles"
-    val outDir = s"$base/result"
+    val sigStore = BatchStore(s"$base/sig")
+    val verdicts = BatchStore(s"$base/result")
 
-    runBatches(s, d.schema, staging) { batch =>
-      val ss = batch.sparkSession
-      // signature the NEW docs only, once; flatten lineage so the two
-      // consumers below (store append + probe) don't recompute the aggs
-      val sb = DedupQueries.shingleSets(batch).localCheckpoint(true)
-      val bb = DedupQueries.bandRelation(sb).localCheckpoint(true)
-      // append-first: the accumulated store then covers this batch too,
-      // so within-batch pairs (smaller id wins) fall out of the same probe
-      sb.write.mode("append").parquet(shDir)
-      bb.write.mode("append").parquet(bandsDir)
-      val accBands = ss.read.parquet(bandsDir)
-      val cand = accBands.as("x").join(bb.as("y"),
-          col("x.band") === col("y.band") && col("x.bh") === col("y.bh") &&
-            col("x.doc_id") < col("y.doc_id"))
-        .select(col("x.doc_id").as("doc_a"), col("y.doc_id").as("doc_b"))
-        .distinct()
-      val verified = cand
-        // array_compact restores containsNull=false after the parquet
-        // round-trip (the store never holds null elements; the native
-        // sorted_jaccard type-checks element nullability)
-        .join(ss.read.parquet(shDir)
-          .select(col("doc_id").as("doc_a"),
-            array_compact(col("sh")).as("sha")), "doc_a")
-        .join(sb.select(col("doc_id").as("doc_b"), col("sh").as("shb")),
-          "doc_b")
-        .filter(graft.functions.ShingleOps
-          .sorted_jaccard(col("sha"), col("shb")) >= 0.7)
+    runBatchesWithId(s, d.schema, staging) { (batch0, bid) =>
+      val ss = batch0.sparkSession
+      // WIDTH PIN (the stream_components precedent): the staged batch is
+      // one file and the signature is a narrow map
+      val batch = batch0.repartition(ss.sparkContext.defaultParallelism)
+      // signature the NEW docs once, in memory: the store write and the
+      // probe both read the checkpointed rows
+      val bsig = DedupQueries.bandSignatures(DedupQueries.shingleSets(batch))
+        .localCheckpoint(true)
+      sigStore.write(bsig, bid)
+      // append-first: the store covers this batch too, so within-batch
+      // pairs (smaller id wins) fall out of the same probe
+      val store = sigStore.prior(ss, bid).fold(bsig)(_.unionByName(bsig))
+      // a verified pair (u, v) has u < v, so v is the batch doc: earlier
+      // batches hold smaller ids
+      val dupOf = StreamingComponentsQueries.probePairs(store, bsig)
+        .groupBy(col("v")).agg(min(col("u")).as("dup_of"))
       // every batch doc gets a verdict row — shingle-less docs included
-      batch.select(col("doc_id"))
-        .join(verified.groupBy(col("doc_b"))
-            .agg(min(col("doc_a")).as("dup_of")),
-          col("doc_id") === col("doc_b"), "left_outer")
-        .select(col("doc_id"), col("dup_of"))
-        .write.mode("append").parquet(outDir)
-      Seq(sb, bb).foreach(releaseCheckpoint)
+      verdicts.write(batch.select(col("doc_id"))
+        .join(dupOf, col("doc_id") === col("v"), "left_outer")
+        .select(col("doc_id"), col("dup_of")), bid)
+      releaseCheckpoint(bsig)
     }
-    s.read.parquet(outDir)
+    verdicts.readAll(s)
       .select(col("doc_id"), col("dup_of"),
         col("dup_of").isNotNull.as("is_dup"))
       .orderBy(col("doc_id"))

@@ -344,13 +344,6 @@ object StressFixture {
       graft.operators.DedupQueries.dedupEmbComponentsCellsAt(spark, dir, 16))
     time("emb_cc_cells_160") (
       graft.operators.DedupQueries.dedupEmbComponentsCellsAt(spark, dir, 160))
-    // the simhash blockBits lever (see DedupQueries.simhashNear): 16-bit
-    // blocks ≈ the shipped width, 20-bit = the occupancy-holding setting
-    // for ~30× corpora
-    time("simhash_16bit") (
-      graft.operators.DedupQueries.simhashNear(spark, dir, 16))
-    time("simhash_20bit") (
-      graft.operators.DedupQueries.simhashNear(spark, dir, 20))
     // PageRank with the iteration engine fed by the BANDED pair relation
     // instead of the exact Jaccard derivation — isolates the iteration's
     // own slope from the edge-derivation term that dominates the

@@ -102,7 +102,11 @@ class BehaviorStatsSpec extends AnyFunSuite {
   }
 
   test("k_core fixpoint certificate and degree bound") {
-    val core = GraphQueries.kCore(spark, dir).persist()
+    val (core0, stray) = BoundedState.stray(spark)(
+      GraphQueries.kCore(spark, dir))
+    // the peeling rounds release every superseded edge checkpoint
+    assert(stray.isEmpty, s"k_core left unread persistent RDDs $stray")
+    val core = core0.persist()
     val tc = GraphQueries.triangleCount(spark, dir)
       .select(col("doc_id"), col("deg")).persist()
     try {

@@ -271,8 +271,11 @@ class SketchSemOpsSpec extends AnyFunSuite {
   }
 
   test("pagerank conserves probability mass on the near-dup graph") {
-    val full = GraphQueries.fullRanks(spark, dir)
-      .select("pr").collect().map(_.getDouble(0))
+    val (ranks, stray) = BoundedState.stray(spark)(
+      GraphQueries.fullRanks(spark, dir))
+    // the power iteration releases every superseded round's checkpoint
+    assert(stray.isEmpty, s"pagerank left unread persistent RDDs $stray")
+    val full = ranks.select("pr").collect().map(_.getDouble(0))
     assert(full.nonEmpty)
     // no dangling nodes (every node has degree >= 1), so the power
     // iteration preserves total mass exactly up to float error
