@@ -89,7 +89,9 @@ object WelchTTest {
     if (df.isNaN || df <= 0) return None
     val p =
       if (t.isInfinite) 0.0
-      else 2.0 * new TDistribution(df).cumulativeProbability(-math.abs(t))
+      // no generator: the CDF never draws, so none is seeded per contrast
+      else 2.0 * new TDistribution(null, df)
+        .cumulativeProbability(-math.abs(t))
     Some((t, df, p))
   }
 

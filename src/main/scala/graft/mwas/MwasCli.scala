@@ -1,9 +1,10 @@
 package graft.mwas
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{Observation, SparkSession}
 import org.apache.spark.sql.functions.{col, count, count_if, lit}
 
 import graft.sources.CsvIo
+import graft.streaming.StreamingQueries
 
 /** CLI entry point — the swap-in for `python mwas_general.py input.csv`
   * (reference main/mwas_general.py:703-793).
@@ -45,16 +46,22 @@ object MwasCli {
     val catalog = spark.read.parquet(catalogPath)
     val sets = MwasIntake.toSets(spark.read.parquet(metadataPath))
 
-    val out = Pipeline.run(input, catalog, sets, cfg).persist()
-    Pipeline.writePerBioproject(out, s"$outDir/per_bioproject")
-    if (!flags.contains("--no-combined")) {
-      Pipeline.writeCombined(out, s"$outDir/combined")
-    }
-    // both counts from one aggregate over the persisted result
-    val counts = out.agg(count(lit(1)),
-      count_if(col("status").contains("significant"))).head()
-    val (n, sig) = (counts.getLong(0), counts.getLong(1))
-    out.unpersist(blocking = false) // all consumers (writes + counts) done
+    // the result is materialized ONCE, as rows, for both writes. Durability:
+    // a local checkpoint lives in the executors' block managers (in local
+    // mode, the driver's), so losing one means rerunning the job from its
+    // inputs, which it never writes to
+    val out = Pipeline.run(input, catalog, sets, cfg).localCheckpoint()
+    val counts = Observation("mwas_counts") // observed on the first write
+    try {
+      Pipeline.writePerBioproject(out.observe(counts, count(lit(1)).as("n"),
+        count_if(col("status").contains("significant")).as("sig")),
+        s"$outDir/per_bioproject")
+      if (!flags.contains("--no-combined")) {
+        Pipeline.writeCombined(out, s"$outDir/combined")
+      }
+    } finally StreamingQueries.releaseCheckpoint(out)
+    val (n, sig) = (counts.get("n").asInstanceOf[Long],
+      counts.get("sig").asInstanceOf[Long])
     println(s"[mwas] $n tests written to $outDir ($sig significant)")
     (n, sig)
   }

@@ -23,9 +23,9 @@ case class Contrast(group: String, metadata_field: String,
     test_statistic: Option[Double], p_value: Option[Double],
     true_biosamples: String, false_biosamples: String)
 
-/** Readout dimensions derived purely from (catalog, sets), both one row per
+/** The readout's dimension: each bioproject's set list, one row per
   * bioproject — see [[Pipeline.dims]]. */
-case class PipelineDims(bpUniverse: DataFrame, bpSets: DataFrame)
+case class PipelineDims(bpSets: DataFrame)
 
 /** Pipeline configuration (reference globals, main/mwas_general.py:70-94). */
 case class MwasConfig(
@@ -67,7 +67,7 @@ case class MwasConfig(
   *     mean_side  = sum_side / n_side
   *     var_pop    = sumsq_side / n_side - mean_side²
   *
-  * so the readout shuffles O(observed rows + |sets|), never
+  * so the job shuffles O(catalog runs + observed rows + |sets|), never
   * O(biosamples × groups × sets), and its memory bound is one
   * bioproject's observed rows plus its sets per task. Bioprojects are
   * independent, so that bound — not the input size — is what a task
@@ -77,6 +77,11 @@ case class MwasConfig(
   * stages, generated code and its JIT) is what dominates at interactive
   * sizes, so the pass emits finished output rows and the plan ends in
   * `inline`, with no generated assembly stage to compile per job.
+  *
+  * The state is the universe too: catalog runs absent from the input stay
+  * in it as `group = null` rows, and the catalog is read once. The joined
+  * rows cross ONE exchange, the width pin in [[biosampleState]], and the
+  * state aggregation and the readout both run inside it.
   *
   * Permutation tests share one Monte-Carlo stream per (bioproject, group)
   * — every set of a group permutes the same zero-padded pool — and each
@@ -115,8 +120,8 @@ object Pipeline {
       cfg: MwasConfig = MwasConfig()): DataFrame = {
     // ---- stage 1: normalize (J1 outer join + implicit-zero fill, F1 rpm) --
     // outer join: catalog runs absent from input become quantifier=0 rows
-    // with null group (they densify the biosample universe); input runs
-    // absent from the catalog are dropped (no bioproject to attribute to).
+    // with null group (they carry the biosample universe to the readout);
+    // input runs absent from the catalog are dropped (no bioproject).
     val joined = catalog
       .join(input, Seq("run"), "left_outer")
       .na.fill(Map("quantifier" -> 0.0))
@@ -129,8 +134,7 @@ object Pipeline {
     // n_provided is Σ n_runs (the reference counts PROVIDED run-level
     // rows — `group_subset['quantifier'].count()` after the outer-merge
     // fillna — NOT nonzero biosample means; r9 review finding).
-    normalized
-      .filter(col("group").isNotNull)
+    byBioproject(normalized)
       .groupBy(col("bio_project"), col("group"), col("bio_sample"))
       .agg(sum(col("rpm")).as("rpm_sum"), count(lit(1)).as("n_runs"))
   }
@@ -138,31 +142,32 @@ object Pipeline {
   /** Merge two biosample-state slices built from DISJOINT input rows:
     * sums add, counts add. (bio_project, group, bio_sample) grain. */
   def mergeBiosampleState(a: DataFrame, b: DataFrame): DataFrame =
-    a.unionByName(b)
+    byBioproject(a.unionByName(b))
       .groupBy(col("bio_project"), col("group"), col("bio_sample"))
       .agg(sum(col("rpm_sum")).as("rpm_sum"),
         sum(col("n_runs")).as("n_runs"))
 
-  /** The readout's slowly-changing dimensions — pure functions of
-    * (catalog, sets). An incremental consumer builds them ONCE per
-    * stream (and persists them) instead of re-deriving the catalog
-    * collect_set and the per-bioproject set lists every trigger. */
+  /** WIDTH PIN (r16 audit): by bioproject at the session's shuffle width
+    * when planned, so a caller's scoped width (a stream trigger's) holds.
+    * The readout's kernel input is tiny next to its CPU cost, and AQE's
+    * byte coalescing once made it a 15.9 s single-task straggler
+    * (NOTES_r16); a user repartition is never coalesced, and
+    * `EnsureRequirements` drops one over input already pinned alike. */
+  private def byBioproject(df: DataFrame): DataFrame =
+    df.repartition(
+      df.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt,
+      col("bio_project"))
+
+  /** The readout's slowly-changing dimension, the per-bioproject set lists
+    * (the universe rides on the state, so `catalog` is not read). An
+    * incremental consumer builds it ONCE per stream (and persists it)
+    * instead of re-deriving it every trigger. */
   def dims(catalog: DataFrame, sets: DataFrame): PipelineDims =
-    PipelineDims(
-      // biosample universe per bioproject (implicit zeros + listings).
-      // Its size is taken at the consumer: a projection here would be a
-      // generated-code stage whose AQE creation order races the state
-      // aggregation's, and the stage ids that order hands out are part of
-      // the generated source, so a warm job would miss the codegen cache
-      bpUniverse = catalog
-        .groupBy(col("bio_project"))
-        .agg(sort_array(collect_set(col("bio_sample"))).as("all_biosamples")),
-      // the bioproject's sets, one list per bioproject
-      bpSets = sets
-        .groupBy(col("bioproject").as("bio_project"))
-        .agg(collect_list(struct(col("attributes"), col("values"),
-          col("members"), col("n_stored").cast("long").as("n_stored"),
-          col("include"))).as("sets")))
+    PipelineDims(sets
+      .groupBy(col("bioproject").as("bio_project"))
+      .agg(collect_list(struct(col("attributes"), col("values"),
+        col("members"), col("n_stored").cast("long").as("n_stored"),
+        col("include"))).as("sets")))
 
   /** One incremental trigger step of the registry's `stream_mwas`.
     * Merges the batch's biosample-grain delta into `state`, then produces
@@ -172,6 +177,9 @@ object Pipeline {
     * unused: NOTES_r14, NOTES_r15.)
     * Reference analogue: the block loop re-running every bioproject per
     * chunk (main/mwas_general.py:601-614).
+    *
+    * The first trigger's state holds the catalog's universe rows; a later
+    * delta carries only its group rows (the filter makes the join inner).
     *
     * The returned state is an eager localCheckpoint: it is long-lived
     * across triggers, so the lineage must be cut (the BPE/PCA per-round
@@ -183,20 +191,26 @@ object Pipeline {
       sets: DataFrame, cfg: MwasConfig, pdims: PipelineDims,
       state: Option[DataFrame]): (DataFrame, DataFrame) = {
     val delta = biosampleState(batch, catalog, cfg)
-    val next = state.fold(delta)(mergeBiosampleState(_, delta))
-      .localCheckpoint()
+    val merged = state.fold(delta)(
+      mergeBiosampleState(_, delta.filter(col("group").isNotNull)))
+    // a checkpoint keeps the partitioning its plan reports, and an adaptive
+    // plan reports none: from a static plan, the state keeps its pin, and
+    // the next merge and the readout plan no exchange of it
+    val (conf, aqe) = (merged.sparkSession.conf, "spark.sql.adaptive.enabled")
+    val prev = conf.get(aqe)
+    conf.set(aqe, "false")
+    val next = try merged.localCheckpoint() finally conf.set(aqe, prev)
     (next, runFromBiosampleState(next, catalog, sets, cfg, Some(pdims)))
   }
 
   /** Stages 2b–5: the readout from the mergeable biosample state down to
-    * the reference's 18-column output relation. `precomputed` lets an
-    * incremental caller reuse persisted [[dims]] across triggers (the
-    * `sets` argument is then unused). */
+    * the reference's 18-column output relation (`catalog` is not read: the
+    * state carries the universe). `precomputed` lets an incremental caller
+    * reuse persisted [[dims]] across triggers (`sets` is then unused). */
   def runFromBiosampleState(state: DataFrame, catalog: DataFrame,
       sets: DataFrame, cfg: MwasConfig = MwasConfig(),
       precomputed: Option[PipelineDims] = None): DataFrame = {
-    val PipelineDims(bpUniverse, bpSets) =
-      precomputed.getOrElse(dims(catalog, sets))
+    val PipelineDims(bpSets) = precomputed.getOrElse(dims(catalog, sets))
 
     // ---- stages 2b–5: bioproject-local contrasts, tested and assembled ----
     // Every readout key carries bio_project and bioprojects are
@@ -211,27 +225,19 @@ object Pipeline {
     // being tested, the permutation kernel's pool, work and swap arrays
     // (at most the catalog universe each, see MwasConfig.permMaxPooled).
     //
-    // WIDTH PIN (r16 audit): the explicit repartition by bioproject is
-    // load-bearing. The resampling kernel runs in the stage that reads it,
-    // and that stage's input is tiny next to its CPU cost; AQE coalesces
-    // post-shuffle partitions by BYTES, and it once collapsed the kernel
-    // to a 15.9 s single-task straggler at the 10× fixture while the 30×
-    // point, with more bytes, ran faster (NOTES_r16). A user repartition is
-    // never coalesced, and it adds no shuffle: the per-bioproject
-    // aggregate's exchange is this one. Its width is the session's shuffle
-    // width when the readout is planned, so a caller's scoped width (a
-    // stream trigger's) holds here too.
-    val obs = state
-      .repartition(
-        state.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt,
-        col("bio_project"))
-      .select(col("bio_project"), struct(col("group"), col("bio_sample"),
-        (col("rpm_sum") / col("n_runs")).as("rpm"), col("n_runs")).as("o"))
+    // The observed rows (non-null groups) and the universe (every state
+    // row's biosample) come from one aggregate; the pin is a no-op on a
+    // state already pinned at this width. A bioproject the input never
+    // touched has no observed rows and yields no contrasts.
+    val obs = byBioproject(state)
       .groupBy(col("bio_project"))
-      .agg(collect_list(col("o")).as("obs"))
+      .agg(collect_list(when(col("group").isNotNull, struct(col("group"),
+          col("bio_sample"), (col("rpm_sum") / col("n_runs")).as("rpm"),
+          col("n_runs")))).as("obs"),
+        sort_array(collect_set(col("bio_sample"))).as("all_biosamples"))
+      .filter(size(col("obs")) > 0)
     obs
       .join(bpSets, Seq("bio_project"))
-      .join(bpUniverse, Seq("bio_project"))
       // the reference's 18 columns (main/mwas_general.py:92-94)
       .select(col("bio_project").as("bioproject"),
         inline(contrastsUdf(cfg)(col("obs"), col("sets"),

@@ -51,9 +51,6 @@ object DedupQueries {
       .withColumn("nrm",
         sqrt(aggregate(col("v"), lit(0.0), (acc, x) => acc + x * x)))
 
-  private def dot(a: Column, b: Column): Column =
-    aggregate(zip_with(a, b, (x, y) => x * y), lit(0.0), (acc, x) => acc + x)
-
   /** Per-pair dot product: the native codegen'd expression (zero per-call
     * allocation) — see [[graft.functions.DotProduct]] for the measured
     * HOF/UDF/native comparison. Bit-identical accumulation order across
@@ -1855,7 +1852,6 @@ object DedupQueries {
     * exact-dedup survivor docs (doc_id, source, text). */
   private[operators] def corpusPipelineE2e(s: SparkSession, dir: String,
       edges: DataFrame => DataFrame): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val d = docs(s, dir).select(col("doc_id"), col("source"), col("text"))
     val s1 = d.join(TextQueries.qualityScore(s, dir), Seq("doc_id"))
       .filter(col("quality") >= 0.35)

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.core.Tables
-import graft.functions.StatFunctions.{log2FoldChange, rpm}
+import graft.functions.StatFunctions.log2FoldChange
 import graft.functions.WelchTTest.welch_t
 import graft.stats.{Obs, PermutationTest}
 

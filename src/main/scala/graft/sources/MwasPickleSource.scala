@@ -3,8 +3,6 @@ package graft.sources
 import java.util
 import java.util.concurrent.atomic.{AtomicLong, AtomicReference}
 
-import scala.jdk.CollectionConverters._
-
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow

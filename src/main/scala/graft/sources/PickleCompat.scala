@@ -85,7 +85,6 @@ object PickleCompat {
     private def u2: Int = u1 | (u1 << 8)
     private def i4: Int = { val v = ByteBuffer.wrap(bytes, pos, 4)
       .order(ByteOrder.LITTLE_ENDIAN).getInt; pos += 4; v }
-    private def u4: Long = i4.toLong & 0xffffffffL
     private def u8: Long = { val v = ByteBuffer.wrap(bytes, pos, 8)
       .order(ByteOrder.LITTLE_ENDIAN).getLong; pos += 8; v }
     private def take(n: Int): Array[Byte] = {

@@ -1,6 +1,10 @@
 package graft.mwas
 
+import java.net.{HttpURLConnection, URI}
+import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths}
+
+import scala.jdk.CollectionConverters._
 
 import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.SparkSession
@@ -54,8 +58,14 @@ trait CodegenBudget extends AnyFunSuite {
     * enumeration cutoff) and a 6-member (Monte-Carlo) set per bioproject,
     * so all three routes run. */
   protected def defaultFlagJob(dir: String): (Long, Long) = {
-    import spark.implicits._
     writeInputs(dir)
+    writeSets(dir)
+    coldWarm(dir, s"$dir/sets")
+  }
+
+  /** The pre-condensed sets of [[defaultFlagJob]] under `dir`. */
+  protected def writeSets(dir: String): Unit = {
+    import spark.implicits._
     val sets = for (bp <- 1 to 2; (n, inc) <- Seq((2, true), (5, false),
         (6, true)))
       yield (s"bp$bp", "factor", s"v$n", (1 to n).map(i => s"P$bp-BS$i"),
@@ -63,7 +73,6 @@ trait CodegenBudget extends AnyFunSuite {
     sets.toDF("bioproject", "attributes", "values", "members", "n_stored",
       "include", "n_biosamples")
       .write.mode("overwrite").parquet(s"$dir/sets")
-    coldWarm(dir, s"$dir/sets")
   }
 
   /** Janino compiles of a cold and then a warm `MwasCli.run` over
@@ -133,5 +142,47 @@ class CodegenBudgetLongFormSpec extends CodegenBudget {
     val (cold, warm) = coldWarm(dir, s"$dir/metadata", "--only-t-test")
     assert(cold <= 70, s"cold job compiled $cold classes")
     assert(warm <= 5, s"warm job compiled $warm classes")
+  }
+}
+
+/** The server's warm request over the same inputs: a request is a job of
+  * its own, so a standing server that recompiles per request pays the
+  * compiler on every call. */
+class CodegenBudgetServerSpec extends CodegenBudget {
+
+  test("a warm MwasServer request compiles almost nothing") {
+    val dir = graft.core.TempDirs.create("graft_codegen_server")
+    writeInputs(dir)
+    writeSets(dir)
+    // the input CSV as the request body: a JSON array of row objects
+    val body = Files.readAllLines(Paths.get(s"$dir/input.csv")).asScala
+      .drop(1).map { line =>
+        val Array(run, group, q) = line.split(",")
+        s"""{"run":"$run","group":"$group","quantifier":$q}"""
+      }.mkString("[", ",", "]")
+    val server = MwasServer.start(spark, spark.read.parquet(s"$dir/catalog"),
+      MwasIntake.toSets(spark.read.parquet(s"$dir/sets")), port = 0)
+    try {
+      val url = URI.create(
+        s"http://127.0.0.1:${server.getAddress.getPort}/run_mwas").toURL
+      def compiles(): (Long, String) = {
+        val before = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+        val conn = url.openConnection().asInstanceOf[HttpURLConnection]
+        conn.setRequestMethod("POST")
+        conn.setDoOutput(true)
+        conn.getOutputStream.write(body.getBytes(StandardCharsets.UTF_8))
+        assert(conn.getResponseCode === 200)
+        val reply = new String(conn.getInputStream.readAllBytes(),
+          StandardCharsets.UTF_8)
+        // the row and significance counts; the rows' order is free
+        (CodegenMetrics.METRIC_COMPILATION_TIME.getCount - before,
+          reply.take(reply.indexOf("\"results\"")))
+      }
+      val (warmup, first) = compiles()
+      val (warm, second) = compiles()
+      info(s"$warmup classes compiled by the warm-up request, $warm warm")
+      assert(first.contains("\"rows\":12,") && second === first)
+      assert(warm <= 5, s"warm request compiled $warm classes")
+    } finally server.stop(0)
   }
 }

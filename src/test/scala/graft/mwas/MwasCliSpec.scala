@@ -56,4 +56,45 @@ class MwasCliSpec extends AnyFunSuite {
     assert(per.select(col("bioproject")).distinct().as[String]
       .collect().toSeq === Seq("bp1"))
   }
+
+  test("the returned (tests, significant) equal a recount of the written " +
+      "per-bioproject tree, with and without --no-combined") {
+    import spark.implicits._
+    val dir = graft.core.TempDirs.create("graft_cli_counts")
+    // three bioprojects of 12 biosamples (bp3 has no input rows), two
+    // groups; a Welch, an exact and a complement set per bioproject
+    val catalog = for (bp <- 1 to 3; i <- 1 to 12)
+      yield (s"P$bp-R$i", s"P$bp-BS$i", s"bp$bp", 1000000.0)
+    catalog.toDF("run", "bio_sample", "bio_project", "spots")
+      .write.mode("overwrite").parquet(s"$dir/catalog")
+    val rows = catalog.filter(_._3 != "bp3").flatMap { case (run, _, _, _) =>
+      val i = run.split("R")(1).toInt
+      Seq(s"$run,g1,${if (i <= 3) 100 + i else i}", s"$run,g2,${i % 4}")
+    }
+    Files.writeString(java.nio.file.Paths.get(s"$dir/input.csv"),
+      ("run,group,quantifier" +: rows).mkString("\n"))
+    val sets = for (bp <- 1 to 3; (n, inc) <- Seq((2, true), (3, true),
+        (5, false)))
+      yield (s"bp$bp", "factor", s"v$n", (1 to n).map(i => s"P$bp-BS$i"),
+        n, inc, 12)
+    sets.toDF("bioproject", "attributes", "values", "members", "n_stored",
+      "include", "n_biosamples")
+      .write.mode("overwrite").parquet(s"$dir/sets")
+
+    for (flags <- Seq(Seq("--p-threshold=0.05"),
+        Seq("--p-threshold=0.05", "--no-combined"))) {
+      val out = s"$dir/out${flags.size}"
+      val (n, sig) = MwasCli.run(spark, Array(s"$dir/input.csv",
+        s"$dir/catalog", s"$dir/sets", out) ++ flags)
+      val per = spark.read.option("header", "true")
+        .csv(s"$out/per_bioproject")
+      val statuses = per.select(col("status")).as[String].collect()
+      assert(n === statuses.length.toLong, flags)
+      assert(sig === statuses.count(_.contains("significant")).toLong, flags)
+      // both bioprojects with input rows test both groups on every set
+      assert(n === 12L && sig > 0L && sig < n, flags)
+      assert(new java.io.File(s"$out/combined").exists ===
+        !flags.contains("--no-combined"), flags)
+    }
+  }
 }

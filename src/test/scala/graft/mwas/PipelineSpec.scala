@@ -2,8 +2,13 @@ package graft.mwas
 
 
 import org.apache.spark.sql.{Row, SparkSession}
-import org.apache.spark.sql.catalyst.expressions.{ArrayExcept, Log2,
-  RegExpReplace}
+import org.apache.spark.sql.catalyst.expressions.{ArrayExcept,
+  AttributeReference, Expression, Log2, RegExpReplace}
+import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.exchange.{Exchange,
+  REPARTITION_BY_NUM, ReusedExchangeExec, ShuffleExchangeExec}
+import org.apache.spark.sql.execution.joins.BaseJoinExec
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -261,6 +266,35 @@ class PipelineSpec extends AnyFunSuite {
       sets, cfg)))
   }
 
+  test("a trigger's state keeps its bioproject pin across the checkpoint: " +
+      "the next trigger's readout plans no exchange of it") {
+    import spark.implicits._
+    val catalog = (1 to 8)
+      .map(i => (s"R$i", s"BS$i", s"bp${i % 2}", 1000000.0))
+      .toDF("run", "bio_sample", "bio_project", "spots")
+    val sets = Seq(0, 1).map(k => (s"bp$k", "tissue", "liver",
+        Seq(1, 3).map(i => s"BS${i + 1 - k}"), 2, true, 4, k.toLong))
+      .toDF("bioproject", "attributes", "values", "members", "n_stored",
+        "include", "n_biosamples", "set_id")
+    val Seq(first, second) = Seq(1 to 4, 5 to 8).map(_.map(i =>
+      (s"R$i", "g1", i.toDouble)).toDF("run", "group", "quantifier"))
+    val cfg = MwasConfig(onlyTTest = true)
+    val pdims = Pipeline.dims(catalog, sets)
+    val (s1, _) = Pipeline.incrementalTrigger(first, catalog, sets, cfg,
+      pdims, None)
+    val (s2, full) = Pipeline.incrementalTrigger(second, catalog, sets, cfg,
+      pdims, Some(s1))
+    s2.queryExecution.executedPlan.outputPartitioning match {
+      case h: HashPartitioning =>
+        assert(h.expressions.collect { case a: AttributeReference => a.name }
+          === Seq("bio_project"))
+      case other => fail(s"checkpointed state partitioned by $other")
+    }
+    val plan = full.queryExecution.executedPlan.toString
+    assert(!plan.contains("REPARTITION_BY_NUM"), plan)
+    assert(full.count() === 2L) // g1 in both bioprojects
+  }
+
   test("catalog-input join and state-aggregation exchange are each " +
       "planned ONCE") {
     import spark.implicits._
@@ -277,25 +311,49 @@ class PipelineSpec extends AnyFunSuite {
     // makes it assertable
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     try {
-      val plan = Pipeline.run(input, catalog, sets, MwasConfig())
-        .queryExecution.executedPlan.toString
-      // the state aggregation and the catalog⋈input join feed the
-      // per-bioproject pass once each; a second reader (the memo dedup's
-      // join-back once was one) must share them, not re-derive them
-      // (ReusedExchange lines quote the target exchange's description,
-      // hence the line-wise filter)
-      val lines = plan.linesIterator.filterNot(_.contains("ReusedExchange"))
-        .toSeq
-      val stateExchange = lines.filter(l =>
-        l.contains("Exchange hashpartitioning(bio_project#") &&
-          l.contains("group#") && l.contains("bio_sample#"))
-      val runJoin = lines.filter(l =>
-        l.contains("Join") && "\\[run#\\d+\\], \\[run#\\d+\\]".r
-          .findFirstIn(l).isDefined)
-      assert(stateExchange.size === 1,
-        s"state exchange planned ${stateExchange.size} times:\n$plan")
-      assert(runJoin.size === 1,
-        s"catalog⋈input join planned ${runJoin.size} times:\n$plan")
+      val executed = Pipeline.run(input, catalog, sets, MwasConfig())
+        .queryExecution.executedPlan
+      val plan = executed.toString
+      def names(es: Seq[Expression]) = es.collect {
+        case a: AttributeReference => a.name
+      }
+      // the exchanges whose input is catalog⋈input rows: a join on `run`
+      // below them, with no other exchange between (a broadcast build
+      // side is an exchange of one join input, not of the joined rows)
+      def joinedBelow(p: SparkPlan): Boolean = p match {
+        case _: Exchange => false
+        case j: BaseJoinExec if names(j.leftKeys) == Seq("run") => true
+        case _ => p.children.exists(joinedBelow)
+      }
+      val runJoins = executed.collect {
+        case j: BaseJoinExec if names(j.leftKeys) == Seq("run") => j
+      }
+      assert(runJoins.size === 1,
+        s"catalog⋈input join planned ${runJoins.size} times:\n$plan")
+      val exchanges = executed.collect { case e: ShuffleExchangeExec => e }
+      val carriers = exchanges.filter(e => joinedBelow(e.child))
+      // the joined rows cross ONE exchange, the width pin by bioproject;
+      // the state aggregation and the readout both run inside it
+      assert(carriers.size === 1,
+        s"catalog⋈input rows cross ${carriers.size} exchanges:\n$plan")
+      assert(carriers.head.shuffleOrigin === REPARTITION_BY_NUM, plan)
+      carriers.head.outputPartitioning match {
+        case h: HashPartitioning =>
+          assert(names(h.expressions) === Seq("bio_project"), plan)
+        case other => fail(s"pinned exchange partitions by $other:\n$plan")
+      }
+      val stateGrain = exchanges.filter(_.outputPartitioning match {
+        case h: HashPartitioning =>
+          names(h.expressions) == Seq("bio_project", "group", "bio_sample")
+        case _ => false
+      })
+      assert(stateGrain.isEmpty, s"state-grain exchange planned:\n$plan")
+      // the universe rides on the state: the catalog is scanned once
+      val catalogScans = executed.collectLeaves().filter(l =>
+        !l.isInstanceOf[ReusedExchangeExec] &&
+          l.output.exists(_.name == "bio_sample"))
+      assert(catalogScans.size === 1,
+        s"catalog scanned ${catalogScans.size} times:\n$plan")
     } finally spark.conf.set("spark.sql.adaptive.enabled", "true")
   }
 

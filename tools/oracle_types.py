@@ -5,7 +5,8 @@ Usage: python3 tools/oracle_types.py <sfDir> <oracle_sql.json> <out.tsv>
 
 For every oracle SQL, BIND it in DuckDB (no execution) against views over
 the sfDir parquet tables and record each result column's type KIND plus a
-sha256 of the SQL text. RegistrySmokeSpec pins the Spark result schema
+sha256 of the SQL text (with the checkout's mirror path tokenized, see
+MIRROR_DIR). RegistrySmokeSpec pins the Spark result schema
 against this file: a query whose oracle types drift int-vs-float fails
 `sbt test`, and an edited oracle SQL fails the sha check until this tool
 regenerates the golden — at which point the HUGEINT audit below re-runs
@@ -18,6 +19,7 @@ oracle to emit one (CAST ... AS BIGINT at the oracle's final SELECT).
 """
 import hashlib
 import json
+import os
 import sys
 
 import duckdb
@@ -28,6 +30,14 @@ TABLES = ["region", "nation", "customer", "supplier", "part",
 INT_KINDS = {"TINYINT", "SMALLINT", "INTEGER", "BIGINT",
              "UTINYINT", "USMALLINT", "UINTEGER", "UBIGINT"}
 FLOAT_KINDS = {"FLOAT", "DOUBLE", "REAL"}
+
+# The pickle oracles read the committed parquet mirror by absolute path
+# (MwasPipelineQueries.mirrorDir). The hash is taken with that path replaced
+# by a fixed token, so the golden holds in any checkout.
+MIRROR_DIR = os.path.join(
+    os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+    "src", "test", "resources", "mwaspkl_mirror")
+MIRROR_TOKEN = "<mwaspkl_mirror>"
 
 
 def kind(t):
@@ -62,7 +72,8 @@ def main(sf_dir, oracle_json, out_tsv):
             return 1
         cols = ",".join(f"{c}:{kind(t)}"
                         for c, t in zip(rel.columns, rel.types))
-        sha = hashlib.sha256(oracle[name].encode("utf-8")).hexdigest()
+        sha = hashlib.sha256(oracle[name].replace(MIRROR_DIR, MIRROR_TOKEN)
+                             .encode("utf-8")).hexdigest()
         lines.append(f"{name}\t{sha}\t{cols}")
     with open(out_tsv, "w") as f:
         f.write("\n".join(lines) + "\n")
